@@ -15,16 +15,26 @@ real snapshot commits and DROP TABLE removes the table — and SELECT
 reads them through ``cow.`<path>``` table references with optional
 ``VERSION AS OF`` / ``TIMESTAMP AS OF`` time travel, so every
 whitelisted verb executes against snapshot tables.
-Statement splitting is QUOTE- AND PAREN-AWARE
-throughout: a ``WHERE`` or comma inside a string literal never splits
-(the naive first-``WHERE`` regex mis-parsed
-``UPDATE t SET note = 'x WHERE y' WHERE k = 1``).
+
+Spark's own SQL parser reads the standard DML verbs — DELETE, UPDATE,
+MERGE and INSERT (with INSERT OVERWRITE [PARTITION] and REPLACE WHERE)
+— once per statement, into the one record (``_dml_statement``) that
+both execution and EXPLAIN dispatch on; quoting, escaping and a
+``WHERE`` inside a string literal are the parser's business. The
+engine-only verbs Spark's grammar does not know (SHALLOW CLONE,
+CREATE/DROP TAG, COPY INTO, OPTIMIZE ... WHERE, APPLY CHANGES, the
+ALTER/CREATE clause forms, the join-form ``DELETE ... USING`` /
+``UPDATE ... FROM`` detection) keep quote/paren-aware regexes, whose
+targets (``_TARGET``) never match an unbalanced backtick; a path
+target must be absolute or a scheme URI (``_unquote``).
 """
 
 from __future__ import annotations
 
+import json
 import re
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,112 +66,107 @@ def filter_sql_commands(commands: list[str]) -> list[str]:
     return out
 
 
+# the target of every engine-verb regex: a backticked path (optionally
+# ``cow.``-prefixed) or a bare identifier that holds no backtick, so an
+# unbalanced backtick never matches and the statement is refused
+_TARGET = r"((?:cow\.)?`[^`]+`|[^\s`]+)"
+
 # heads only bind the verb + target; the clause tail is split by the
 # quote/paren-aware scanner below, never by regex
 _ALTER_RENAME_TABLE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(\S+)\s+RENAME\s+TO\s+(\S+)\s*$", re.IGNORECASE
 )
 _ALTER_ADD_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ADD\s+COLUMNS?\s+(.+)$",
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ADD\s+COLUMNS?\s+(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_DROP_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+DROP\s+COLUMNS?\s*\(?\s*(\w+)\s*\)?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+DROP\s+COLUMNS?\s*\(?\s*(\w+)\s*\)?\s*$",
     re.IGNORECASE,
 )
 _ALTER_RENAME_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+RENAME\s+COLUMN\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+RENAME\s+COLUMN\s+"
     r"`?(\w+)`?\s+TO\s+`?(\w+)`?\s*$",
     re.IGNORECASE,
 )
 _ALTER_WIDEN_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ALTER\s+COLUMN\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ALTER\s+COLUMN\s+"
     r"`?(\w+)`?\s+(?:SET\s+DATA\s+)?TYPE\s+([\w()<>,\s]+?)\s*$",
     re.IGNORECASE,
 )
 _ALTER_SET_TP_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+SET\s+TBLPROPERTIES\s*\(([^()]*)\)\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+SET\s+TBLPROPERTIES\s*\(([^()]*)\)\s*$",
     re.IGNORECASE,
 )
 _ALTER_ADD_PF_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ADD\s+PARTITION\s+FIELD\s+`?(\w+)`?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ADD\s+PARTITION\s+FIELD\s+`?(\w+)`?\s*$",
     re.IGNORECASE,
 )
 _ALTER_DROP_PF_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+DROP\s+PARTITION\s+FIELD\s+`?(\w+)`?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+DROP\s+PARTITION\s+FIELD\s+`?(\w+)`?\s*$",
     re.IGNORECASE,
 )
 _CLONE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+SHALLOW\s+CLONE\s+"
-    r"((?:cow\.)?`[^`]+`|\S+)"
+    rf"^\s*CREATE\s+TABLE\s+{_TARGET}\s+SHALLOW\s+CLONE\s+"
+    rf"{_TARGET}"
     r"(?:\s+VERSION\s+AS\s+OF\s+(?:(\d+)|'([^']+)'))?\s*$",
     re.IGNORECASE,
 )
 _ALTER_SET_NOTNULL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ALTER\s+COLUMN\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ALTER\s+COLUMN\s+"
     r"`?(\w+)`?\s+SET\s+NOT\s+NULL\s*$",
     re.IGNORECASE,
 )
 _ALTER_DROP_NOTNULL_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ALTER\s+COLUMN\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ALTER\s+COLUMN\s+"
     r"`?(\w+)`?\s+DROP\s+NOT\s+NULL\s*$",
     re.IGNORECASE,
 )
 _ALTER_SET_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ALTER\s+COLUMN\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ALTER\s+COLUMN\s+"
     r"`?(\w+)`?\s+SET\s+DEFAULT\s+(.+?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_DROP_DEFAULT_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ALTER\s+COLUMN\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ALTER\s+COLUMN\s+"
     r"`?(\w+)`?\s+DROP\s+DEFAULT\s*$",
     re.IGNORECASE,
 )
 _ALTER_CREATE_TAG_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+CREATE\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+CREATE\s+"
     r"(OR\s+REPLACE\s+)?TAG\s+`?([A-Za-z_][A-Za-z0-9_.\-]*)`?"
     r"(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*$",
     re.IGNORECASE,
 )
 _ALTER_DROP_TAG_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+DROP\s+TAG\s+"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+DROP\s+TAG\s+"
     r"`?([A-Za-z_][A-Za-z0-9_.\-]*)`?\s*$",
     re.IGNORECASE,
 )
 _SHOW_TAGS_RE = re.compile(
-    r"^\s*SHOW\s+TAGS\s+(?:ON\s+|FOR\s+)?((?:cow\.)?`[^`]+`|\S+)\s*$",
+    rf"^\s*SHOW\s+TAGS\s+(?:ON\s+|FOR\s+)?{_TARGET}\s*$",
     re.IGNORECASE,
 )
 _ALTER_ADD_CK_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+ADD\s+CONSTRAINT\s+(\w+)"
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+ADD\s+CONSTRAINT\s+(\w+)"
     r"\s+CHECK\s*\((.+)\)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _ALTER_DROP_CK_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+DROP\s+CONSTRAINT\s+(\w+)\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_TARGET}\s+DROP\s+CONSTRAINT\s+(\w+)\s*$",
     re.IGNORECASE,
 )
+# join-form DML heads (``DELETE ... USING`` / ``UPDATE ... FROM``),
+# the one DML shape Spark's grammar refuses; every other DML statement
+# is read by Spark's parser (``_parse_dml``)
 _DELETE_HEAD_RE = re.compile(
-    r"^\s*DELETE\s+FROM\s+((?:cow\.)?`[^`]+`|\S+)\s*(.*)$", re.IGNORECASE | re.DOTALL
+    rf"^\s*DELETE\s+FROM\s+{_TARGET}\s*(.*)$", re.IGNORECASE | re.DOTALL
 )
 _UPDATE_HEAD_RE = re.compile(
-    r"^\s*UPDATE\s+((?:cow\.)?`[^`]+`|\S+)\s+SET\s+(.+)$", re.IGNORECASE | re.DOTALL
-)
-_INSERT_HEAD_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+((?:cow\.)?`[^`]+`|\S+)\s*(\([^()]*\))?\s*(.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_OVERWRITE_RE = re.compile(
-    r"^\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?((?:cow\.)?`[^`]+`|\S+)"
-    r"(?:\s+PARTITION\s*\(([^)]*)\))?\s+(.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_REPLACE_RE = re.compile(
-    r"^\s*INSERT\s+INTO\s+((?:cow\.)?`[^`]+`|\S+)\s+REPLACE\s+WHERE\s+(.+)$",
-    re.IGNORECASE | re.DOTALL,
+    rf"^\s*UPDATE\s+{_TARGET}\s+SET\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
 _CREATE_COW_RE = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s+USING\s+COW"
+    rf"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+{_TARGET}\s+USING\s+COW"
     r"(?:\s+PARTITIONED\s+BY\s*\(([^()]*)\))?"
     r"(?:\s+BLOOM\s+BY\s*\(([^()]*)\))?"
     r"(?:\s+CLUSTERED\s+BY\s*\(([^()]*)\)"
@@ -173,16 +178,16 @@ _CREATE_COW_RE = re.compile(
 )
 _TBLPROP_RE = re.compile(r"'([^']*)'\s*=\s*'([^']*)'")
 _CREATE_LIKE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)"
-    r"\s+LIKE\s+((?:cow\.)?`[^`]+`|\S+)"
+    rf"^\s*CREATE\s+TABLE\s+{_TARGET}"
+    rf"\s+LIKE\s+{_TARGET}"
     r"(?:\s+LOCATION\s+'([^']+)')?\s*$",
     re.IGNORECASE,
 )
 _TRUNCATE_HEAD_RE = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*TRUNCATE\s+TABLE\s+{_TARGET}\s*$", re.IGNORECASE
 )
 _DROP_HEAD_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?{_TARGET}\s*$", re.IGNORECASE
 )
 
 # -- views (r13): the reference's warehouse is Dremio, whose primary
@@ -248,37 +253,37 @@ _EXPLAIN_RE = re.compile(
 # run_sql accepts them for COW targets only, the Delta/Iceberg
 # table-maintenance surface every lake deployment needs)
 _OPTIMIZE_RE = re.compile(
-    r"^\s*OPTIMIZE\s+((?:cow\.)?`[^`]+`|\S+)"
+    rf"^\s*OPTIMIZE\s+{_TARGET}"
     r"(?:\s+WHERE\s+(.+?))?"  # Delta's partition-scoped compaction
     r"(?:\s+FILES\s+(\d+))?"
     r"(?:\s+(ZORDER|CLUSTER)\s+BY\s*\(([^()]*)\))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _VACUUM_RE = re.compile(
-    r"^\s*VACUUM\s+((?:cow\.)?`[^`]+`|\S+)(?:\s+RETAIN\s+(\d+)\s+SNAPSHOTS?)?"
+    rf"^\s*VACUUM\s+{_TARGET}(?:\s+RETAIN\s+(\d+)\s+SNAPSHOTS?)?"
     r"(\s+DRY\s+RUN)?\s*$",
     re.IGNORECASE,
 )
 _HISTORY_RE = re.compile(
-    r"^\s*DESCRIBE\s+HISTORY\s+((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*DESCRIBE\s+HISTORY\s+{_TARGET}\s*$", re.IGNORECASE
 )
 _DETAIL_RE = re.compile(
-    r"^\s*DESCRIBE\s+DETAIL\s+((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*DESCRIBE\s+DETAIL\s+{_TARGET}\s*$", re.IGNORECASE
 )
 _DESCRIBE_TABLE_RE = re.compile(
-    r"^\s*DESCRIBE\s+(?:TABLE\s+)?((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*DESCRIBE\s+(?:TABLE\s+)?{_TARGET}\s*$", re.IGNORECASE
 )
 _SHOW_CREATE_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*SHOW\s+CREATE\s+TABLE\s+{_TARGET}\s*$", re.IGNORECASE
 )
 _SHOW_TABLES_RE = re.compile(
     r"^\s*SHOW\s+TABLES(?:\s+LIKE\s+'([^']*)')?\s*$", re.IGNORECASE
 )
 _SHOW_PARTITIONS_RE = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+((?:cow\.)?`[^`]+`|\S+)\s*$", re.IGNORECASE
+    rf"^\s*SHOW\s+PARTITIONS\s+{_TARGET}\s*$", re.IGNORECASE
 )
 _REORG_RE = re.compile(
-    r"^\s*REORG\s+(?:TABLE\s+)?((?:cow\.)?`[^`]+`|\S+)"
+    rf"^\s*REORG\s+(?:TABLE\s+)?{_TARGET}"
     r"\s+APPLY\s*\(\s*PURGE\s*(?:RATIO\s+([0-9.]+))?\s*\)\s*$",
     re.IGNORECASE,
 )
@@ -287,7 +292,7 @@ _REORG_RE = re.compile(
 # cowtable.convert_to_cow). PARTITIONED BY items are 'name' or
 # 'name type' — a partition SCHEMA, like Delta's CONVERT.
 _CONVERT_RE = re.compile(
-    r"^\s*CONVERT\s+TO\s+COW\s+((?:parquet\.)?`[^`]+`|\S+)"
+    r"^\s*CONVERT\s+TO\s+COW\s+((?:parquet\.)?`[^`]+`|[^\s`]+)"
     r"(?:\s+PARTITIONED\s+BY\s*\(([^()]*)\))?\s*$",
     re.IGNORECASE,
 )
@@ -297,35 +302,15 @@ _CONVERT_RE = re.compile(
 _RESTORE_RE = re.compile(
     # Delta's grammar makes TO optional: RESTORE [TABLE] t [TO] ...;
     # VERSION AS OF also takes a quoted tag name (r11 snapshot tags)
-    r"^\s*RESTORE\s+(?:TABLE\s+)?((?:cow\.)?`[^`]+`|\S+)\s+(?:TO\s+)?"
+    rf"^\s*RESTORE\s+(?:TABLE\s+)?{_TARGET}\s+(?:TO\s+)?"
     r"(?:VERSION\s+AS\s+OF\s+(?:(\d+)|'([^']+)')"
     r"|TIMESTAMP\s+AS\s+OF\s+'([^']+)')\s*$",
     re.IGNORECASE,
 )
-# Delta-style MERGE, the restricted SET */INSERT * form (the exact
-# semantics cowtable.merge_upsert implements: matched rows replaced
-# by the source row, unmatched source rows appended). ON must be a
-# conjunction of same-name column equalities — the key list. The
-# head binds target + USING; the ON/WHEN tail is located by the
-# top-level keyword scanner, never regex (a payload subquery may
-# itself contain ON/WHEN text inside parens or literals).
-_MERGE_HEAD_RE = re.compile(
-    r"^\s*MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
-    r"((?:cow\.)?`[^`]+`|\S+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_CLAUSES_RE = re.compile(
-    r"^\s*WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*"
-    r"\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*$",
-    re.IGNORECASE,
-)
-_MERGE_KEY_EQ_RE = re.compile(
-    r"^\s*(?:(\w+)\s*\.\s*)?(\w+)\s*=\s*(?:(\w+)\s*\.\s*)?(\w+)\s*$"
-)
 # Delta-style COPY INTO (engine extension, COW targets only — the
 # reference's filter drops the verb, like MERGE/OPTIMIZE/VACUUM)
 _COPY_HEAD_RE = re.compile(
-    r"^\s*COPY\s+INTO\s+((?:cow\.)?`[^`]+`|\S+)\s+FROM\s+'([^']+)'\s*(.*)$",
+    rf"^\s*COPY\s+INTO\s+{_TARGET}\s+FROM\s+'([^']+)'\s*(.*)$",
     re.IGNORECASE | re.DOTALL,
 )
 _COPY_FF_RE = re.compile(r"\bFILEFORMAT\s*=\s*(\w+)", re.IGNORECASE)
@@ -338,10 +323,8 @@ _COPY_KV_RE = re.compile(r"'([^']*)'\s*=\s*'([^']*)'")
 
 def _find_toplevel_all(text: str, keyword: str) -> list[int]:
     """Every index of whole-word ``keyword`` (case-insensitive)
-    outside single-quoted literals and outside parentheses. This is
-    the statement-level analogue of the scanner
-    ``_split_assignments`` uses — ``'x WHERE y'`` and
-    ``(SELECT ... WHERE ...)`` never match."""
+    outside single-quoted literals and outside parentheses —
+    ``'x WHERE y'`` and ``(SELECT ... WHERE ...)`` never match."""
     up = text.upper()
     kw = keyword.upper()
     in_quote, depth = False, 0
@@ -371,22 +354,6 @@ def _find_toplevel_keyword(text: str, keyword: str) -> int:
     return matches[0] if matches else -1
 
 
-def _split_where(tail: str) -> tuple[str, str | None]:
-    """Split ``tail`` at its first TOP-LEVEL ``WHERE``; returns
-    (before, condition) with condition None when there is no WHERE."""
-    idx = _find_toplevel_keyword(tail, "WHERE")
-    if idx < 0:
-        return tail.strip(), None
-    cond = tail[idx + len("WHERE") :].strip()
-    if not cond:
-        # "DELETE FROM t WHERE" with nothing after it: an empty
-        # condition is falsy, and a downstream `cond or "true"`
-        # default would silently turn the truncated statement into
-        # FULL-TABLE DML — refuse instead
-        raise ValueError("WHERE clause present but empty")
-    return tail[:idx].strip(), cond
-
-
 def _strip_outer_parens(s: str) -> str:
     """Remove ONE balanced outer paren pair if it wraps the whole
     string — balance-aware, so ``d decimal(10,2)`` is untouched."""
@@ -404,39 +371,28 @@ def _strip_outer_parens(s: str) -> str:
     return s[1:-1].strip()
 
 
-def _split_assignments(set_clause: str) -> dict[str, str]:
-    """SET a = e1, b = e2 -> {a: e1, b: e2}; commas inside quoted
-    literals or parenthesized call arguments do not split."""
-    parts, buf, in_quote, depth = [], [], False, 0
-    for ch in set_clause:
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote and ch == "(":
-            depth += 1
-        elif not in_quote and ch == ")":
-            depth -= 1
-        if ch == "," and not in_quote and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
-    out = {}
-    for p in parts:
-        col, _, expr = p.partition("=")
-        if not _:
-            raise ValueError(f"malformed SET assignment: {p!r}")
-        out[col.strip()] = expr.strip()
-    return out
+_SCHEME_URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:/")
 
 
 def _unquote(target: str) -> str:
-    # DML accepts the same ``cow.`<path>``` reference form SELECT uses
-    # (plus the bare backticked path, the original gate form)
+    """The path or name a statement's target addresses. DML accepts
+    the same ``cow.`<path>``` reference form SELECT uses (plus the bare
+    backticked path, the original gate form). A path target must be
+    absolute or a scheme URI: a relative one would resolve against the
+    process's working directory, so it is refused before any I/O."""
+    quoted = target.startswith(("`", "cow.`"))
     if target.startswith("cow.`"):
         target = target[4:]
-    return target[1:-1] if target.startswith("`") and target.endswith("`") else target
+    if len(target) > 1 and target.startswith("`") and target.endswith("`"):
+        target = target[1:-1]
+    if (quoted or ("/" in target and "`" not in target)) and not (
+        target.startswith("/") or _SCHEME_URI_RE.match(target)
+    ):
+        raise ValueError(
+            f"path target {target!r} must be an absolute path or a "
+            "scheme URI (file:/..., s3a://...)"
+        )
+    return target
 
 
 def _resolve_target(spark: SparkSession, target: str) -> str:
@@ -575,6 +531,34 @@ def _extract_identity_clause(
     return rest, out
 
 
+def _write_mode_prop(raw: str) -> str:
+    """A TBLPROPERTIES body -> its ``'write_mode'`` value (TBLPROPERTIES
+    ('write_mode'='mor') is Delta's enableDeletionVectors analogue).
+    Refuse-loudly — a silently ignored table property is how data loss
+    hides: after removing every well-formed 'k'='v' pair only commas
+    and whitespace may remain (an unquoted ``write_mode=mor`` or a
+    double-quoted entry refuses), unknown keys refuse, and an empty
+    ``TBLPROPERTIES ()`` refuses (an r11 fuzz finding)."""
+    props = dict(_TBLPROP_RE.findall(raw))
+    residue = _TBLPROP_RE.sub("", raw).replace(",", "").strip()
+    if residue:
+        raise ValueError(
+            f"malformed TBLPROPERTIES near {residue.split()[0]!r} "
+            "— entries must be single-quoted 'key'='value' pairs"
+        )
+    unknown = set(props) - {"write_mode"}
+    if unknown:
+        raise ValueError(
+            f"unsupported TBLPROPERTIES {sorted(unknown)} — "
+            "supported: 'write_mode' ('cow' | 'mor')"
+        )
+    if not props:
+        raise ValueError(
+            "empty TBLPROPERTIES — declare 'write_mode' or remove the clause"
+        )
+    return props["write_mode"]
+
+
 def _stats_df(spark: SparkSession, stats: dict) -> DataFrame:
     # commit stats are longs except MOR's dv_file name (string/None)
     # and append's replayed flag (bool)
@@ -590,7 +574,7 @@ def _stats_df(spark: SparkSession, stats: dict) -> DataFrame:
 
 
 _APPLY_CHANGES_HEAD_RE = re.compile(
-    r"^\s*APPLY\s+CHANGES\s+INTO\s+((?:cow\.)?`[^`]+`|\S+)\s+FROM\s+(.+)$",
+    rf"^\s*APPLY\s+CHANGES\s+INTO\s+{_TARGET}\s+FROM\s+(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -670,31 +654,9 @@ def _apply_changes_sql(spark: SparkSession, statement: str) -> DataFrame | None:
             f"malformed APPLY CHANGES SEQUENCE BY tail: {seq_part!r}"
         )
     sequence_by, scd_type = sm.group(1), int(sm.group(2) or 1)
-    # source: table/view name or parenthesized subquery (optional alias)
-    if payload.startswith("("):
-        depth, close, in_quote = 0, -1, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
-        if close < 0:
-            raise ValueError("unbalanced parens in APPLY CHANGES FROM")
-        tail = payload[close + 1 :].strip()
-        if tail and not re.fullmatch(r"(?:AS\s+)?\w+", tail, re.IGNORECASE):
-            raise ValueError(f"malformed APPLY CHANGES FROM tail: {tail!r}")
-        src = run_sql(spark, payload[1:close].strip())
-    else:
-        toks = payload.split()
-        if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
-            raise ValueError(f"malformed APPLY CHANGES source: {payload!r}")
-        src = run_sql(spark, f"SELECT * FROM {toks[0]}")
+    # source: a table/view name or a parenthesized subquery, with an
+    # optional alias — exactly a FROM item, so Spark's parser reads it
+    src = run_sql(spark, f"SELECT * FROM {payload}")
     missing = [k for k in keys if k not in src.columns]
     if missing or sequence_by not in src.columns:
         raise ValueError(
@@ -751,10 +713,100 @@ def _apply_changes_sql(spark: SparkSession, statement: str) -> DataFrame | None:
         raise
 
 
+# -- the standard DML verbs: DELETE / UPDATE / MERGE / INSERT (with
+# INSERT OVERWRITE [PARTITION] and INSERT INTO ... REPLACE WHERE) are
+# read by Spark's own SQL parser, once per statement, into one
+# _DmlStatement that both execution (run_sql) and EXPLAIN dispatch on.
+# Conditions, expressions and payload queries keep the statement's OWN
+# text (the parse tree's source spans), never an Expression.sql()
+# re-rendering: cowtable's stats pruning reads the condition text, and
+# Spark's ``((k > 1) AND (k < 9))`` / ``between(...)`` renderings would
+# stop it pruning.
+
+
+@dataclass
+class _DmlStatement:
+    """One parsed DML statement on a COW target."""
+
+    kind: str  # delete | update | merge | insert | overwrite | replace_where
+    target: str  # resolved table path
+    # DELETE/UPDATE/REPLACE WHERE condition; MERGE: the ON conjuncts
+    # that are not merge keys (as written, statement aliases)
+    where: str | None = None
+    assignments: dict[str, str] | None = None  # UPDATE SET col = expr
+    payload: str | None = None  # INSERT query; MERGE source as a query
+    columns: list[str] | None = None  # INSERT (col, ...)
+    partition: dict[str, str | None] | None = None  # OVERWRITE PARTITION
+    t_alias: str = "t"  # MERGE target / source aliases as written
+    s_alias: str = "s"
+    keys: list[str] = field(default_factory=list)  # MERGE ON equalities
+    clauses: list[dict] | None = None  # MERGE, cowtable.merge's shape
+    evolve: bool = False  # MERGE WITH SCHEMA EVOLUTION
+
+
+# a bare path target (``INSERT INTO /data/t ...``), which Spark's
+# grammar refuses, is backticked before parsing
+_BARE_PATH_TARGET_RE = re.compile(
+    r"^(\s*(?:INSERT\s+(?:INTO|OVERWRITE)(?:\s+TABLE)?|DELETE\s+FROM|UPDATE"
+    r"|MERGE\s+(?:WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO)\s+)"
+    r"(/[^\s`]*|[A-Za-z][A-Za-z0-9+.\-]*:/[^\s`]*)",
+    re.IGNORECASE,
+)
+# cowtable.merge_upsert's exact semantics (whole-row upsert)
+_UPSERT_CLAUSES = [
+    {"when": "matched", "then": "update", "set": "*"},
+    {"when": "not_matched", "then": "insert", "values": "*"},
+]
+_MERGE_THEN = {
+    "DeleteAction": "delete",
+    "UpdateAction": "update",
+    "UpdateStarAction": "update",
+    "InsertAction": "insert",
+    "InsertStarAction": "insert",
+}
+
+
+def _cls(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _span(node) -> tuple[int, int] | None:
+    """(start, stop) of ``node``'s whole subtree in the statement text:
+    the min/max over every origin in it. A node's own origin may start
+    mid-expression (``k IS NULL``'s starts at ``IS``, a LIMIT query's
+    at ``ORDER BY``); its children cover the rest."""
+    o = node.origin()
+    lo, hi = o.startIndex(), o.stopIndex()
+    span = (lo.get(), hi.get()) if lo.isDefined() and hi.isDefined() else None
+    kids = node.children()
+    for i in range(kids.size()):
+        s = _span(kids.apply(i))
+        if s is not None:
+            span = s if span is None else (min(span[0], s[0]), max(span[1], s[1]))
+    return span
+
+
+def _name_parts(attr) -> list[str]:
+    return attr.nameParts().mkString("\x1f").split("\x1f")
+
+
+def _unalias(node) -> tuple[object, str | None]:
+    if _cls(node) == "SubqueryAlias":
+        return node.child(), node.alias()
+    return node, None
+
+
+def _conjuncts(expr) -> list:
+    if _cls(expr) == "And":
+        return _conjuncts(expr.left()) + _conjuncts(expr.right())
+    return [expr]
+
+
 def _default_target_alias(spark: SparkSession, raw_target: str) -> str:
-    """Implicit alias for a join-form DML target: a simple catalog
-    NAME doubles as its own qualifier (the DuckDB/Postgres idiom
-    ``UPDATE t ... WHERE t.k = s.k``); path refs fall back to ``t``."""
+    """Implicit alias for a MERGE / join-form DML target: a simple
+    catalog NAME doubles as its own qualifier (the DuckDB/Postgres
+    idiom ``UPDATE t ... WHERE t.k = s.k``); path refs fall back to
+    ``t``."""
     from . import catalog as _cat
 
     t = _unquote(raw_target)
@@ -763,82 +815,476 @@ def _default_target_alias(spark: SparkSession, raw_target: str) -> str:
     return "t"
 
 
-def _join_form_dml(
-    spark: SparkSession,
-    target: str,
-    t_alias: str,
-    payload: str,
-    cond: str,
-    then: str,
-    set_clause: str | None = None,
-) -> DataFrame:
-    """``UPDATE t SET ... FROM src WHERE ...`` / ``DELETE FROM t USING
-    src WHERE ...`` (r13) — the DuckDB/Postgres join-form DML idiom,
-    executed as the existing multi-clause MERGE: the same-name column
-    equalities in WHERE become the merge keys (stat-pruned affected
-    set, same ambiguity guard — a target row matching TWO source rows
-    refuses instead of picking an arbitrary winner, which is STRICTER
-    than Postgres and safer), every other conjunct becomes the matched
-    clause's condition, and only matched-THEN-update/delete fires (no
-    inserts — join-form DML never creates rows)."""
+def _rewrite_aliases(expr: str, t_alias: str, s_alias: str) -> str:
+    """Map the statement's aliases onto the engine's fixed ``t``/``s``
+    in one MERGE condition or expression. Word-boundary replace outside
+    single-quoted literals (an alias inside a string stays verbatim)."""
+    out, i, in_quote = [], 0, False
+    while i < len(expr):
+        ch = expr[i]
+        if ch == "'":
+            in_quote = not in_quote
+        elif not in_quote:
+            before_ok = i == 0 or not (expr[i - 1].isalnum() or expr[i - 1] in "_`.")
+            for alias, fixed in ((t_alias, "t"), (s_alias, "s")):
+                mm = re.match(rf"{re.escape(alias)}\s*\.", expr[i:], re.IGNORECASE)
+                if mm and before_ok:
+                    out.append(f"{fixed}.")
+                    i += mm.end()
+                    break
+            else:
+                out.append(ch)
+                i += 1
+            continue
+        out.append(ch)
+        i += 1
+    return "".join(out)
+
+
+def _assignments(assigns, text, t_alias=None, s_alias=None) -> dict[str, str]:
+    """``SET`` / MERGE ``INSERT (...) VALUES (...)`` assignments ->
+    {target column: expression text}. With MERGE aliases, a key's
+    target-alias qualifier (or the engine-fixed ``t``, unless ``t`` is
+    the source alias) is stripped, a source-qualified key is refused,
+    and the expression is rewritten onto ``t``/``s``."""
+    out = {}
+    for i in range(assigns.size()):
+        a = assigns.apply(i)
+        parts = _name_parts(a.key())
+        expr = text(a.value())
+        if t_alias is not None:
+            q = parts[0].lower() if len(parts) == 2 else None
+            if q == t_alias.lower() or (q == "t" and s_alias.lower() != "t"):
+                parts = parts[1:]
+            elif q == s_alias.lower():
+                raise ValueError(
+                    f"assignment key {'.'.join(parts)!r} is qualified with "
+                    f"the source alias {s_alias!r}; SET/VALUES keys must "
+                    "name TARGET columns"
+                )
+            expr = _rewrite_aliases(expr, t_alias, s_alias)
+        out[".".join(parts)] = expr
+    return out
+
+
+def _parse_dml(spark: SparkSession, statement: str) -> _DmlStatement | None:
+    """Read one DELETE / UPDATE / MERGE / INSERT statement with Spark's
+    parser (``parsePlan``: no analysis, no jobs). None when the plan is
+    none of those or its target is not a COW table (the caller falls
+    through to ``spark.sql``); a statement the parser rejects raises
+    ValueError before any I/O."""
+    from pyspark.errors import ParseException
+
     from . import cowtable as cow
 
-    # source: parenthesized subquery or table/view name, optional alias
-    if payload.startswith("("):
-        depth, close, in_quote = 0, -1, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
-        if close < 0:
-            raise ValueError(f"unbalanced parens in join-form source: {payload!r}")
-        tail = payload[close + 1 :].strip()
-        if tail and not re.fullmatch(r"(?:AS\s+)?\w+", tail, re.IGNORECASE):
-            raise ValueError(f"malformed join-form source tail: {tail!r}")
-        src = run_sql(spark, payload[1:close].strip())
-        s_alias = re.sub(r"^AS\s+", "", tail, flags=re.IGNORECASE) or "s"
+    statement = _BARE_PATH_TARGET_RE.sub(r"\1`\2`", statement, count=1)
+    try:
+        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(statement)
+    except ParseException as e:
+        msg = next((ln.strip() for ln in str(e).splitlines() if ln.strip()), "")
+        raise ValueError(f"statement does not parse: {msg}") from None
+
+    def text(node) -> str | None:
+        s = _span(node)
+        return None if s is None else statement[s[0] : s[1] + 1]
+
+    kind = _cls(plan)
+    if kind == "MergeIntoTable":
+        rel, alias = _unalias(plan.targetTable())
+    elif kind in (
+        "DeleteFromTable", "UpdateTable", "InsertIntoStatement", "OverwriteByExpression"
+    ):
+        rel, alias = _unalias(plan.table())
     else:
-        toks = payload.split()
-        if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
-            raise ValueError(f"malformed join-form source: {payload!r}")
-        src = run_sql(spark, f"SELECT * FROM {toks[0]}")
-        s_alias = toks[-1] if len(toks) > 1 else toks[0].rsplit(".", 1)[-1]
-    t_l, s_l = t_alias.lower(), s_alias.lower()
+        return None
+    if _cls(rel) != "UnresolvedRelation":
+        return None
+    raw = text(rel)
+    target = _resolve_target(spark, raw)
+    if not cow.is_cow_table(spark, target):
+        return None
+    if kind == "MergeIntoTable":
+        t_alias = alias or _default_target_alias(spark, raw)
+        return _merge_statement(plan, text, target, t_alias)
+    if kind in ("DeleteFromTable", "UpdateTable"):
+        if alias is not None:
+            # `DELETE FROM t WHERE` parses as an all-rows delete of t
+            # aliased WHERE — a plain DELETE/UPDATE takes no alias
+            if alias.upper() == "WHERE":
+                raise ValueError("WHERE clause present but empty")
+            verb = "DELETE" if kind == "DeleteFromTable" else "UPDATE"
+            raise ValueError(
+                f"{verb} takes no target alias (got {alias!r}); name columns "
+                "unqualified, or use the DELETE ... USING / UPDATE ... FROM "
+                "join form"
+            )
+        cond = plan.condition()
+        if kind == "DeleteFromTable":
+            # no WHERE parses as the TRUE literal
+            true = _cls(cond) == "Literal" and cond.toString() == "true"
+            return _DmlStatement("delete", target, where=None if true else text(cond))
+        return _DmlStatement(
+            "update",
+            target,
+            where=text(cond.get()) if cond.isDefined() else None,
+            assignments=_assignments(plan.assignments(), text),
+        )
+    payload = text(plan.query())
+    if kind == "OverwriteByExpression":  # INSERT INTO t REPLACE WHERE c <query>
+        return _DmlStatement(
+            "replace_where", target, where=text(plan.deleteExpr()), payload=payload
+        )
+    if plan.byName() or plan.ifPartitionNotExists():
+        raise ValueError(
+            "INSERT ... BY NAME / IF NOT EXISTS is not supported on COW tables"
+        )
+    partition: dict[str, str | None] = {}
+    it = plan.partitionSpec().iterator()
+    while it.hasNext():
+        kv = it.next()
+        v = kv._2()
+        partition[kv._1()] = v.get() if v.isDefined() else None
+    cols = plan.userSpecifiedCols()
+    columns = cols.mkString("\x1f").split("\x1f") if cols.nonEmpty() else None
+    if plan.overwrite():
+        if columns:
+            raise ValueError("INSERT OVERWRITE takes no column list")
+        return _DmlStatement(
+            "overwrite", target, payload=payload, partition=partition or None
+        )
+    if partition:
+        raise ValueError(
+            "INSERT INTO ... PARTITION is not supported — use INSERT "
+            "OVERWRITE ... PARTITION"
+        )
+    return _DmlStatement("insert", target, payload=payload, columns=columns)
+
+
+def _merge_statement(plan, text, target: str, t_alias: str) -> _DmlStatement:
+    """The MERGE half of ``_parse_dml``. The source becomes a query
+    (a table/view name reads as ``SELECT * FROM name``); ON splits into
+    merge keys — same-name column equalities between target and source
+    (or both unqualified) — and the residual conjuncts; WHEN clauses
+    become ``cowtable.merge`` dicts over the engine's fixed ``t``/``s``
+    aliases."""
+    src, s_alias = _unalias(plan.sourceTable())
+    if _cls(src) == "UnresolvedRelation":
+        payload = f"SELECT * FROM {text(src)}"
+        s_alias = s_alias or src.multipartIdentifier().last()
+    else:
+        payload = text(src)
+        s_alias = s_alias or "s"
+    tq, sq = (t_alias.lower(), "t"), (s_alias.lower(), "s")
     keys, residual = [], []
-    for part in _split_toplevel_and(cond):
-        km = _MERGE_KEY_EQ_RE.match(part)
-        if km and km.group(2) == km.group(4):
-            q1 = (km.group(1) or "").lower()
-            q2 = (km.group(3) or "").lower()
-            tq = (t_l, "t")
-            sq = (s_l, "s")
-            if (not q1 and not q2) or (
-                (q1 in tq and q2 in sq) or (q1 in sq and q2 in tq)
-            ):
-                keys.append(km.group(2))
-                continue
-        residual.append(part.strip())
-    if not keys:
+    for c in _conjuncts(plan.mergeCondition()):
+        if _cls(c) == "EqualTo":
+            lhs, rhs = c.left(), c.right()
+            if _cls(lhs) == _cls(rhs) == "UnresolvedAttribute":
+                lp, rp = _name_parts(lhs), _name_parts(rhs)
+                if lp[-1] == rp[-1] and len(lp) <= 2 and len(rp) <= 2:
+                    q1 = lp[0].lower() if len(lp) == 2 else ""
+                    q2 = rp[0].lower() if len(rp) == 2 else ""
+                    if (not q1 and not q2) or (q1 in tq and q2 in sq) or (
+                        q1 in sq and q2 in tq
+                    ):
+                        keys.append(lp[-1])
+                        continue
+        residual.append(text(c))
+    clauses = []
+    for when, actions in (
+        ("matched", plan.matchedActions()),
+        ("not_matched", plan.notMatchedActions()),
+        ("not_matched_by_source", plan.notMatchedBySourceActions()),
+    ):
+        for i in range(actions.size()):
+            a = actions.apply(i)
+            act = _cls(a)
+            if act not in _MERGE_THEN:
+                raise ValueError(f"unsupported MERGE clause action: {act}")
+            clause: dict = {"when": when, "then": _MERGE_THEN[act]}
+            cond = a.condition()
+            if cond.isDefined():
+                clause["and"] = _rewrite_aliases(text(cond.get()), t_alias, s_alias)
+            slot = "set" if clause["then"] == "update" else "values"
+            if act.endswith("StarAction"):
+                clause[slot] = "*"
+            elif act != "DeleteAction":
+                clause[slot] = _assignments(a.assignments(), text, t_alias, s_alias)
+            clauses.append(clause)
+    return _DmlStatement(
+        "merge",
+        target,
+        where="(" + ") AND (".join(residual) + ")" if residual else None,
+        payload=payload,
+        t_alias=t_alias,
+        s_alias=s_alias,
+        keys=keys,
+        clauses=clauses,
+        evolve=bool(plan.withSchemaEvolution()),
+    )
+
+
+def _join_form_as_merge(spark: SparkSession, verb: str, statement: str) -> str | None:
+    """``DELETE FROM t [alias] USING src WHERE ...`` / ``UPDATE t SET
+    ... FROM src WHERE ...`` (r13) — the DuckDB/Postgres join-form DML
+    idiom, which Spark's grammar refuses — restated as the MERGE it
+    means: ``MERGE INTO t alias USING src ON <where> WHEN MATCHED THEN
+    DELETE | UPDATE SET ...``. The same-name column equalities in WHERE
+    become the merge keys (stat-pruned affected set, same ambiguity
+    guard — a target row matching TWO source rows refuses, which is
+    STRICTER than Postgres and safer), every other conjunct the matched
+    clause's condition; join-form DML never inserts. None when the
+    statement is not the join form on a COW target."""
+    from . import cowtable as cow
+
+    m = (_DELETE_HEAD_RE if verb == "DELETE" else _UPDATE_HEAD_RE).match(statement)
+    if not m:
+        return None
+    kw = "USING" if verb == "DELETE" else "FROM"
+    j = _find_toplevel_keyword(m.group(2), kw)
+    if j < 0 or not cow.is_cow_table(spark, _resolve_target(spark, m.group(1))):
+        return None
+    head, rest = m.group(2)[:j].strip(), m.group(2)[j + len(kw) :]
+    if verb == "DELETE":
+        alias, action = head or _default_target_alias(spark, m.group(1)), "DELETE"
+    else:
+        alias, action = _default_target_alias(spark, m.group(1)), f"UPDATE SET {head}"
+    w = _find_toplevel_keyword(rest, "WHERE")
+    if w < 0:
+        raise ValueError(f"{verb} ... {kw} requires a WHERE join condition")
+    cond = rest[w + len("WHERE") :].strip()
+    if not cond:
+        raise ValueError("WHERE clause present but empty")
+    return (
+        f"MERGE INTO {m.group(1)} {alias} USING {rest[:w].strip()} ON {cond}\n"
+        f"WHEN MATCHED THEN {action}"
+    )
+
+
+def _dml_statement(
+    spark: SparkSession, verb: str, statement: str
+) -> _DmlStatement | None:
+    """The one parsed record behind a DELETE / UPDATE / MERGE / INSERT
+    on a COW target (None: not a COW target, fall through). Join-form
+    DML arrives as its MERGE, with the non-key WHERE conjuncts folded
+    into the matched clause; a plain MERGE's ON must be all keys."""
+    merge = (
+        _join_form_as_merge(spark, verb, statement)
+        if verb in ("DELETE", "UPDATE")
+        else None
+    )
+    d = _parse_dml(spark, merge or statement)
+    if d is None or d.kind != "merge":
+        return d
+    if merge is None:
+        if d.where is not None or not d.keys:
+            raise ValueError(
+                "MERGE ON must be a conjunction of same-name column "
+                f"equalities; got {d.where or 'no key equality'!r}"
+            )
+        return d
+    if not d.keys:
         raise ValueError(
             "join-form DML requires at least one same-name column "
-            f"equality between target and source in WHERE; got {cond!r}"
+            f"equality between target and source in WHERE; got {d.where!r}"
         )
-    clause: dict = {"when": "matched", "then": then}
-    if residual:
-        clause["and"] = "(" + ") AND (".join(residual) + ")"
-    if set_clause is not None:
-        clause["set"] = (
-            "*" if set_clause.strip() == "*" else _split_assignments(set_clause)
+    if d.where is not None:
+        d.clauses[0]["and"] = _rewrite_aliases(d.where, d.t_alias, d.s_alias)
+        d.where = None
+    return d
+
+
+def _run_dml(spark: SparkSession, d: _DmlStatement) -> DataFrame:
+    """Execute a parsed COW DML statement as one snapshot commit and
+    return its commit stats as a one-row DataFrame (the Delta-style
+    DML-metrics result)."""
+    from pyspark.sql.types import StructType
+
+    from . import cowtable as cow
+
+    if d.kind == "delete":
+        return _stats_df(spark, cow.delete(spark, d.target, d.where or "true"))
+    if d.kind == "update":
+        return _stats_df(
+            spark, cow.update(spark, d.target, d.where or "true", d.assignments)
         )
-    clause = _rewrite_clause_aliases(clause, t_alias, s_alias)
-    return _stats_df(spark, cow.merge(spark, target, src, keys, [clause]))
+    # the payload / source query (VALUES ... / SELECT ... / WITH ...)
+    # is itself a whitelisted statement: it runs through the gate, so
+    # cow.`...` refs, names and views all resolve
+    rows = run_sql(spark, d.payload)
+    if d.kind == "merge":
+        # Delta-style MERGE: the SET */INSERT * form is
+        # cowtable.merge_upsert (matched rows replaced by the source
+        # row, unmatched source rows appended; only files holding a
+        # matching key rewrite, stat-pruned by the source keys' min/max
+        # envelope); every richer clause list — and WITH SCHEMA
+        # EVOLUTION, whose new source columns evolve the schema — is
+        # cowtable.merge's multi-clause commit
+        if d.clauses == _UPSERT_CLAUSES and not d.evolve:
+            return _stats_df(spark, cow.merge_upsert(spark, d.target, rows, d.keys))
+        return _stats_df(
+            spark,
+            cow.merge(
+                spark, d.target, rows, d.keys, d.clauses, schema_evolution=d.evolve
+            ),
+        )
+    head = cow.table_head_meta(spark, d.target)
+    schema = StructType.fromJson(json.loads(head["schema"]))
+    if d.kind == "replace_where":
+        # Delta's overwrite-by-filter: one commit deletes the matching
+        # rows and appends the payload
+        if len(schema.fields) != len(rows.columns):
+            raise ValueError(
+                f"REPLACE WHERE arity mismatch: {len(rows.columns)} values for "
+                f"{len(schema.fields)} columns"
+            )
+        return _stats_df(
+            spark,
+            cow.replace_where(
+                spark, d.target, d.where, rows.toDF(*[f.name for f in schema.fields])
+            ),
+        )
+    engine_cols = set(head.get("generated_columns") or {}) | set(
+        head.get("identity_columns") or {}
+    )
+    if d.kind == "overwrite":
+        return _insert_overwrite(spark, d, rows, head, schema, engine_cols)
+    # INSERT: map the payload's columns POSITIONALLY onto the explicit
+    # column list or the table schema (standard INSERT semantics), then
+    # commit new files only
+    names = d.columns or [f.name for f in schema.fields]
+    if not d.columns:
+        # generated and identity columns are engine-assigned: an
+        # implicit column list never targets them (the engine
+        # recomputes every generated value before staging anyway)
+        if engine_cols and len(rows.columns) == len(names) - len(engine_cols):
+            names = [n for n in names if n not in engine_cols]
+        elif len(rows.columns) < len(names):
+            # Spark 3.4 DEFAULT rule (r11): a short VALUES row may omit
+            # TRAILING columns when every omitted one has a declared
+            # DEFAULT (generated columns drop out first)
+            dflt = head.get("column_defaults") or {}
+            non_gen = [n for n in names if n not in engine_cols]
+            if len(rows.columns) <= len(non_gen) and all(
+                n in dflt for n in non_gen[len(rows.columns) :]
+            ):
+                names = non_gen[: len(rows.columns)]
+    if len(names) != len(rows.columns):
+        raise ValueError(
+            f"INSERT arity mismatch: {len(rows.columns)} values for "
+            f"{len(names)} columns {names}"
+        )
+    return _stats_df(spark, cow.append(spark, d.target, rows.toDF(*names)))
+
+
+def _insert_overwrite(spark, d, rows, head, schema, engine_cols) -> DataFrame:
+    """INSERT OVERWRITE [TABLE] t [PARTITION (c = 'v', ...)] <payload>
+    — ONE replace_where commit (atomic: readers see old or new, never
+    the gap a TRUNCATE+INSERT pair publishes). A static PARTITION spec
+    scopes the overwrite to exactly those partitions (Spark's
+    static-overwrite semantics) and injects the values, cast to the
+    partition columns' types, into the payload rows."""
+    from pyspark.sql import functions as _F
+    from pyspark.sql.types import BooleanType, NumericType
+
+    from . import cowtable as cow
+
+    if d.partition:
+        untyped = [c for c, v in d.partition.items() if v is None]
+        if untyped:
+            raise ValueError(
+                "INSERT OVERWRITE PARTITION expects col = 'value' pairs; "
+                f"got {untyped}"
+            )
+        declared = set(head.get("partition_by") or [])
+        bad = [c for c in d.partition if c not in declared]
+        if bad:
+            raise ValueError(
+                f"INSERT OVERWRITE PARTITION on non-partition columns {bad} "
+                f"(declared: {sorted(declared)})"
+            )
+        names = [
+            f.name
+            for f in schema.fields
+            if f.name not in d.partition and f.name not in engine_cols
+        ]
+        if len(names) != len(rows.columns):
+            raise ValueError(
+                f"INSERT OVERWRITE arity mismatch: {len(rows.columns)} "
+                f"values for {len(names)} non-partition columns {names}"
+            )
+        rows = rows.toDF(*names)
+        conds = []
+        for c, v in d.partition.items():
+            dt = schema[c].dataType
+            rows = rows.withColumn(c, _F.lit(v).cast(dt))
+            if isinstance(dt, (NumericType, BooleanType)):
+                lit = v
+            else:
+                lit = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            conds.append(f"{c} = {lit}")
+        return _stats_df(
+            spark, cow.replace_where(spark, d.target, " AND ".join(conds), rows)
+        )
+    names = [f.name for f in schema.fields if f.name not in engine_cols]
+    if len(names) != len(rows.columns):
+        raise ValueError(
+            f"INSERT OVERWRITE arity mismatch: {len(rows.columns)} "
+            f"values for {len(names)} columns {names}"
+        )
+    # Spark's partitionOverwriteMode governs the clause-less form on a
+    # partitioned table: dynamic replaces ONLY the partitions the
+    # payload writes (whole-partition metadata drop + append); static
+    # replaces the whole table
+    mode = str(
+        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    ).lower()
+    if head.get("partition_by") and mode == "dynamic":
+        return _stats_df(
+            spark, cow.insert_overwrite_dynamic(spark, d.target, rows.toDF(*names))
+        )
+    return _stats_df(
+        spark,
+        cow.replace_where(spark, d.target, "true", rows.toDF(*names), validate=False),
+    )
+
+
+def _explain_dml(spark: SparkSession, d: _DmlStatement, plan_text) -> str:
+    """EXPLAIN of a parsed COW DML statement: the engine's route header
+    (resolved target, condition, commit strategy) plus the Spark plan
+    of an INSERT's payload query. Plans only — no commit, no job."""
+    action, strategy = {
+        "delete": (
+            "CowDelete",
+            "stat-pruned copy-on-write file rewrite "
+            "(merge-on-read tables: deletion-vector commit)",
+        ),
+        "update": ("CowUpdate", "stat-pruned copy-on-write file rewrite"),
+        "merge": (
+            "CowMerge",
+            "source key-envelope stat-prunes the affected file set; "
+            "one atomic multi-clause commit",
+        ),
+        "insert": ("CowAppend", "append commit (new files only)"),
+        "overwrite": ("CowOverwrite", "partition-scoped atomic replace"),
+        "replace_where": ("CowReplaceWhere", "predicate-scoped atomic replace commit"),
+    }[d.kind]
+    lines = [
+        "== Engine DML Plan (not executed) ==",
+        f"{action} target=cow.`{d.target}`",
+    ]
+    if d.assignments:
+        lines.append("set: " + ", ".join(f"{c} = {e}" for c, e in d.assignments.items()))
+    if d.kind in ("delete", "update", "replace_where"):
+        lines.append(f"condition: {d.where or 'TRUE (all rows)'}")
+    if d.partition:
+        lines.append(f"partition: {d.partition}")
+    if d.kind == "merge":
+        lines += [f"keys: {', '.join(d.keys)}", f"using: {d.payload}"]
+    lines.append(f"strategy: {strategy}")
+    if d.payload is not None and d.kind != "merge":
+        lines += ["payload:", plan_text(run_sql(spark, d.payload))]
+    return "\n".join(lines)
 
 
 def _strip_trailing_line_comment(body: str) -> str:
@@ -911,9 +1357,9 @@ def _create_view(
 
 
 def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None:
-    """Execute ``statement`` natively when its target is a COW
-    snapshot table; None -> not a COW-table statement (caller falls
-    through to ``spark.sql``)."""
+    """Execute a CREATE / ALTER / TRUNCATE / DROP ``statement``
+    natively when its target is a COW snapshot table; None -> not a
+    COW-table statement (caller falls through to ``spark.sql``)."""
     from . import cowtable as cow
 
     if verb == "CREATE":
@@ -964,12 +1410,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                     "snapshot table"
                 )
             raw_dst = cl.group(1)
-            name = (
-                _unquote(raw_dst)
-                if not raw_dst.startswith(("`", "cow.`"))
-                and _cat.is_name(_unquote(raw_dst))
-                else None
-            )
+            name = raw_dst if _cat.is_name(raw_dst) else None
             if name is not None:
                 if _cat.resolve(spark, name) is not None:
                     raise ValueError(
@@ -1011,12 +1452,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
 
             src = _resolve_target(spark, lk.group(2))
             raw_target, location = lk.group(1), lk.group(3)
-            name = (
-                _unquote(raw_target)
-                if not raw_target.startswith(("`", "cow.`"))
-                and _cat.is_name(_unquote(raw_target))
-                else None
-            )
+            name = raw_target if _cat.is_name(raw_target) else None
             if name is not None:
                 if _cat.resolve(spark, name) is not None:
                     raise ValueError(
@@ -1090,12 +1526,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             )
             raw_target = cm.group(1)
             location, query = cm.group(8), cm.group(9)
-            name = (
-                _unquote(raw_target)
-                if not raw_target.startswith(("`", "cow.`"))
-                and _cat.is_name(_unquote(raw_target))
-                else None
-            )
+            name = raw_target if _cat.is_name(raw_target) else None
             prior = None
             if name is None:
                 if location:
@@ -1156,43 +1587,11 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 snap = cow.current_snapshot(spark, table_path)
                 return spark.createDataFrame([(snap,)], "snapshot_id long")
 
-            # TBLPROPERTIES ('write_mode'='mor'): Delta's
-            # enableDeletionVectors analogue — SQL-text users can make
-            # merge-on-read the table's DML default, completing the
-            # pure-SQL lake lifecycle. Unknown keys refuse loudly
-            # (silently-ignored table properties are how data loss
-            # hides).
-            write_mode = None
-            if cm.group(7) is not None:
-                raw = cm.group(7)
-                props = dict(_TBLPROP_RE.findall(raw))
-                # refuse-loudly means MALFORMED entries refuse too:
-                # after removing every well-formed 'k'='v' pair, only
-                # commas/whitespace may remain — otherwise an unquoted
-                # or double-quoted entry (write_mode=mor, "k"="v")
-                # would be silently dropped and the table created with
-                # the default mode, the exact silent-property-drop
-                # this block exists to prevent.
-                residue = _TBLPROP_RE.sub("", raw).replace(",", "").strip()
-                if residue:
-                    raise ValueError(
-                        f"malformed TBLPROPERTIES near {residue.split()[0]!r} "
-                        "— entries must be single-quoted 'key'='value' pairs"
-                    )
-                unknown = set(props) - {"write_mode"}
-                if unknown:
-                    raise ValueError(
-                        f"unsupported TBLPROPERTIES {sorted(unknown)} — "
-                        "supported: 'write_mode' ('cow' | 'mor')"
-                    )
-                if not props:
-                    # r11 fuzz finding: TBLPROPERTIES () was silently
-                    # ignored — same clause-drop class as above
-                    raise ValueError(
-                        "empty TBLPROPERTIES — declare 'write_mode' or "
-                        "remove the clause"
-                    )
-                write_mode = props.get("write_mode")
+            # TBLPROPERTIES: SQL-text users can make merge-on-read the
+            # table's DML default, completing the pure-SQL lake lifecycle
+            write_mode = (
+                _write_mode_prop(cm.group(7)) if cm.group(7) is not None else None
+            )
             # r11 (ADVICE high): every clause above validated and the
             # payload query analyzed BEFORE anything destructive — a
             # typo'd TBLPROPERTIES or unresolvable AS query on a
@@ -1309,27 +1708,8 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
         if tp and cow.is_cow_table(spark, _resolve_target(spark, tp.group(1))):
             # SET TBLPROPERTIES (r11): the write_mode toggle, with the
             # same refuse-loudly validation as CREATE's TBLPROPERTIES
-            raw = tp.group(2)
-            props = dict(_TBLPROP_RE.findall(raw))
-            residue = _TBLPROP_RE.sub("", raw).replace(",", "").strip()
-            if residue:
-                raise ValueError(
-                    f"malformed TBLPROPERTIES near {residue.split()[0]!r} "
-                    "— entries must be single-quoted 'key'='value' pairs"
-                )
-            unknown = set(props) - {"write_mode"}
-            if unknown:
-                raise ValueError(
-                    f"unsupported TBLPROPERTIES {sorted(unknown)} — "
-                    "supported: 'write_mode' ('cow' | 'mor')"
-                )
-            if not props:
-                raise ValueError(
-                    "empty TBLPROPERTIES — declare 'write_mode' or "
-                    "remove the clause"
-                )
             snap = cow.alter_set_write_mode(
-                spark, _resolve_target(spark, tp.group(1)), props["write_mode"]
+                spark, _resolve_target(spark, tp.group(1)), _write_mode_prop(tp.group(2))
             )
             return spark.createDataFrame([(snap,)], "snapshot_id long")
         nn_set = _ALTER_SET_NOTNULL_RE.match(statement)
@@ -1456,242 +1836,6 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             else:
                 snap = cow.alter_drop_column(spark, target, rm.group(2))
             return spark.createDataFrame([(snap,)], "snapshot_id long")
-    elif verb == "DELETE":
-        dm = _DELETE_HEAD_RE.match(statement)
-        if dm and cow.is_cow_table(spark, _resolve_target(spark, dm.group(1))):
-            tail = dm.group(2)
-            u_i = _find_toplevel_keyword(tail, "USING")
-            if u_i >= 0:
-                # DELETE FROM t [alias] USING src [alias] WHERE ...
-                before = tail[:u_i].strip()
-                t_alias = _default_target_alias(spark, dm.group(1))
-                if before:
-                    am = re.fullmatch(
-                        r"(?:AS\s+)?([A-Za-z_]\w*)", before, re.IGNORECASE
-                    )
-                    if not am:
-                        raise ValueError(
-                            f"malformed DELETE target alias: {before!r}"
-                        )
-                    t_alias = am.group(1)
-                after = tail[u_i + len("USING") :]
-                w_i = _find_toplevel_keyword(after, "WHERE")
-                if w_i < 0:
-                    raise ValueError(
-                        "DELETE ... USING requires a WHERE join condition"
-                    )
-                cond = after[w_i + len("WHERE") :].strip()
-                if not cond:
-                    raise ValueError("WHERE clause present but empty")
-                return _join_form_dml(
-                    spark,
-                    _resolve_target(spark, dm.group(1)),
-                    t_alias,
-                    after[:w_i].strip(),
-                    cond,
-                    "delete",
-                )
-            before, cond = _split_where(tail)
-            if before:
-                raise ValueError(f"malformed DELETE tail: {before!r}")
-            return _stats_df(
-                spark, cow.delete(spark, _resolve_target(spark, dm.group(1)), cond or "true")
-            )
-    elif verb == "UPDATE":
-        um = _UPDATE_HEAD_RE.match(statement)
-        if um and cow.is_cow_table(spark, _resolve_target(spark, um.group(1))):
-            rest = um.group(2)
-            f_i = _find_toplevel_keyword(rest, "FROM")
-            if f_i >= 0:
-                # UPDATE t SET ... FROM src [alias] WHERE ... (join form)
-                set_clause = rest[:f_i].strip()
-                after = rest[f_i + len("FROM") :]
-                w_i = _find_toplevel_keyword(after, "WHERE")
-                if w_i < 0:
-                    raise ValueError(
-                        "UPDATE ... FROM requires a WHERE join condition"
-                    )
-                cond = after[w_i + len("WHERE") :].strip()
-                if not cond:
-                    raise ValueError("WHERE clause present but empty")
-                return _join_form_dml(
-                    spark,
-                    _resolve_target(spark, um.group(1)),
-                    _default_target_alias(spark, um.group(1)),
-                    after[:w_i].strip(),
-                    cond,
-                    "update",
-                    set_clause,
-                )
-            set_clause, cond = _split_where(rest)
-            return _stats_df(
-                spark,
-                cow.update(
-                    spark,
-                    _resolve_target(spark, um.group(1)),
-                    cond or "true",
-                    _split_assignments(set_clause),
-                ),
-            )
-    elif verb == "INSERT":
-        om = _INSERT_OVERWRITE_RE.match(statement)
-        if om and cow.is_cow_table(spark, _resolve_target(spark, om.group(1))):
-            # INSERT OVERWRITE [TABLE] t [PARTITION (c='v', ...)] <payload>
-            # — ONE replace_where commit (atomic: readers see old or
-            # new, never the gap a TRUNCATE+INSERT pair publishes).
-            # A static PARTITION spec scopes the overwrite to exactly
-            # those partitions (Spark's static-overwrite semantics)
-            # and injects the literals into the payload rows.
-            from pyspark.sql import functions as _F
-
-            from .cowtable import _split_commas
-
-            target = _resolve_target(spark, om.group(1))
-            rows = run_sql(spark, om.group(3).strip())
-            head = cow.table_head_meta(spark, target)
-            schema = cow.table_schema(spark, target)
-            engine_cols = set(head.get("generated_columns") or {}) | set(
-                head.get("identity_columns") or {}
-            )
-            if om.group(2):
-                pcols: list[tuple[str, str]] = []
-                for item in _split_commas(om.group(2)):
-                    if "=" not in item:
-                        raise ValueError(
-                            "INSERT OVERWRITE PARTITION expects "
-                            f"col = 'value' pairs; got {item.strip()!r}"
-                        )
-                    c, v = item.split("=", 1)
-                    pcols.append((c.strip().strip("`"), v.strip()))
-                declared = set(head.get("partition_by") or [])
-                bad = [c for c, _ in pcols if c not in declared]
-                if bad:
-                    raise ValueError(
-                        f"INSERT OVERWRITE PARTITION on non-partition "
-                        f"columns {bad} (declared: {sorted(declared)})"
-                    )
-                taken = {c for c, _ in pcols}
-                names = [
-                    f.name
-                    for f in schema.fields
-                    if f.name not in taken and f.name not in engine_cols
-                ]
-                if len(names) != len(rows.columns):
-                    raise ValueError(
-                        f"INSERT OVERWRITE arity mismatch: {len(rows.columns)} "
-                        f"values for {len(names)} non-partition columns {names}"
-                    )
-                rows = rows.toDF(*names)
-                for c, v in pcols:
-                    rows = rows.withColumn(c, _F.expr(v))
-                cond = " AND ".join(f"{c} = {v}" for c, v in pcols)
-                return _stats_df(
-                    spark, cow.replace_where(spark, target, cond, rows)
-                )
-            names = [f.name for f in schema.fields if f.name not in engine_cols]
-            if len(names) != len(rows.columns):
-                raise ValueError(
-                    f"INSERT OVERWRITE arity mismatch: {len(rows.columns)} "
-                    f"values for {len(names)} columns {names}"
-                )
-            # Spark's partitionOverwriteMode governs the clause-less
-            # form on a partitioned table: dynamic replaces ONLY the
-            # partitions the payload writes (whole-partition metadata
-            # drop + append); static replaces the whole table
-            mode = str(
-                spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            ).lower()
-            if head.get("partition_by") and mode == "dynamic":
-                return _stats_df(
-                    spark,
-                    cow.insert_overwrite_dynamic(spark, target, rows.toDF(*names)),
-                )
-            return _stats_df(
-                spark,
-                cow.replace_where(
-                    spark, target, "true", rows.toDF(*names), validate=False
-                ),
-            )
-        rm = _INSERT_REPLACE_RE.match(statement)
-        if rm and cow.is_cow_table(spark, _resolve_target(spark, rm.group(1))):
-            # INSERT INTO t REPLACE WHERE <cond> <SELECT|VALUES|WITH ...>
-            # (Delta's overwrite-by-filter): the condition runs up to
-            # the first TOP-LEVEL payload keyword — a parenthesized
-            # subquery inside the condition never splits
-            tail = rm.group(2)
-            split_at = min(
-                (i for i in (
-                    _find_toplevel_keyword(tail, kw) for kw in ("SELECT", "VALUES", "WITH")
-                ) if i >= 0),
-                default=-1,
-            )
-            if split_at <= 0:
-                raise ValueError("REPLACE WHERE needs a condition and a payload query")
-            target = _resolve_target(spark, rm.group(1))
-            rows = run_sql(spark, tail[split_at:].strip())
-            schema = cow.table_schema(spark, target)
-            if len(schema.fields) != len(rows.columns):
-                raise ValueError(
-                    f"REPLACE WHERE arity mismatch: {len(rows.columns)} values for "
-                    f"{len(schema.fields)} columns"
-                )
-            return _stats_df(
-                spark,
-                cow.replace_where(
-                    spark,
-                    target,
-                    tail[:split_at].strip(),
-                    rows.toDF(*[f.name for f in schema.fields]),
-                ),
-            )
-        im = _INSERT_HEAD_RE.match(statement)
-        if im and cow.is_cow_table(spark, _resolve_target(spark, im.group(1))):
-            target = _resolve_target(spark, im.group(1))
-            # the payload (VALUES ... / SELECT ... / WITH ...) is
-            # itself a whitelisted standalone statement; run it
-            # through the gate and map its columns POSITIONALLY onto
-            # the explicit column list or the table schema (standard
-            # INSERT semantics), then commit new files only.
-            rows = run_sql(spark, im.group(3).strip())
-            if im.group(2):
-                names = [c.strip().strip("`") for c in im.group(2)[1:-1].split(",")]
-            else:
-                import json as _json
-
-                from pyspark.sql.types import StructType as _St
-
-                head = cow.table_head_meta(spark, target)
-                names = [
-                    f.name
-                    for f in _St.fromJson(_json.loads(head["schema"])).fields
-                ]
-                gen = dict(head.get("generated_columns") or {})
-                # identity columns are engine-assigned like generated
-                # ones: an implicit column list never targets them
-                gen.update(head.get("identity_columns") or {})
-                if gen and len(rows.columns) == len(names) - len(gen):
-                    # standard generated-column INSERT semantics: an
-                    # implicit column list targets the NON-generated
-                    # columns (the engine recomputes every generated
-                    # value from its expression before staging anyway)
-                    names = [n for n in names if n not in gen]
-                elif len(rows.columns) < len(names):
-                    # Spark 3.4 DEFAULT rule (r11): a short VALUES row
-                    # may omit TRAILING columns when every omitted one
-                    # has a declared DEFAULT (generated columns drop
-                    # out first — they recompute regardless)
-                    dflt = head.get("column_defaults") or {}
-                    non_gen = [n for n in names if n not in gen]
-                    if len(rows.columns) <= len(non_gen) and all(
-                        n in dflt for n in non_gen[len(rows.columns) :]
-                    ):
-                        names = non_gen[: len(rows.columns)]
-            if len(names) != len(rows.columns):
-                raise ValueError(
-                    f"INSERT arity mismatch: {len(rows.columns)} values for "
-                    f"{len(names)} columns {names}"
-                )
-            return _stats_df(spark, cow.append(spark, target, rows.toDF(*names)))
     elif verb == "TRUNCATE":
         tm = _TRUNCATE_HEAD_RE.match(statement)
         if tm and cow.is_cow_table(spark, _resolve_target(spark, tm.group(1))):
@@ -2064,121 +2208,6 @@ def _substitute_name_refs(
     return "".join(out)
 
 
-def _split_toplevel_and(text: str) -> list[str]:
-    """Split on top-level AND (outside quotes/parens)."""
-    parts = []
-    rest = text
-    while True:
-        i = _find_toplevel_keyword(rest, "AND")
-        if i < 0:
-            parts.append(rest)
-            return parts
-        parts.append(rest[:i])
-        rest = rest[i + 3 :]
-
-
-def _cow_merge(spark: SparkSession, statement: str) -> DataFrame | None:
-    """Delta-style ``MERGE INTO <cow> USING <src> ON <key equalities>
-    WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``
-    executed as one copy-on-write commit (``cowtable.merge_upsert``:
-    matched rows replaced by the source row, unmatched source rows
-    appended; only files holding a matching key rewrite, stat-pruned
-    by the source keys' min/max envelope). Like the OPTIMIZE/VACUUM
-    maintenance verbs, MERGE is an ENGINE EXTENSION: the reference's
-    statement filter still drops it (verb not whitelisted,
-    ``pipeline.py:110-114``); ``run_sql`` accepts it for COW targets
-    only. The ON clause must be a conjunction of same-name column
-    equalities (the merge key list); richer WHEN clauses belong to
-    the Python API. Returns commit stats. None -> not a COW target."""
-    from . import cowtable as cow
-
-    hm = _MERGE_HEAD_RE.match(statement)
-    if not hm or not cow.is_cow_table(spark, _resolve_target(spark, hm.group(2))):
-        return None
-    evolve = bool(hm.group(1))  # MERGE WITH SCHEMA EVOLUTION INTO (r12)
-    target = _resolve_target(spark, hm.group(2))
-    rest = hm.group(4)
-    on_i = _find_toplevel_keyword(rest, "ON")
-    if on_i < 0:
-        raise ValueError("MERGE requires an ON clause")
-    payload, after = rest[:on_i].strip(), rest[on_i + 2 :]
-    when_i = _find_toplevel_keyword(after, "WHEN")
-    if when_i < 0:
-        raise ValueError("MERGE requires WHEN clauses")
-    cond, clauses = after[:when_i], after[when_i:]
-    parsed_clauses = (
-        None if _MERGE_CLAUSES_RE.match(clauses) else _parse_merge_clauses(clauses)
-    )
-    # source: a parenthesized payload query (runs through the gate,
-    # so SELECT/VALUES/WITH and cow.`...` refs all work) or a
-    # table/view name; a trailing alias is accepted and ignored
-    # (column names, not aliases, drive the SET */INSERT * mapping)
-    if payload.startswith("("):
-        depth, close, in_quote = 0, -1, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
-        if close < 0:
-            raise ValueError(f"unbalanced parens in MERGE USING: {payload!r}")
-        tail = payload[close + 1 :].strip()
-        if tail and not re.fullmatch(r"(?:AS\s+)?\w+", tail, re.IGNORECASE):
-            raise ValueError(f"malformed MERGE USING tail: {tail!r}")
-        src = run_sql(spark, payload[1:close].strip())
-    else:
-        toks = payload.split()
-        if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
-            raise ValueError(f"malformed MERGE USING source: {payload!r}")
-        src = run_sql(spark, f"SELECT * FROM {toks[0]}")
-    keys = []
-    for part in _split_toplevel_and(cond):
-        km = _MERGE_KEY_EQ_RE.match(part)
-        if not km or km.group(2) != km.group(4):
-            raise ValueError(
-                f"MERGE ON must be a conjunction of same-name column "
-                f"equalities; got {part.strip()!r}"
-            )
-        keys.append(km.group(2))
-    if parsed_clauses is None:
-        if evolve:
-            # the simple SET */INSERT * form under WITH SCHEMA
-            # EVOLUTION routes through cowtable.merge so the new
-            # source columns evolve the schema
-            parsed_clauses = [
-                {"when": "matched", "then": "update", "set": "*"},
-                {"when": "not_matched", "then": "insert", "values": "*"},
-            ]
-            return _stats_df(
-                spark,
-                cow.merge(
-                    spark, target, src, keys, parsed_clauses,
-                    schema_evolution=True,
-                ),
-            )
-        return _stats_df(spark, cow.merge_upsert(spark, target, src, keys))
-    # rich clauses: rewrite the statement's aliases to the engine's
-    # fixed t (target) / s (source) before handing the expressions to
-    # cowtable.merge
-    t_alias = hm.group(3) or "t"
-    s_alias = _merge_source_alias(payload) or "s"
-    parsed_clauses = [
-        _rewrite_clause_aliases(c, t_alias, s_alias) for c in parsed_clauses
-    ]
-    return _stats_df(
-        spark,
-        cow.merge(
-            spark, target, src, keys, parsed_clauses, schema_evolution=evolve
-        ),
-    )
-
-
 def _cow_copy_into(spark: SparkSession, statement: str) -> DataFrame | None:
     """``COPY INTO <cow> FROM '<path>' FILEFORMAT = <fmt>
     [PATTERN = '<glob>'] [FORMAT_OPTIONS ('k'='v', ...)]
@@ -2243,219 +2272,6 @@ def _cow_copy_into(spark: SparkSession, statement: str) -> DataFrame | None:
     return _stats_df(spark, stats)
 
 
-_MERGE_CLAUSE_HEAD_RE = re.compile(
-    r"^\s*(NOT\s+)?MATCHED(?:\s+BY\s+(SOURCE|TARGET))?"
-    r"\s*(?:\s+AND\s+(.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_INSERT_COLS_RE = re.compile(
-    r"^INSERT\s*\(([^()]*)\)\s*VALUES\s*\((.+)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-
-
-def _split_toplevel_when(clauses: str) -> list[str]:
-    """Split ``WHEN ... WHEN ...`` into clause bodies (quote/paren
-    aware via _find_toplevel_keyword)."""
-    out = []
-    rest = clauses
-    i = _find_toplevel_keyword(rest, "WHEN")
-    if i != 0 and rest[:i].strip():
-        raise ValueError(f"MERGE clauses must start with WHEN: {clauses!r}")
-    rest = rest[i + 4 :]
-    while True:
-        j = _find_toplevel_keyword(rest, "WHEN")
-        if j < 0:
-            out.append(rest)
-            return out
-        out.append(rest[:j])
-        rest = rest[j + 4 :]
-
-
-def _parse_merge_clauses(clauses: str) -> list[dict]:
-    """The full WHEN surface -> ``cowtable.merge`` clause dicts:
-    ``WHEN MATCHED [AND c] THEN UPDATE SET (*|a=e,...)``,
-    ``WHEN MATCHED [AND c] THEN DELETE``,
-    ``WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT
-    (*|(cols) VALUES (exprs))``, and Delta's sync direction
-    ``WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET a=e,... |
-    DELETE`` (acts on target rows no source row matches; conditions
-    and SET expressions are target-only — the engine refuses ``s.``
-    references)."""
-    parsed = []
-    for body in _split_toplevel_when(clauses):
-        then_i = _find_toplevel_keyword(body, "THEN")
-        if then_i < 0:
-            raise ValueError(f"MERGE clause missing THEN: {body.strip()!r}")
-        head, action = body[:then_i], body[then_i + 4 :].strip()
-        hm = _MERGE_CLAUSE_HEAD_RE.match(head)
-        if not hm:
-            raise ValueError(f"malformed MERGE clause head: {head.strip()!r}")
-        by = (hm.group(2) or "").upper()
-        if by and not hm.group(1):
-            raise ValueError(
-                f"MATCHED BY {by} is not a MERGE clause (did you mean "
-                f"NOT MATCHED BY {by}?): {head.strip()!r}"
-            )
-        if by == "SOURCE":
-            when = "not_matched_by_source"
-        elif hm.group(1):
-            when = "not_matched"  # BY TARGET is the explicit synonym
-        else:
-            when = "matched"
-        c: dict = {"when": when}
-        if hm.group(3):
-            c["and"] = hm.group(3).strip()
-        up = action.upper()
-        if c["when"] == "not_matched_by_source" and up.startswith("UPDATE"):
-            set_i = _find_toplevel_keyword(action, "SET")
-            if set_i < 0:
-                raise ValueError(f"MERGE UPDATE missing SET: {action!r}")
-            set_body = action[set_i + 3 :].strip()
-            if set_body == "*":
-                raise ValueError(
-                    "NOT MATCHED BY SOURCE UPDATE SET * is meaningless — "
-                    "there is no source row to copy; list assignments"
-                )
-            c["then"] = "update"
-            c["set"] = _split_assignments(set_body)
-        elif c["when"] == "not_matched_by_source" and up == "DELETE":
-            c["then"] = "delete"
-        elif c["when"] == "not_matched_by_source":
-            raise ValueError(
-                f"NOT MATCHED BY SOURCE supports UPDATE SET/DELETE "
-                f"only: {action!r}"
-            )
-        elif c["when"] == "matched" and up.startswith("UPDATE"):
-            set_i = _find_toplevel_keyword(action, "SET")
-            if set_i < 0:
-                raise ValueError(f"MERGE UPDATE missing SET: {action!r}")
-            set_body = action[set_i + 3 :].strip()
-            c["then"] = "update"
-            c["set"] = "*" if set_body == "*" else _split_assignments(set_body)
-        elif c["when"] == "matched" and up == "DELETE":
-            c["then"] = "delete"
-        elif c["when"] == "not_matched" and up == "INSERT *":
-            c["then"] = "insert"
-            c["values"] = "*"
-        elif c["when"] == "not_matched" and up.startswith("INSERT"):
-            im = _MERGE_INSERT_COLS_RE.match(action)
-            if not im:
-                raise ValueError(f"malformed MERGE INSERT: {action!r}")
-            from .cowtable import _split_commas
-
-            cols = [x.strip().strip("`") for x in im.group(1).split(",")]
-            exprs = _split_commas(im.group(2))
-            if len(cols) != len(exprs):
-                raise ValueError(
-                    f"MERGE INSERT column/value count mismatch: {action!r}"
-                )
-            c["then"] = "insert"
-            c["values"] = dict(zip(cols, (e.strip() for e in exprs)))
-        else:
-            raise ValueError(f"unsupported MERGE clause action: {action!r}")
-        parsed.append(c)
-    return parsed
-
-
-def _merge_source_alias(payload: str) -> str | None:
-    """The trailing alias of the USING payload, if any."""
-    if payload.startswith("("):
-        depth, in_quote = 0, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        tail = payload[i + 1 :].strip()
-                        am = re.fullmatch(r"(?:AS\s+)?(\w+)", tail, re.IGNORECASE)
-                        return am.group(1) if am else None
-        return None
-    toks = payload.split()
-    if len(toks) == 2:
-        return toks[1]
-    if len(toks) == 3 and toks[1].upper() == "AS":
-        return toks[2]
-    return None
-
-
-def _rewrite_clause_aliases(clause: dict, t_alias: str, s_alias: str) -> dict:
-    """Map the statement's aliases onto the engine's fixed ``t``/``s``
-    in every condition and expression. Word-boundary replace outside
-    single-quoted literals (an alias inside a string stays verbatim)."""
-
-    def _sub(expr: str) -> str:
-        out, i, in_quote = [], 0, False
-        while i < len(expr):
-            ch = expr[i]
-            if ch == "'":
-                in_quote = not in_quote
-                out.append(ch)
-                i += 1
-                continue
-            if not in_quote:
-                for alias, fixed in ((t_alias, "t"), (s_alias, "s")):
-                    mm = re.match(rf"{re.escape(alias)}\s*\.", expr[i:], re.IGNORECASE)
-                    before_ok = i == 0 or not (
-                        expr[i - 1].isalnum() or expr[i - 1] in "_`."
-                    )
-                    if mm and before_ok:
-                        out.append(f"{fixed}.")
-                        i += mm.end()
-                        break
-                else:
-                    out.append(ch)
-                    i += 1
-                continue
-            out.append(ch)
-            i += 1
-        return "".join(out)
-
-    def _norm_key(c: str) -> str:
-        # assignment KEYS are target columns; the engine expects bare
-        # names. Strip only the ACTUAL target-alias qualifier (and the
-        # engine-fixed `t` — but never when `t` is the statement's
-        # SOURCE alias, e.g. `USING src AS t`); a source-qualified
-        # assignment key is refused explicitly rather than silently
-        # treated as a target column.
-        c = c.strip()
-        strippable = [t_alias]
-        if s_alias.lower() != "t":
-            strippable.append("t")
-        for alias in strippable:
-            mm = re.match(
-                rf"`?{re.escape(alias)}`?\s*\.\s*", c, re.IGNORECASE
-            )
-            if mm:
-                return c[mm.end():].strip().strip("`")
-        mm = re.match(
-            rf"`?{re.escape(s_alias)}`?\s*\.\s*", c, re.IGNORECASE
-        )
-        if mm:
-            raise ValueError(
-                f"assignment key {c!r} is qualified with the source "
-                f"alias {s_alias!r}; SET/VALUES keys must name TARGET "
-                "columns"
-            )
-        return c.strip("`")
-
-    out: dict = {"when": clause["when"], "then": clause["then"]}
-    if "and" in clause:
-        out["and"] = _sub(clause["and"])
-    for key in ("set", "values"):
-        if key in clause:
-            v = clause[key]
-            out[key] = (
-                v
-                if v == "*"
-                else {_norm_key(c): _sub(e) for c, e in v.items()}
-            )
-    return out
-
-
 def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
     """``EXPLAIN [FORMATTED|EXTENDED|COST|CODEGEN] <statement>`` —
     the observability verb every warehouse user reaches for (r14,
@@ -2470,13 +2286,12 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
     pushed filters / pruned columns / join strategies the statement
     would run with. COW DML (INSERT/DELETE/UPDATE/MERGE on an engine
     table) has no single Spark plan — the engine executes it as
-    stat-pruned snapshot commits — so EXPLAIN emits the engine's DML
-    route header (resolved target, condition, commit strategy) plus
-    the Spark plan of any embedded payload/source query. DML on
+    stat-pruned snapshot commits — so EXPLAIN reads the same parsed
+    record execution runs on (``_dml_statement``) and emits the
+    engine's DML route header (resolved target, condition, commit
+    strategy) plus the Spark plan of any INSERT payload query. DML on
     non-engine targets delegates to ``spark.sql`` whole, keeping
     native EXPLAIN behavior untouched."""
-    from . import cowtable as cow
-
     em = _EXPLAIN_RE.match(statement)
     if not em:
         raise ValueError("EXPLAIN requires a statement to explain")
@@ -2528,96 +2343,10 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
             "commit; use plain EXPLAIN for the engine's DML route"
         )
 
-    def _engine_header(action: str, target: str, *details: str) -> str:
-        lines = [
-            "== Engine DML Plan (not executed) ==",
-            f"{action} target=cow.`{target}`",
-            *details,
-        ]
-        return "\n".join(lines)
-
-    def _is_engine_target(raw: str) -> str | None:
-        t = _resolve_target(spark, raw)
-        return t if cow.is_cow_table(spark, t) else None
-
-    if ivb == "DELETE":
-        dm = _DELETE_HEAD_RE.match(inner)
-        if dm:
-            t = _is_engine_target(dm.group(1))
-            if t is not None:
-                cond = re.sub(
-                    r"^\s*WHERE\s+", "", dm.group(2).strip(), flags=re.IGNORECASE
-                )
-                return _out(
-                    _engine_header(
-                        "CowDelete",
-                        t,
-                        f"condition: {cond or 'TRUE (all rows)'}",
-                        "strategy: stat-pruned copy-on-write file rewrite"
-                        " (merge-on-read tables: deletion-vector commit)",
-                    )
-                )
-    elif ivb == "UPDATE":
-        um = _UPDATE_HEAD_RE.match(inner)
-        if um:
-            t = _is_engine_target(um.group(1))
-            if t is not None:
-                return _out(
-                    _engine_header(
-                        "CowUpdate",
-                        t,
-                        f"set/where: {um.group(2).strip()}",
-                        "strategy: stat-pruned copy-on-write file rewrite",
-                    )
-                )
-    elif ivb == "INSERT":
-        im = (
-            _INSERT_REPLACE_RE.match(inner)
-            or _INSERT_OVERWRITE_RE.match(inner)
-            or _INSERT_HEAD_RE.match(inner)
-        )
-        if im:
-            t = _is_engine_target(im.group(1))
-            if t is not None:
-                payload = im.group(im.lastindex).strip()
-                pvm = _VERB_RE.match(payload)
-                pverb = pvm.group(1).upper() if pvm else ""
-                if _INSERT_REPLACE_RE.match(inner):
-                    action, strat = (
-                        "CowReplaceWhere",
-                        "strategy: predicate-scoped atomic replace commit",
-                    )
-                    payload, pverb = "", ""
-                elif _INSERT_OVERWRITE_RE.match(inner):
-                    action, strat = (
-                        "CowOverwrite",
-                        "strategy: partition-scoped atomic replace",
-                    )
-                else:
-                    action, strat = (
-                        "CowAppend",
-                        "strategy: append commit (new files only)",
-                    )
-                head = _engine_header(action, t, strat)
-                if pverb in ("SELECT", "WITH", "VALUES"):
-                    return _out(
-                        head + "\npayload:\n" + _plan_text(run_sql(spark, payload))
-                    )
-                return _out(head)
-    elif ivb == "MERGE":
-        mm = _MERGE_HEAD_RE.match(inner)
-        if mm:
-            t = _is_engine_target(mm.group(2))
-            if t is not None:
-                return _out(
-                    _engine_header(
-                        "CowMerge",
-                        t,
-                        f"using: {mm.group(4).strip().splitlines()[0][:200]}",
-                        "strategy: source key-envelope stat-prunes the "
-                        "affected file set; one atomic multi-clause commit",
-                    )
-                )
+    if ivb in ("DELETE", "UPDATE", "INSERT", "MERGE"):
+        d = _dml_statement(spark, ivb, inner)
+        if d is not None:
+            return _out(_explain_dml(spark, d, _plan_text))
     elif ivb in ALLOWED_VERBS or ivb in (
         "OPTIMIZE", "VACUUM", "COPY", "APPLY", "REFRESH", "RESTORE",
         "CONVERT", "REORG", "TRUNCATE",
@@ -2635,8 +2364,9 @@ def run_sql(spark: SparkSession, statement: str) -> DataFrame:
     """Execute one whitelisted statement; raise ValueError (not a
     parse error) for non-whitelisted verbs.
 
-    INSERT/DELETE/UPDATE whose target is a copy-on-write snapshot
-    table (``cowtable``) execute as real snapshot commits (append /
+    INSERT/DELETE/UPDATE/MERGE whose target is a copy-on-write
+    snapshot table (``cowtable``) are read by Spark's parser
+    (``_dml_statement``) and execute as real snapshot commits (append /
     file-level rewrite) and return the commit stats as a one-row
     DataFrame (the Delta-style DML-metrics result); ALTER TABLE
     ADD/DROP COLUMN on a COW target commits the metadata-only schema
@@ -2653,10 +2383,10 @@ def run_sql(spark: SparkSession, statement: str) -> DataFrame:
         handled = _cow_maintenance(spark, verb, statement)
         if handled is not None:
             return handled
-    if verb == "MERGE":
-        handled = _cow_merge(spark, statement)
-        if handled is not None:
-            return handled
+    if verb in ("DELETE", "UPDATE", "INSERT", "MERGE"):
+        d = _dml_statement(spark, verb, statement)
+        if d is not None:
+            return _run_dml(spark, d)
     if verb == "COPY":
         handled = _cow_copy_into(spark, statement)
         if handled is not None:
@@ -2680,7 +2410,7 @@ def run_sql(spark: SparkSession, statement: str) -> DataFrame:
         raise ValueError(
             f"statement verb {verb or '<empty>'!r} is not in the allowed set {ALLOWED_VERBS}"
         )
-    if verb in ("CREATE", "ALTER", "DELETE", "UPDATE", "INSERT", "TRUNCATE", "DROP"):
+    if verb in ("CREATE", "ALTER", "TRUNCATE", "DROP"):
         handled = _cow_dml(spark, verb, statement)
         if handled is not None:
             return handled
@@ -3160,8 +2890,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
         cv = _CONVERT_RE.match(statement)
         if cv:
             raw = cv.group(1)
-            if raw.lower().startswith("parquet.`") and raw.endswith("`"):
-                raw = raw[len("parquet.`") : -1]
+            if raw.lower().startswith("parquet.`"):
+                raw = raw[len("parquet.") :]
             path = _unquote(raw)
             specs = (
                 [s.strip().strip("`") for s in cv.group(2).split(",") if s.strip()]

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import tempfile
 
 # r15: scratch tables / tmp_path live on tmpfs when available — the
@@ -80,3 +82,24 @@ def hyp_examples(full: int) -> int:
     if os.environ.get("DWS_HYP_FULL") == "1":
         return full
     return max(3, full // 4)
+
+
+@contextlib.contextmanager
+def no_cwd_escape(spark):
+    """Run the block from a fresh temporary working directory and fail
+    if anything appears there or in the JVM's working directory, where
+    Hadoop resolves a relative path (``os.chdir`` does not move the
+    JVM). A function-scoped ``monkeypatch.chdir`` would trip
+    Hypothesis's health check, hence a plain context manager."""
+    jvm_cwd = spark._jvm.java.lang.System.getProperty("user.dir")
+    before = set(os.listdir(jvm_cwd))
+    cwd = tempfile.mkdtemp(prefix="dws_cwd_")
+    old = os.getcwd()
+    os.chdir(cwd)
+    try:
+        yield
+    finally:
+        os.chdir(old)
+        leaked = os.listdir(cwd) + sorted(set(os.listdir(jvm_cwd)) - before)
+        shutil.rmtree(cwd, ignore_errors=True)
+    assert not leaked, f"statement wrote outside its target: {leaked}"

@@ -460,11 +460,11 @@ def test_gate_nmbs_refusals(spark, tmp_path):
     ).createOrReplaceTempView("nmbs_gate_bad_src")
     for stmt, msg in [
         (f"MERGE INTO cow.`{p}` t USING nmbs_gate_bad_src s ON t.k = s.k "
-         f"WHEN NOT MATCHED BY SOURCE THEN INSERT *", "UPDATE SET/DELETE only"),
+         f"WHEN NOT MATCHED BY SOURCE THEN INSERT *", "PARSE_SYNTAX_ERROR"),
         (f"MERGE INTO cow.`{p}` t USING nmbs_gate_bad_src s ON t.k = s.k "
-         f"WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *", "meaningless"),
+         f"WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *", "PARSE_SYNTAX_ERROR"),
         (f"MERGE INTO cow.`{p}` t USING nmbs_gate_bad_src s ON t.k = s.k "
-         f"WHEN MATCHED BY SOURCE THEN DELETE", "did you mean"),
+         f"WHEN MATCHED BY SOURCE THEN DELETE", "PARSE_SYNTAX_ERROR"),
         (f"MERGE INTO cow.`{p}` t USING nmbs_gate_bad_src s ON t.k = s.k "
          f"WHEN NOT MATCHED BY SOURCE AND s.v > 0 THEN DELETE",
          "cannot reference the source"),

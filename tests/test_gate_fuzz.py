@@ -27,7 +27,7 @@ import tempfile
 import uuid
 
 import pytest
-from .conftest import hyp_examples
+from .conftest import hyp_examples, no_cwd_escape
 from hypothesis import given, settings, strategies as st
 
 from data_warehouse_solution_spark import cowtable as cow
@@ -162,20 +162,21 @@ def test_dml_mutations_never_half_commit(spark, base, ops):
                 stmt = stmt[:i] + stmt[i].swapcase() + stmt[i + 1 :]
         before_snap = cow.current_snapshot(spark, path)
         before_rows = sorted(map(tuple, cow.read(spark, path).collect()))
-        try:
-            run_sql(spark, stmt)
-        except Exception:
-            # refused: the table must be BIT-IDENTICAL — no half
-            # commit, no staged debris promoted, no snapshot burned
-            assert cow.current_snapshot(spark, path) == before_snap
-            assert (
-                sorted(map(tuple, cow.read(spark, path).collect()))
-                == before_rows
-            )
-        else:
-            # accepted: the table must still be a consistent snapshot
-            # table (manifest loads, content readable)
-            cow.read(spark, path).collect()
+        with no_cwd_escape(spark):  # a mangled target never writes elsewhere
+            try:
+                run_sql(spark, stmt)
+            except Exception:
+                # refused: the table must be BIT-IDENTICAL — no half
+                # commit, no staged debris promoted, no snapshot burned
+                assert cow.current_snapshot(spark, path) == before_snap
+                assert (
+                    sorted(map(tuple, cow.read(spark, path).collect()))
+                    == before_rows
+                )
+            else:
+                # accepted: the table must still be a consistent
+                # snapshot table (manifest loads, content readable)
+                cow.read(spark, path).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -413,18 +414,19 @@ def test_r11_verb_mutations_never_half_commit(spark, base, ops):
         before_rows = sorted(map(tuple, cow.read(spark, path).collect()))
         m0 = cow._load_manifest(spark, path, before_snap)
         before_meta = (m0.get("tags"), m0.get("column_defaults"))
-        try:
-            run_sql(spark, stmt)
-        except Exception:
-            assert cow.current_snapshot(spark, path) == before_snap
-            assert (
-                sorted(map(tuple, cow.read(spark, path).collect()))
-                == before_rows
-            )
-            m1 = cow._load_manifest(spark, path, before_snap)
-            assert (m1.get("tags"), m1.get("column_defaults")) == before_meta
-        else:
-            cow.read(spark, path).collect()  # still a consistent table
+        with no_cwd_escape(spark):  # a mangled target never writes elsewhere
+            try:
+                run_sql(spark, stmt)
+            except Exception:
+                assert cow.current_snapshot(spark, path) == before_snap
+                assert (
+                    sorted(map(tuple, cow.read(spark, path).collect()))
+                    == before_rows
+                )
+                m1 = cow._load_manifest(spark, path, before_snap)
+                assert (m1.get("tags"), m1.get("column_defaults")) == before_meta
+            else:
+                cow.read(spark, path).collect()  # still a consistent table
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -537,21 +539,22 @@ def test_r12_verb_mutations_never_half_commit(spark, base, ops):
         before_rows = sorted(
             map(tuple, cow.read(spark, path).select("k", "st", "v").collect())
         )
-        try:
-            run_sql(spark, stmt)
-        except Exception:
-            assert cow.current_snapshot(spark, path) == before_snap
-            assert (
-                sorted(
-                    map(
-                        tuple,
-                        cow.read(spark, path).select("k", "st", "v").collect(),
+        with no_cwd_escape(spark):  # a mangled target never writes elsewhere
+            try:
+                run_sql(spark, stmt)
+            except Exception:
+                assert cow.current_snapshot(spark, path) == before_snap
+                assert (
+                    sorted(
+                        map(
+                            tuple,
+                            cow.read(spark, path).select("k", "st", "v").collect(),
+                        )
                     )
+                    == before_rows
                 )
-                == before_rows
-            )
-        else:
-            cow.read(spark, path).collect()
+            else:
+                cow.read(spark, path).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
         shutil.rmtree(src, ignore_errors=True)

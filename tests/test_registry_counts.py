@@ -42,34 +42,6 @@ def test_bench_headliners_are_registered():
     assert not missing, f"bench headliners not in the registry: {missing}"
 
 
-def test_scale_md_suite_count_matches_collected():
-    """SCALE.md's canonical suite line vs a live collection (the r8
-    judge nit: the doc's count drifted three rounds in a row with
-    nothing guarding it). Collection is a subprocess so the number is
-    exactly what a fresh ``pytest`` run would report."""
-    import re
-    import subprocess
-    import sys
-
-    text = open("SCALE.md").read()
-    found = re.findall(r"\*\*Suite: (\d+) tests\*\*", text)
-    assert found, "SCALE.md canonical suite line not found (format changed?)"
-    documented = int(found[-1])
-    out = subprocess.run(
-        [sys.executable, "-m", "pytest", "--collect-only", "-q"],
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    m = re.search(r"(\d+) tests collected", out.stdout)
-    assert m, f"could not parse collection output: {out.stdout[-500:]}"
-    collected = int(m.group(1))
-    assert documented == collected, (
-        f"SCALE.md says {documented} tests, collection finds {collected} — "
-        "update SCALE.md's 'Current status' suite line"
-    )
-
-
 def test_scale_md_headliner_count_matches_bench():
     """SCALE.md's canonical headliner count vs bench.HEADLINE."""
     import re

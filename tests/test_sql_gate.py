@@ -523,7 +523,7 @@ def test_merge_into_cow_through_gate(spark, tmp_path):
         (2, "B"), (3, "c"),
     }
     # a malformed clause action is still refused
-    with pytest.raises(ValueError, match="unsupported MERGE clause"):
+    with pytest.raises(ValueError, match="PARSE_SYNTAX_ERROR"):
         run_sql(
             spark,
             f"MERGE INTO {path} USING (SELECT CAST(1 AS BIGINT) AS k, 'x' AS v) s "
