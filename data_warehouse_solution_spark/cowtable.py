@@ -21,8 +21,22 @@ in the environment — no extra jars:
   an existing path fails there); on a local FS the check-then-rename
   pair has a small race window — same caveat as
   ``incremental.refresh_daily_revenue``, documented rather than
-  hidden. Losers of a concurrent commit raise
-  ``CowConcurrentWrite`` (optimistic concurrency).
+  hidden. Every write that stages files publishes through ONE
+  optimistic-commit loop (``_optimistic_commit``, Iceberg's
+  optimistic-concurrency step). A loser reloads the head and the
+  verb decides: appends (INSERT, COPY INTO, pre-staged appends) have
+  no read-set and always rebase; predicate DML and MERGE rebase only
+  when the winner provably left what they read alone
+  (``_rebase_head``); create/replace and the rest refuse with
+  ``CowConcurrentWrite``. The loop itself refuses a head whose
+  identity high-water marks moved, re-validates the staged bytes
+  when the CHECK set changed, and stops after ``COMMIT_ATTEMPTS``
+  (6) publishes. Cleanup rule: a write that does not publish deletes
+  every data file and deletion vector it staged, because no manifest
+  can reference them before the rename; only when the rename itself
+  fails with an unknown outcome are they left for ``vacuum``.
+  Content-addressed manifest shards are never deleted (a winner may
+  share them).
 
 Affected-file selection prunes twice before touching data: the
 manifest keeps per-file min/max stats for numeric and string columns
@@ -446,39 +460,6 @@ def _commit(spark: SparkSession, table_path: str, manifest: dict) -> int:
     return _publish(spark, fs, table_path, manifest, final)
 
 
-def _commit_carry(
-    spark: SparkSession, table_path: str, pm: dict, manifest: dict
-) -> int:
-    """METADATA-ONLY commit fast path (r13): the child references the
-    parent's file list VERBATIM — sharded parents by shard NAME,
-    inline parents by list copy — so a tag / write-mode / DEFAULT /
-    constraint commit is O(1) metadata work at ANY table size. The
-    general ``_commit`` regroups the full file list even when every
-    group is reused (O(table files) driver CPU); a commit that by
-    construction changes no file entry has no reason to ever expand
-    them. ``pm`` is the parent manifest PROPER (``_load_manifest_meta``
-    — file_shards unexpanded)."""
-    n = manifest["snapshot_id"]
-    fs, _ = _fs(spark, table_path)
-    final = _jpath(spark, _manifest_path(table_path, n))
-    if fs.exists(final):
-        raise CowConcurrentWrite(f"snapshot {n} already committed at {table_path}")
-    if "txns" not in manifest and pm.get("txns"):
-        manifest["txns"] = pm["txns"]
-    # a FULL-loaded parent carries both file_shards and the expanded
-    # files list — reference the shards by name, never inline the list
-    if "file_shards" in pm:
-        manifest["file_shards"] = pm["file_shards"]
-    else:
-        manifest["files"] = list(pm.get("files") or [])
-    for k in ("n_files", "n_rows", "n_rows_live"):
-        if k in pm:
-            manifest[k] = pm[k]
-    if "n_files" not in manifest:
-        manifest["n_files"] = _n_files(spark, table_path, pm)
-    return _publish(spark, fs, table_path, manifest, final)
-
-
 def _write_content_shard(spark: SparkSession, fs, table_path: str, blob: bytes) -> str:
     """Publish one content-addressed shard blob, skipping the write
     when the name already exists (identical content by construction).
@@ -560,22 +541,25 @@ def _n_files(spark: SparkSession, table_path: str, meta: dict) -> int:
     return len(meta.get("files") or [])
 
 
-def _commit_append(
-    spark: SparkSession, table_path: str, parent_meta: dict, manifest: dict,
-    entries: list[dict],
+def _commit_carry(
+    spark: SparkSession, table_path: str, pm: dict, manifest: dict,
+    entries: list[dict] | tuple = (),
 ) -> int:
-    """APPEND fast path (r12): commit ``parent ∪ entries`` with
-    O(new files) metadata I/O — the parent's shards are referenced BY
-    NAME from its manifest proper (never loaded, never rewritten);
-    only the trailing small shard, if any, is read (cached) and
-    merged so streaming sinks can't grow the shard count unboundedly
-    (at most one sub-half shard trails, same bound as
-    ``_shard_groups``'s coalescing). This is what makes a
-    1-row INSERT into a 1M-file table a ~KB metadata write AND read:
-    the general ``_commit`` path is O(changed) on writes but still
-    parses the full parent list to regroup; appends provably change
-    nothing, so they skip the regroup entirely."""
-    pm = parent_meta
+    """Commit ``parent ∪ entries`` without expanding the parent's file
+    list — the fast path for APPENDS (r12) and, with no ``entries``,
+    METADATA-ONLY commits (tag / write-mode / DEFAULT / constraint,
+    r13). ``pm`` is the parent manifest PROPER (``_load_manifest_meta``
+    — file_shards unexpanded; a FULL-loaded parent also works, its
+    shards are referenced by name). The parent's shards are referenced
+    BY NAME, never loaded or rewritten; only the trailing small shard,
+    if any, is read (cached) and merged with the new entries so
+    streaming sinks can't grow the shard count unboundedly (at most
+    one sub-half shard trails, same bound as ``_shard_groups``'s
+    coalescing). This is what makes a 1-row INSERT into a 1M-file
+    table a ~KB metadata write AND read, and a tag commit O(1) at any
+    size: the general ``_commit`` path is O(changed) on writes but
+    still parses the full parent list to regroup; these commits
+    provably change no existing entry, so they skip the regroup."""
     if "file_shards" not in pm:
         # inline parent: small table — the general path's cost IS
         # O(new + inline) and it handles the threshold crossing
@@ -590,7 +574,7 @@ def _commit_append(
         manifest["txns"] = pm["txns"]
     names = list(pm["file_shards"])
     tail: list[dict] = list(entries)
-    if names:
+    if names and tail:
         last = _read_shard(spark, f"{table_path}/{MANIFEST_DIR}/{names[-1]}")
         if (
             len(last) < MANIFEST_SHARD_ROWS // 2
@@ -618,6 +602,110 @@ def _commit_append(
             int(pm.get("n_rows_live", pm["n_rows"])) + new_rows
         )
     return _publish(spark, fs, table_path, manifest, final)
+
+
+# Publish attempts per write: the first commit plus up to five rebases
+# onto a newer head before sustained contention refuses the write.
+COMMIT_ATTEMPTS = 6
+
+
+class _Commit:
+    """One write's way through ``_optimistic_commit``: the files it
+    staged (manifest entries under ``data/``, at most one deletion
+    vector under ``_dv/``), the head its manifest is built on, and the
+    manifest it published (None when it published nothing)."""
+
+    def __init__(self, base: dict):
+        self.entries: list[dict] = []
+        self.dv: str | None = None
+        self.head = base
+        self.manifest: dict | None = None
+
+    def discard(self, spark: SparkSession, table_path: str) -> None:
+        fs, _ = _fs(spark, table_path)
+        for e in self.entries:
+            fs.delete(_jpath(spark, f"{table_path}/{DATA_DIR}/{e['name']}"), False)
+        if self.dv:
+            fs.delete(_jpath(spark, f"{table_path}/{DV_DIR}/{self.dv}"), False)
+
+
+def _optimistic_commit(
+    spark: SparkSession,
+    table_path: str,
+    base: dict,
+    stage,
+    child,
+    rebase=None,
+    append: bool = False,
+    validated: dict | None = None,
+) -> _Commit:
+    """The one optimistic-commit loop every staging write publishes
+    through (Iceberg's optimistic-concurrency step). ``stage(c)``
+    writes the commit's files into ``c``; ``child(c)`` builds the
+    manifest to publish over ``c.head``, or returns None when there is
+    nothing to publish (an idempotent replay, a rival that already
+    loaded the same source files). ``append`` publishes through the
+    new-files-only fast path (``_commit_carry``).
+
+    A lost race asks ``rebase(head)`` for the newer head to rebuild on,
+    or None to refuse (without ``rebase`` every race refuses). The
+    loop itself refuses a head whose identity high-water marks moved
+    (the staged ids could collide), re-validates the staged bytes when
+    the head's CHECK set differs from ``validated`` (default: the
+    base's, which staging checked), and gives up after
+    ``COMMIT_ATTEMPTS`` publishes.
+
+    Every exit that did not publish deletes what was staged: nothing
+    can reference those files before the manifest rename, and a
+    ``CowConcurrentWrite`` from ``_commit``/``_publish`` means the
+    rename did not happen. Any other error from the publish leaves the
+    files for vacuum, since the rename may have landed. Content shards
+    are never deleted (see ``_commit``)."""
+    c = _Commit(base)
+    if validated is None:
+        validated = base.get("check_constraints") or {}
+    publishing = False
+    try:
+        stage(c)
+        for _ in range(COMMIT_ATTEMPTS):
+            manifest = child(c)
+            if manifest is None:
+                c.discard(spark, table_path)
+                return c
+            checks = c.head.get("check_constraints") or {}
+            if checks and checks != validated and c.entries:
+                names = [e["name"] for e in c.entries]
+                _validate_constraints(
+                    _read_files(spark, table_path, c.head, names), checks
+                )
+                validated = checks
+            publishing = True
+            try:
+                if append:
+                    _commit_carry(spark, table_path, c.head, manifest, c.entries)
+                else:
+                    _commit(spark, table_path, manifest)
+                c.manifest = manifest
+                return c
+            except CowConcurrentWrite:
+                publishing = False
+                head = rebase(c.head) if rebase is not None else None
+                if head is None:
+                    raise
+                if _identity_moved(c.head, head):
+                    raise CowConcurrentWrite(
+                        f"concurrent write advanced an identity high-water "
+                        f"mark at {table_path}; re-run the statement (its "
+                        "staged values could collide)"
+                    ) from None
+                c.head = head
+        raise CowConcurrentWrite(
+            f"commit retries exhausted under sustained contention at {table_path}"
+        )
+    except BaseException:
+        if not publishing:
+            c.discard(spark, table_path)
+        raise
 
 
 _STATS_TYPES = (
@@ -820,35 +908,6 @@ def _validate_constraints(df: DataFrame, constraints: dict | None) -> None:
         )
 
 
-def _validate_staged_or_clean(
-    spark: SparkSession,
-    table_path: str,
-    m_like: dict,
-    entries: list[dict],
-    constraints: dict | None,
-) -> None:
-    """Enforce CHECK on freshly STAGED files (one read of only the new
-    files) and delete them before re-raising on violation — the rows
-    validated are exactly the bytes that would land, closing the
-    double-evaluation / non-deterministic-source gap of validating the
-    input frame."""
-    if not constraints or not entries:
-        return
-    staged = _read_files(spark, table_path, m_like, [e["name"] for e in entries])
-    try:
-        _validate_constraints(staged, constraints)
-    except BaseException:
-        # clean on ANY validation failure, not just violations: a
-        # malformed/unknown-column constraint expression raises
-        # Parse/AnalysisException here, and the staged files have no
-        # manifest reference — on a not-yet-created table they would
-        # otherwise be unreclaimable orphans (vacuum needs a manifest)
-        fs, _ = _fs(spark, table_path)
-        for e in entries:
-            fs.delete(_jpath(spark, f"{table_path}/{DATA_DIR}/{e['name']}"), False)
-        raise
-
-
 def _apply_generated(df: DataFrame, generated: dict[str, str] | None) -> DataFrame:
     """Overwrite-or-add every generated column as its expression over
     the incoming rows. Recompute-ALWAYS semantics (uniform across
@@ -869,23 +928,23 @@ def _stage_files(
     table_path: str,
     df: DataFrame,
     snap: int,
-    partition_by: list[str] | None = None,
-    bloom_columns: list[str] | None = None,
-    physical_names: dict[str, str] | None = None,
-    generated: dict[str, str] | None = None,
-    bucket_by: tuple[list[str], int] | None = None,
+    layout: dict,
     checks: dict | None = None,
 ) -> list[dict]:
     """Write ``df`` as new immutable data files and return their
     manifest entries (name = path relative to ``data/``, row count,
     per-column min/max stats — the manifest-level pruning index).
+    ``layout`` is the manifest the files are staged for: its
+    partitioning, Bloom columns, physical column names, generated
+    columns and bucket spec shape the write.
     With ``checks`` the staged bytes are ALSO validated against the
     CHECK constraints before returning — fused into the bloom/stats
     value pass when one runs (one columnar job instead of two, r15;
-    guide §1.2), a dedicated single read otherwise — and on violation
-    (or any validation failure) every staged file is deleted before
-    re-raising, exactly the ``_validate_staged_or_clean`` contract.
-    With ``partition_by`` the staging write is ``partitionBy`` so
+    guide §1.2), a dedicated single read otherwise. On ANY failure
+    once the write has started (a violation, a failing stats pass, a
+    refused rename) every staged file is deleted before re-raising:
+    no manifest references them yet.
+    With a partitioned layout the staging write is ``partitionBy`` so
     each file belongs to exactly ONE partition, lands under its
     Hive-style ``col=value/`` directory, and the entry records the
     partition values. Files get snapshot-scoped unique names; the
@@ -895,12 +954,16 @@ def _stage_files(
     min==max values prune like any other column)."""
     from urllib.parse import unquote
 
-    if generated:
-        # the one choke point every write path funnels through: new
-        # bytes can never land with a generated column out of sync
-        # with its expression (all callers pass manifest-schema-typed
-        # frames, so the recomputed type equals the declared type)
-        df = _apply_generated(df, generated)
+    from pyspark.sql.types import StructType
+
+    partition_by = layout.get("partition_by") or []
+    physical_names = _phys_map(layout)
+    bucket_by = _bucket_spec(layout)
+    # the one choke point every write path funnels through: new
+    # bytes can never land with a generated column out of sync
+    # with its expression (all callers pass manifest-schema-typed
+    # frames, so the recomputed type equals the declared type)
+    df = _apply_generated(df, layout.get("generated_columns"))
     if bucket_by:
         # bucketed layout: every row is assigned to bucket
         # pmod(hash(cols), n) — EXACTLY Spark's bucket-id expression
@@ -913,8 +976,7 @@ def _stage_files(
         # commit wrote it; the repartition bounds the write to ~one
         # file per bucket per commit. Computed on LOGICAL names
         # (before the physical rename) like generated expressions.
-        bcols, nb = bucket_by[0], bucket_by[1]
-        bsort = bucket_by[2] if len(bucket_by) > 2 else []
+        bcols, nb, bsort = bucket_by
         df = df.withColumn(
             _BUCKET_COL, F.pmod(F.hash(*[F.col(c) for c in bcols]), F.lit(nb))
         ).repartition(nb, F.col(_BUCKET_COL))
@@ -926,82 +988,81 @@ def _stage_files(
             # compaction (one file per bucket per partition) Spark's
             # bucketed scan reports outputOrdering and SMJs skip their
             # Sort entirely
-            df = df.sortWithinPartitions(
-                *(partition_by or []), _BUCKET_COL, *bsort
-            )
+            df = df.sortWithinPartitions(*partition_by, _BUCKET_COL, *bsort)
     # logical view of the frame (pre-rename, sans the staging-only
     # bucket column) — the schema CHECK constraints evaluate against
-    logical_fields = [f for f in df.schema.fields if f.name != _BUCKET_COL]
+    logical = StructType([f for f in df.schema.fields if f.name != _BUCKET_COL])
+    # write under PHYSICAL names so every file vintage agrees with
+    # the manifest's column mapping (stats/blooms below are then
+    # physical-keyed too, matching pre-rename entries); partition
+    # columns can't be renamed, so partition_by needs no mapping
     if physical_names:
-        # write under PHYSICAL names so every file vintage agrees with
-        # the manifest's column mapping (stats/blooms below are then
-        # physical-keyed too, matching pre-rename entries); partition
-        # columns can't be renamed, so partition_by needs no mapping
         df = df.select(
             *[F.col(c).alias(physical_names.get(c, c)) for c in df.columns]
         )
-        bloom_columns = [
-            physical_names.get(c, c) for c in (bloom_columns or [])
-        ]
+    bloom_columns = [
+        physical_names.get(c, c) for c in layout.get("bloom_columns") or []
+    ]
     fs, _ = _fs(spark, table_path)
     staging = f"{table_path}/_staging-{uuid.uuid4().hex}"
     writer = df.write.mode("overwrite")
-    staging_parts = list(partition_by or []) + ([_BUCKET_COL] if bucket_by else [])
+    staging_parts = list(partition_by) + ([_BUCKET_COL] if bucket_by else [])
     if staging_parts:
         writer = writer.partitionBy(*staging_parts)
-    for c in bloom_columns or []:
+    for c in bloom_columns:
         if c in df.columns:
             # parquet-native row-group blooms INSIDE the data files:
             # the exact predicate scan (and any external parquet
             # reader) gets row-group skipping on the same key even
             # for files the manifest-level filter could not exclude
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-    writer.parquet(staging)
     data_root = f"{table_path}/{DATA_DIR}"
-    fs.mkdirs(_jpath(spark, data_root))
     sroot = _jpath(spark, staging)
-    sprefix = sroot.toUri().getPath().rstrip("/")
     entries: list[dict] = []
     moved: list[str] = []
-    bucket_of: dict[str, int] = {}
-    it = fs.listFiles(sroot, True)
-    while it.hasNext():
-        p = it.next().getPath()
-        if not p.getName().endswith(".parquet"):
-            continue
-        rel_src = p.toUri().getPath()[len(sprefix) :].lstrip("/")
-        reldir = rel_src.rsplit("/", 1)[0] if "/" in rel_src else ""
-        bucket_id: int | None = None
-        if bucket_by:
-            # strip the staging-only bucket dir and carry its id into
-            # the FILE NAME as a Spark bucket suffix (_000NN) — the
-            # exact convention BucketingUtils.getBucketId parses, so a
-            # bucketed_view over these files (or symlinks to them)
-            # reads as a native bucketed table
-            segs = [s for s in reldir.split("/") if s]
-            kept = []
-            for s in segs:
-                if s.startswith(f"{_BUCKET_COL}="):
-                    bucket_id = int(s.split("=", 1)[1])
-                else:
-                    kept.append(s)
-            reldir = "/".join(kept)
-        suffix = f"_{bucket_id:05d}" if bucket_id is not None else ""
-        new_name = f"snap{snap:08d}-{uuid.uuid4().hex[:12]}{suffix}.parquet"
-        rel = f"{reldir}/{new_name}" if reldir else new_name
-        if bucket_id is not None:
-            bucket_of[rel] = bucket_id
-        dest = _jpath(spark, f"{data_root}/{rel}")
-        fs.mkdirs(dest.getParent())
-        if not fs.rename(p, dest):
-            raise IOError(f"failed to move staged file {rel_src}")
-        moved.append(rel)
-    if moved:
+    try:
+        writer.parquet(staging)
+        fs.mkdirs(_jpath(spark, data_root))
+        sprefix = sroot.toUri().getPath().rstrip("/")
+        bucket_of: dict[str, int] = {}
+        it = fs.listFiles(sroot, True)
+        while it.hasNext():
+            p = it.next().getPath()
+            if not p.getName().endswith(".parquet"):
+                continue
+            rel_src = p.toUri().getPath()[len(sprefix) :].lstrip("/")
+            reldir = rel_src.rsplit("/", 1)[0] if "/" in rel_src else ""
+            bucket_id: int | None = None
+            if bucket_by:
+                # strip the staging-only bucket dir and carry its id into
+                # the FILE NAME as a Spark bucket suffix (_000NN) — the
+                # exact convention BucketingUtils.getBucketId parses, so a
+                # bucketed_view over these files (or symlinks to them)
+                # reads as a native bucketed table
+                kept = []
+                for s in (s for s in reldir.split("/") if s):
+                    if s.startswith(f"{_BUCKET_COL}="):
+                        bucket_id = int(s.split("=", 1)[1])
+                    else:
+                        kept.append(s)
+                reldir = "/".join(kept)
+            suffix = f"_{bucket_id:05d}" if bucket_id is not None else ""
+            new_name = f"snap{snap:08d}-{uuid.uuid4().hex[:12]}{suffix}.parquet"
+            rel = f"{reldir}/{new_name}" if reldir else new_name
+            if bucket_id is not None:
+                bucket_of[rel] = bucket_id
+            dest = _jpath(spark, f"{data_root}/{rel}")
+            fs.mkdirs(dest.getParent())
+            if not fs.rename(p, dest):
+                raise IOError(f"failed to move staged file {rel_src}")
+            moved.append(rel)
+        if not moved:
+            return entries
         dtypes = dict(df.dtypes)
         dtypes.pop(_BUCKET_COL, None)  # staging-only, not in any file
         bloom_cols = [
             c
-            for c in (bloom_columns or [])
+            for c in bloom_columns
             if c in df.columns and dtypes.get(c) in _BLOOM_TYPES
         ]
         # CHECK fusion gate: constraint expressions name LOGICAL
@@ -1009,66 +1070,50 @@ def _stage_files(
         # renames the names coincide and validation rides the value
         # pass below; with renames the (rare) mapped read at the end
         # of this function validates instead — correctness first.
-        fuse_ok = not any(l != p for l, p in (physical_names or {}).items())
-        fused_checks = checks if (checks and fuse_ok) else None
-        pschema = None
-        if fused_checks:
-            from pyspark.sql.types import StructType
-
-            # explicit schema so partition columns keep their declared
-            # types under the constraint expressions (no dir inference)
-            pschema = StructType(
-                [f for f in df.schema.fields if f.name != _BUCKET_COL]
-            )
+        fuse_ok = not any(l != p for l, p in physical_names.items())
+        fused_checks = checks if checks and fuse_ok else None
+        # explicit schema so partition columns keep their declared
+        # types under the constraint expressions (no dir inference)
+        pschema = logical if fused_checks else None
         viol: dict[str, int] | None = None
-        try:
-            # stats come from the freshly written parquet FOOTERS — O(files)
-            # driver-side metadata reads, no second pass over the data (the
-            # Iceberg write path); parquet guarantees the footer min/max are
-            # valid BOUNDS even when long binary values are truncated, which
-            # is all pruning soundness needs. Falls back to one distributed
-            # aggregate when the filesystem isn't footer-readable here.
-            by_name = _footer_stats(table_path, data_root, moved, dtypes)
-            if by_name is None:
-                by_name, viol = _spark_file_stats(
-                    spark, data_root, moved, partition_by, dtypes, bloom_cols,
-                    fused_checks, pschema,
-                )
-            elif bloom_cols:
-                # blooms still need a value pass — but only over the bloom
-                # columns (a narrow columnar read), not the whole schema;
-                # CHECK validation rides the same job (r15, guide §1.2)
-                blooms_by_name, viol = _spark_bloom_positions(
-                    spark, data_root, moved, partition_by, bloom_cols,
-                    fused_checks, pschema,
-                )
-                for k, v in by_name.items():
-                    v.update(blooms_by_name.get(k, {}))
-            elif fused_checks:
-                # no value pass to ride: ONE dedicated read of only the
-                # new files (exactly what the former separate validation
-                # call paid; column pruning keeps it narrow)
-                reader = spark.read.schema(pschema)
-                if partition_by:
-                    reader = reader.option("basePath", data_root)
-                _validate_constraints(
-                    reader.parquet(*[f"{data_root}/{mv}" for mv in moved]),
-                    fused_checks,
-                )
-            bad = {k: int(n) for k, n in sorted((viol or {}).items()) if n}
-            if bad:
-                raise CowConstraintViolation(
-                    f"CHECK constraint(s) violated by this write (name: rows): {bad}"
-                )
-        except BaseException:
-            if checks:
-                # the _validate_staged_or_clean contract: on ANY
-                # validation failure the staged files (which no
-                # manifest references yet) must not orphan
-                for mv in moved:
-                    fs.delete(_jpath(spark, f"{data_root}/{mv}"), False)
-                fs.delete(sroot, True)
-            raise
+        # stats come from the freshly written parquet FOOTERS — O(files)
+        # driver-side metadata reads, no second pass over the data (the
+        # Iceberg write path); parquet guarantees the footer min/max are
+        # valid BOUNDS even when long binary values are truncated, which
+        # is all pruning soundness needs. Falls back to one distributed
+        # aggregate when the filesystem isn't footer-readable here.
+        by_name = _footer_stats(table_path, data_root, moved, dtypes)
+        if by_name is None:
+            by_name, viol = _spark_file_stats(
+                spark, data_root, moved, partition_by, dtypes, bloom_cols,
+                fused_checks, pschema,
+            )
+        elif bloom_cols:
+            # blooms still need a value pass — but only over the bloom
+            # columns (a narrow columnar read), not the whole schema;
+            # CHECK validation rides the same job (r15, guide §1.2)
+            blooms_by_name, viol = _spark_bloom_positions(
+                spark, data_root, moved, partition_by, bloom_cols,
+                fused_checks, pschema,
+            )
+            for k, v in by_name.items():
+                v.update(blooms_by_name.get(k, {}))
+        elif fused_checks:
+            # no value pass to ride: ONE dedicated read of only the
+            # new files (exactly what the former separate validation
+            # call paid; column pruning keeps it narrow)
+            reader = spark.read.schema(pschema)
+            if partition_by:
+                reader = reader.option("basePath", data_root)
+            _validate_constraints(
+                reader.parquet(*[f"{data_root}/{mv}" for mv in moved]),
+                fused_checks,
+            )
+        bad = {k: int(n) for k, n in sorted((viol or {}).items()) if n}
+        if bad:
+            raise CowConstraintViolation(
+                f"CHECK constraint(s) violated by this write (name: rows): {bad}"
+            )
         for m in moved:
             entry: dict = {"name": m}
             part_vals: dict[str, str] = {}
@@ -1118,19 +1163,24 @@ def _stage_files(
             if r.get("__blooms"):
                 entry["blooms"] = r["__blooms"]
             entries.append(entry)
-    fs.delete(sroot, True)
-    if checks and moved and not fuse_ok and entries:
-        # renamed-column tables: constraint expressions need the
-        # logical->physical mapped read, which _read_files provides —
-        # one dedicated validation scan (the pre-r15 shape)
-        from pyspark.sql.types import StructType
-
-        m_like = {
-            "schema": StructType(logical_fields).json(),
-            "partition_by": partition_by,
-            "physical_names": physical_names,
-        }
-        _validate_staged_or_clean(spark, table_path, m_like, entries, checks)
+        if checks and not fuse_ok and entries:
+            # renamed-column tables: constraint expressions need the
+            # logical->physical mapped read, which _read_files provides —
+            # one dedicated validation scan (the pre-r15 shape)
+            _validate_constraints(
+                _read_files(
+                    spark, table_path,
+                    {"schema": logical.json(), "physical_names": physical_names},
+                    [e["name"] for e in entries],
+                ),
+                checks,
+            )
+    except BaseException:
+        for mv in moved:
+            fs.delete(_jpath(spark, f"{data_root}/{mv}"), False)
+        raise
+    finally:
+        fs.delete(sroot, True)
     return entries
 
 
@@ -1933,6 +1983,18 @@ def _carried(m: dict) -> dict:
     return out
 
 
+def _child(base: dict, operation: str, **overrides) -> dict:
+    """The manifest of the snapshot after ``base``: the next id, the
+    parent link, ``base``'s carried table state, then ``overrides``."""
+    return {
+        "snapshot_id": base["snapshot_id"] + 1,
+        "parent": base["snapshot_id"],
+        "operation": operation,
+        **_carried(base),
+        **overrides,
+    }
+
+
 def _bucket_spec(m: dict) -> tuple[list[str], int, list[str]] | None:
     """(bucket columns, bucket count, within-bucket sort columns) from
     the manifest, or None."""
@@ -2199,7 +2261,6 @@ def create(
         missing = [c for c in bucket_sort_by if c not in df.columns]
         if missing:
             raise ValueError(f"bucket sort columns not in the data: {missing}")
-    bspec = (bucket_by, num_buckets, bucket_sort_by) if bucket_by else None
     column_defaults = dict(column_defaults or {})
     if column_defaults:
         _validate_column_defaults(spark, df.schema, generated_columns, column_defaults)
@@ -2222,15 +2283,6 @@ def create(
             partition_by, bucket_by, identity_columns,
         )
     snap = 1 if _replace_head is None else _replace_head["snapshot_id"] + 1
-    # validation happens on the STAGED files, not the input frame —
-    # fused into the staging value pass (r15): validating the frame
-    # would evaluate a possibly-expensive source twice, and for a
-    # non-deterministic source (rand(), a changing view) the staged
-    # rows would not be the validated rows
-    files = _stage_files(
-        spark, table_path, df, snap, partition_by, bloom_columns,
-        bucket_by=bspec, checks=check_constraints,
-    )
     manifest = {
         "snapshot_id": snap,
         "parent": None if _replace_head is None else _replace_head["snapshot_id"],
@@ -2239,7 +2291,7 @@ def create(
         "partition_by": partition_by,
         "bloom_columns": bloom_columns,
         "check_constraints": check_constraints,
-        "files": files,
+        "files": [],
         "used_physical": [f.name for f in df.schema.fields],
     }
     if generated_columns:
@@ -2254,7 +2306,6 @@ def create(
         manifest["column_defaults"] = column_defaults
     if identity_columns:
         manifest["identity_columns"] = identity_columns
-        _advance_identity(manifest, manifest, files)
     if _replace_head is not None and _replace_head.get("tags"):
         # tags are SNAPSHOT refs, not layout: the old snapshots stay
         # readable across an in-place REPLACE (time travel / RESTORE
@@ -2265,7 +2316,25 @@ def create(
         # VERSION AS OF '<tag>' and let vacuum delete tagged
         # snapshots' files while their manifests remain readable.
         manifest["tags"] = _replace_head["tags"]
-    return _commit(spark, table_path, manifest)
+
+    def stage(c: _Commit) -> None:
+        # validation happens on the STAGED files, not the input frame —
+        # fused into the staging value pass (r15): validating the frame
+        # would evaluate a possibly-expensive source twice, and for a
+        # non-deterministic source (rand(), a changing view) the staged
+        # rows would not be the validated rows
+        c.entries = _stage_files(
+            spark, table_path, df, snap, manifest, check_constraints
+        )
+
+    def child(c: _Commit) -> dict:
+        manifest["files"] = c.entries
+        _advance_identity(manifest, manifest, c.entries)
+        return manifest
+
+    # a create or replace that loses the race refuses: it never rebases
+    _optimistic_commit(spark, table_path, manifest, stage, child)
+    return snap
 
 
 def create_like(spark: SparkSession, table_path: str, source_path: str) -> int:
@@ -2474,13 +2543,28 @@ def _identity_moved(base: dict, head: dict) -> bool:
     )
 
 
-def _default_fill(m: dict, field) -> "Column":
-    """The INSERT fill for a schema column absent from the input:
-    its declared DEFAULT expression when one exists, else NULL —
-    standard column-list INSERT semantics either way."""
-    d = (m.get("column_defaults") or {}).get(field.name)
-    base = F.expr(d) if d is not None else F.lit(None)
-    return base.cast(field.dataType).alias(field.name)
+def _insert_rows(m: dict, rows: DataFrame, what: str) -> DataFrame:
+    """``rows`` as new rows of ``m``'s table. Identity columns are
+    engine-assigned (GENERATED ALWAYS): explicit values refuse (``what``
+    names the verb in the error) and fresh ones allocate from the
+    high-water mark. Input columns match by name and cast through the
+    manifest schema; a schema column absent from the input fills with
+    its declared DEFAULT (r11) or NULL — standard column-list INSERT
+    semantics."""
+    _refuse_explicit_identity(m, list(rows.columns), what)
+    rows = _apply_identity(m, rows)
+    defaults = m.get("column_defaults") or {}
+
+    def column(f) -> Column:
+        if f.name in rows.columns:
+            c = F.col(f.name)
+        elif f.name in defaults:
+            c = F.expr(defaults[f.name])
+        else:
+            c = F.lit(None)
+        return c.cast(f.dataType).alias(f.name)
+
+    return rows.select(*[column(f) for f in _snapshot_schema(m).fields])
 
 
 def alter_set_write_mode(spark: SparkSession, table_path: str, write_mode: str) -> int:
@@ -2498,14 +2582,10 @@ def alter_set_write_mode(spark: SparkSession, table_path: str, write_mode: str) 
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     if (m.get("write_mode") or "cow") == write_mode:
         return m["snapshot_id"]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"set_write_mode_{write_mode}",
-        **_carried(m),
-        "write_mode": write_mode,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(
+        spark, table_path, m,
+        _child(m, f"set_write_mode_{write_mode}", write_mode=write_mode),
+    )
 
 
 def alter_set_column_default(
@@ -2528,14 +2608,9 @@ def alter_set_column_default(
     _validate_column_defaults(
         spark, _snapshot_schema(m), m.get("generated_columns"), {col: expr}
     )
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"set_default_{col}",
-        **_carried(m),
-        "column_defaults": defaults,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(
+        spark, table_path, m, _child(m, f"set_default_{col}", column_defaults=defaults)
+    )
 
 
 def alter_drop_column_default(
@@ -2551,12 +2626,7 @@ def alter_drop_column_default(
             f"columns: {sorted(defaults) or '(none)'}"
         )
     del defaults[col]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"drop_default_{col}",
-        **_carried(m),
-    }
+    manifest = _child(m, f"drop_default_{col}")
     manifest.pop("column_defaults", None)
     if defaults:
         manifest["column_defaults"] = defaults
@@ -2612,14 +2682,9 @@ def create_tag(
     if tags.get(name) == target:
         return m["snapshot_id"]  # no-op never burns a snapshot
     tags[name] = target
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"create_tag_{name}",
-        **_carried(m),
-        "tags": tags,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(
+        spark, table_path, m, _child(m, f"create_tag_{name}", tags=tags)
+    )
 
 
 def drop_tag(spark: SparkSession, table_path: str, name: str) -> int:
@@ -2634,14 +2699,7 @@ def drop_tag(spark: SparkSession, table_path: str, name: str) -> int:
             f"{sorted(tags) or '(none)'}"
         )
     del tags[name]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"drop_tag_{name}",
-        **_carried(m),
-        "tags": tags,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(spark, table_path, m, _child(m, f"drop_tag_{name}", tags=tags))
 
 
 def tags(spark: SparkSession, table_path: str) -> dict[str, int]:
@@ -3187,13 +3245,7 @@ def alter_add_columns(spark: SparkSession, table_path: str, cols_ddl: str) -> in
     new_fields = StructType.fromDDL(cols_ddl).fields
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     _evolve_schema_inplace(m, new_fields)
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": "add_column",
-        **_carried(m),
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(spark, table_path, m, _child(m, "add_column"))
 
 
 def _evolve_schema_inplace(m: dict, new_fields) -> None:
@@ -3266,15 +3318,12 @@ def _evolve_partition_spec(
     else:
         new_id = max(s["spec_id"] for s in specs) + 1
         specs.append({"spec_id": new_id, "fields": list(new_fields)})
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": operation,
-        **_carried(m),
-        "partition_by": list(new_fields),
-        "partition_specs": specs,
-        "default_spec_id": new_id,
-    }
+    manifest = _child(
+        m, operation,
+        partition_by=list(new_fields),
+        partition_specs=specs,
+        default_spec_id=new_id,
+    )
     return _commit_carry(spark, table_path, m, manifest)
 
 
@@ -3512,8 +3561,7 @@ def reorg_purge(
         if e.get("dv") and e["dv"]["count"] / e["rows"] >= min_dv_ratio
     ]
     if not targets:
-        return {"snapshot_id": m["snapshot_id"], "files_rewritten": 0,
-                "files_untouched": len(m["files"]), "files_written": 0}
+        return _unchanged(m)
     live = _read_entries(spark, table_path, m, targets)
     return _rewrite_commit(
         spark, table_path, m, {e["name"] for e in targets}, live, None, "reorg_purge"
@@ -3554,8 +3602,10 @@ def _rebase_head(
 ) -> dict | None:
     """Delta-style conflict resolution for a predicate DML that lost
     the optimistic-commit race: the HEAD manifest if rebasing onto it
-    is PROVABLY safe, else None (caller re-raises). Safe means the
-    winner's commit cannot interact with our statement:
+    is PROVABLY safe, else None (caller re-raises). A statement with
+    neither a predicate (``condition_str``) nor a key envelope
+    (``conjuncts``) never rebases. Safe means the winner's commit
+    cannot interact with our statement:
 
     - table metadata unchanged (schema, partitioning, blooms,
       constraints, column mapping, write mode) — a concurrent ALTER
@@ -3573,6 +3623,8 @@ def _rebase_head(
     Winner-REMOVED or winner-modified files outside our affected set
     are safe by construction: removal only deletes rows (cannot
     create a match), and modification = remove + stat-checked add."""
+    if condition_str is None and conjuncts is None:
+        return None
     head = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
     for k in (
         "schema",
@@ -3608,9 +3660,18 @@ def _rebase_head(
             # conflict — sound.
             if not conjuncts or any(_file_may_match(f, conjuncts) for f in added):
                 return None
-        else:
-            return None
     return head
+
+
+def _unchanged(m: dict, **extra) -> dict:
+    """The stats of a write that commits nothing over ``m``."""
+    return {
+        "snapshot_id": m["snapshot_id"],
+        "files_rewritten": 0,
+        "files_untouched": len(m["files"]),
+        "files_written": 0,
+        **extra,
+    }
 
 
 def _rewrite_commit(
@@ -3629,9 +3690,7 @@ def _rewrite_commit(
     DML) or ``rebase_conjuncts`` (MERGE's source-key envelope) opt
     into conflict rebase on a lost commit race — see _rebase_head."""
     snap = m["snapshot_id"] + 1
-    parts = m.get("partition_by") or []
-    blooms = m.get("bloom_columns") or []
-    checks = m.get("check_constraints") or {}
+    checks = m.get("check_constraints") or None
     # CHECK enforcement happens on the STAGED files (one read of only
     # the new files, after staging — the validated rows are exactly
     # the bytes that land), and only for content-introducing frames:
@@ -3644,8 +3703,8 @@ def _rewrite_commit(
         "replace_where",
         "reorg_purge",  # carries already-valid live rows, like compact
     )
-    new_entries: list[dict] = []
-    try:
+
+    def stage(c: _Commit) -> None:
         if (
             rewritten is not None
             and appended is not None
@@ -3660,92 +3719,46 @@ def _rewrite_commit(
             # MERGE always lands here (both frames carry the manifest
             # schema after the source cast); both sides introduce content;
             # CHECK validation rides the staging value pass (r15)
-            new_entries += _stage_files(
-                spark, table_path, rewritten.unionByName(appended), snap, parts,
-                blooms, _phys_map(m), m.get("generated_columns"), _bucket_spec(m),
-                checks=checks or None,
+            c.entries += _stage_files(
+                spark, table_path, rewritten.unionByName(appended), snap, m, checks
             )
-        else:
-            if rewritten is not None:
-                new_entries += _stage_files(
-                    spark, table_path, rewritten, snap, parts, blooms, _phys_map(m),
-                    m.get("generated_columns"), _bucket_spec(m),
-                    # delete/compact/replace_where survivors were valid at
-                    # their own commit — validation-exempt
-                    checks=(checks or None) if rewritten_introduces else None,
-                )
-            if appended is not None:
-                new_entries += _stage_files(
-                    spark, table_path, appended, snap, parts, blooms, _phys_map(m),
-                    m.get("generated_columns"), _bucket_spec(m),
-                    checks=checks or None,
-                )
-    except CowConstraintViolation:
-        # the commit is aborted; the raising _stage_files cleaned its
-        # own staged files — also clean any files staged by EARLIER
-        # calls in this commit (e.g. replace_where's validation-exempt
-        # survivor rewrites) so nothing orphans
-        fs, _ = _fs(spark, table_path)
-        for e in new_entries:
-            fs.delete(_jpath(spark, f"{table_path}/{DATA_DIR}/{e['name']}"), False)
-        raise
-    untouched = [f for f in m["files"] if f["name"] not in affected]
-    manifest = {
-        "snapshot_id": snap,
-        "parent": m["snapshot_id"],
-        "operation": operation,
-        **_carried(m),
-        "files": untouched + new_entries,
-    }
-    _advance_identity(manifest, m, new_entries)
-    if not untouched and manifest.get("widened_columns"):
-        # a FULL rewrite (compact of every file): all surviving bytes
-        # were just staged under the current schema — no pre-widening
-        # vintage remains, so the raw-scan refusal marker lifts
-        manifest.pop("widened_columns", None)
-    base = m
-    for _attempt in range(6):
-        try:
-            _commit(spark, table_path, manifest)
-            stats = {
-                "snapshot_id": manifest["snapshot_id"],
-                "files_rewritten": len(affected),
-                "files_untouched": len(manifest["files"]) - len(new_entries),
-                "files_written": len(new_entries),
-            }
-            if base is not m:
-                stats["rebased"] = True
-            return stats
-        except CowConcurrentWrite:
-            if rebase_condition is None and rebase_conjuncts is None:
-                raise
-            head = _rebase_head(
-                spark, table_path, base, affected,
-                rebase_condition, rebase_conjuncts,
+            return
+        if rewritten is not None:
+            # delete/compact/replace_where survivors were valid at
+            # their own commit — validation-exempt
+            c.entries += _stage_files(
+                spark, table_path, rewritten, snap, m,
+                checks if rewritten_introduces else None,
             )
-            if head is None:
-                raise
-            if _identity_moved(base, head):
-                # the winner allocated identity values past the mark
-                # these staged files were assigned from — a rebase
-                # would publish possibly-duplicate ids
-                raise CowConcurrentWrite(
-                    f"concurrent write advanced an identity high-water "
-                    f"mark at {table_path}; re-run the statement"
-                )
-            base = head
-            manifest = {
-                "snapshot_id": head["snapshot_id"] + 1,
-                "parent": head["snapshot_id"],
-                "operation": operation,
-                **_carried(head),
-                "files": [f for f in head["files"] if f["name"] not in affected]
-                + new_entries,
-            }
-            _advance_identity(manifest, head, new_entries)
-    raise CowConcurrentWrite(
-        f"rebase retries exhausted under sustained contention at {table_path}"
+        if appended is not None:
+            c.entries += _stage_files(spark, table_path, appended, snap, m, checks)
+
+    def child(c: _Commit) -> dict:
+        untouched = [f for f in c.head["files"] if f["name"] not in affected]
+        manifest = _child(c.head, operation, files=untouched + c.entries)
+        _advance_identity(manifest, c.head, c.entries)
+        if not untouched:
+            # a FULL rewrite (compact of every file): all surviving bytes
+            # were just staged under the current schema — no pre-widening
+            # vintage remains, so the raw-scan refusal marker lifts
+            manifest.pop("widened_columns", None)
+        return manifest
+
+    c = _optimistic_commit(
+        spark, table_path, m, stage, child,
+        lambda head: _rebase_head(
+            spark, table_path, head, affected, rebase_condition, rebase_conjuncts
+        ),
     )
+    stats = {
+        "snapshot_id": c.manifest["snapshot_id"],
+        "files_rewritten": len(affected),
+        "files_untouched": len(c.manifest["files"]) - len(c.entries),
+        "files_written": len(c.entries),
+    }
+    if c.head is not m:
+        stats["rebased"] = True
+    return stats
 
 
 def _resolve_mode(m: dict, mode: str | None) -> str:
@@ -3767,29 +3780,27 @@ def _write_dv_file(spark: SparkSession, table_path: str, dv_df: DataFrame, snap:
     the module docstring). Sorted by (file, pos) so parquet row-group
     stats make the per-file probe a contiguous range."""
     staging = f"{table_path}/_staging-dv-{uuid.uuid4().hex}"
-    (
-        dv_df.select("file", "pos")
-        .repartition(1)
-        .sortWithinPartitions("file", "pos")
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
     fs, _ = _fs(spark, table_path)
-    fs.mkdirs(_jpath(spark, f"{table_path}/{DV_DIR}"))
     name = f"dv-snap{snap:08d}-{uuid.uuid4().hex[:12]}.parquet"
-    moved = False
-    it = fs.listFiles(_jpath(spark, staging), False)
-    while it.hasNext():
-        p = it.next().getPath()
-        if p.getName().endswith(".parquet"):
-            if not fs.rename(p, _jpath(spark, f"{table_path}/{DV_DIR}/{name}")):
-                raise IOError(f"failed to publish deletion vector {name}")
-            moved = True
-            break
-    fs.delete(_jpath(spark, staging), True)
-    if not moved:
+    try:
+        (
+            dv_df.select("file", "pos")
+            .repartition(1)
+            .sortWithinPartitions("file", "pos")
+            .write.mode("overwrite")
+            .parquet(staging)
+        )
+        fs.mkdirs(_jpath(spark, f"{table_path}/{DV_DIR}"))
+        it = fs.listFiles(_jpath(spark, staging), False)
+        while it.hasNext():
+            p = it.next().getPath()
+            if p.getName().endswith(".parquet"):
+                if not fs.rename(p, _jpath(spark, f"{table_path}/{DV_DIR}/{name}")):
+                    raise IOError(f"failed to publish deletion vector {name}")
+                return name
         raise IOError("deletion-vector staging produced no parquet file")
-    return name
+    finally:
+        fs.delete(_jpath(spark, staging), True)
 
 
 def _mor_commit(
@@ -3809,18 +3820,9 @@ def _mor_commit(
     (no point carrying an entry just to mask 100% of it). UPDATE
     additionally appends the transformed rows as new files, CHECK-
     validated like any content-introducing write."""
-    snap = m["snapshot_id"] + 1
     candidates = stats_candidate_files(m, condition_str)
-    noop = {
-        "snapshot_id": m["snapshot_id"],
-        "files_rewritten": 0,
-        "files_untouched": len(m["files"]),
-        "files_written": 0,
-        "files_dv": 0,
-        "rows_deleted": 0,
-    }
     if not candidates:
-        return noop
+        return _unchanged(m, files_dv=0, rows_deleted=0)
     # live rows only: positions already masked by an earlier MOR
     # commit must not be re-recorded (the per-file union below would
     # double-count them against the full-file-deletion check)
@@ -3849,12 +3851,9 @@ def _mor_commit(
         )
     else:
         appended = None
-    return (
-        _mor_assemble(
-            spark, table_path, m, new_pos, appended, operation,
-            rebase_condition=condition_str,
-        )
-        or noop
+    return _mor_assemble(
+        spark, table_path, m, new_pos, appended, operation,
+        rebase_condition=condition_str,
     )
 
 
@@ -3866,14 +3865,14 @@ def _mor_assemble(
     appended: DataFrame | None,
     operation: str,
     rebase_condition: str | None = None,
-) -> dict | None:
+) -> dict:
     """Shared MOR commit assembly: ``new_pos`` = (file basename, pos)
     of the rows this commit deletes (all must be LIVE under ``m``),
     ``appended`` = optional replacement/new rows to stage as fresh
     files. Writes the commit's DV file (old positions of re-affected
     files folded in), drops 100%-deleted entries, stages + CHECK-
-    validates the appended frame, commits. None when nothing matched
-    (caller supplies its no-op result)."""
+    validates the appended frame, commits. Commits nothing when
+    nothing matched."""
     snap = m["snapshot_id"] + 1
     # r14 (guide §2.4/§5): new_pos feeds BOTH the per-file count probe
     # and the DV write (and derives from the full match scan / merge
@@ -3885,133 +3884,85 @@ def _mor_assemble(
 
     new_pos = new_pos.select("file", "pos").localCheckpoint(eager=True)
     try:
-        return _mor_assemble_inner(
-            spark, table_path, m, new_pos, appended, operation,
-            rebase_condition, snap,
+        new_counts = {
+            r["file"]: r["n"]
+            for r in new_pos.groupBy("file").agg(F.count("*").alias("n")).collect()
+        }
+        unchanged = _unchanged(m, files_dv=0, rows_deleted=0)
+        if not new_counts and appended is None:
+            return unchanged
+        affected = [
+            e for e in m["files"] if e["name"].rsplit("/", 1)[-1] in new_counts
+        ]
+        gone: set[str] = set()  # entries whose every live row is now deleted
+        kept_affected: list[dict] = []
+        for e in affected:
+            base = e["name"].rsplit("/", 1)[-1]
+            total = new_counts[base] + ((e.get("dv") or {}).get("count") or 0)
+            if total >= e["rows"]:
+                gone.add(e["name"])
+            else:
+                kept_affected.append((e, total))
+        affected_names = {e["name"] for e in affected}
+
+        def stage(c: _Commit) -> None:
+            if kept_affected:
+                kept_bases = [e["name"].rsplit("/", 1)[-1] for e, _ in kept_affected]
+                dv_df = new_pos.filter(F.col("file").isin(kept_bases))
+                old_pos = _dv_positions_df(
+                    spark, table_path, [e for e, _ in kept_affected if e.get("dv")]
+                )
+                if old_pos is not None:
+                    dv_df = dv_df.unionAll(old_pos)
+                c.dv = _write_dv_file(spark, table_path, dv_df, snap)
+            if appended is not None:
+                # CHECK validation rides the staging value pass (r15)
+                c.entries = _stage_files(
+                    spark, table_path, appended, snap, m,
+                    m.get("check_constraints") or None,
+                )
+
+        def child(c: _Commit) -> dict | None:
+            if not new_counts and not c.entries:
+                return None  # merge matched nothing and inserted nothing
+            ours = [
+                {**e, "dv": {"name": c.dv, "count": total}}
+                for e, total in kept_affected
+            ]
+            manifest = _child(
+                c.head, operation,
+                files=[e for e in c.head["files"] if e["name"] not in affected_names]
+                + ours
+                + c.entries,
+            )
+            _advance_identity(manifest, c.head, c.entries)
+            return manifest
+
+        c = _optimistic_commit(
+            spark, table_path, m, stage, child,
+            lambda head: _rebase_head(
+                spark, table_path, head, affected_names, rebase_condition
+            ),
         )
+        if c.manifest is None:
+            return unchanged
+        stats = {
+            "snapshot_id": c.manifest["snapshot_id"],
+            "files_rewritten": 0,
+            "files_untouched": len(c.manifest["files"])
+            - len(kept_affected)
+            - len(c.entries),
+            "files_written": len(c.entries),
+            "files_dv": len(kept_affected),
+            "files_removed": len(gone),
+            "rows_deleted": int(sum(new_counts.values())),
+            "dv_file": c.dv,
+        }
+        if c.head is not m:
+            stats["rebased"] = True
+        return stats
     finally:
         free_local_checkpoints(new_pos)
-
-
-def _mor_assemble_inner(
-    spark: SparkSession,
-    table_path: str,
-    m: dict,
-    new_pos: DataFrame,
-    appended: DataFrame | None,
-    operation: str,
-    rebase_condition: str | None,
-    snap: int,
-) -> dict | None:
-    new_counts = {
-        r["file"]: r["n"]
-        for r in new_pos.groupBy("file").agg(F.count("*").alias("n")).collect()
-    }
-    if not new_counts and appended is None:
-        return None
-    affected = [
-        e for e in m["files"] if e["name"].rsplit("/", 1)[-1] in new_counts
-    ]
-    gone: set[str] = set()  # entries whose every live row is now deleted
-    kept_affected: list[dict] = []
-    for e in affected:
-        base = e["name"].rsplit("/", 1)[-1]
-        total = new_counts[base] + ((e.get("dv") or {}).get("count") or 0)
-        if total >= e["rows"]:
-            gone.add(e["name"])
-        else:
-            kept_affected.append((e, total))
-    dv_name = None
-    if kept_affected:
-        kept_bases = [e["name"].rsplit("/", 1)[-1] for e, _ in kept_affected]
-        dv_df = new_pos.filter(F.col("file").isin(kept_bases))
-        old_pos = _dv_positions_df(
-            spark, table_path, [e for e, _ in kept_affected if e.get("dv")]
-        )
-        if old_pos is not None:
-            dv_df = dv_df.unionAll(old_pos)
-        dv_name = _write_dv_file(spark, table_path, dv_df, snap)
-    new_entries: list[dict] = []
-    if appended is not None:
-        try:
-            # CHECK validation rides the staging value pass (r15)
-            new_entries = _stage_files(
-                spark,
-                table_path,
-                appended,
-                snap,
-                m.get("partition_by") or [],
-                m.get("bloom_columns") or [],
-                _phys_map(m),
-                m.get("generated_columns"),
-                _bucket_spec(m),
-                checks=m.get("check_constraints") or None,
-            )
-        except CowConstraintViolation:
-            if dv_name:  # abort: the staged DV must not orphan
-                fs, _ = _fs(spark, table_path)
-                fs.delete(_jpath(spark, f"{table_path}/{DV_DIR}/{dv_name}"), False)
-            raise
-    if not new_counts and not new_entries:
-        return None  # merge matched nothing and inserted nothing
-    affected_names = {e["name"] for e in affected}
-    ours = []
-    for e, total in kept_affected:
-        e2 = dict(e)
-        e2["dv"] = {"name": dv_name, "count": total}
-        ours.append(e2)
-    base = m
-    manifest = {
-        "snapshot_id": snap,
-        "parent": m["snapshot_id"],
-        "operation": operation,
-        **_carried(m),
-        "files": [e for e in m["files"] if e["name"] not in affected_names]
-        + ours
-        + new_entries,
-    }
-    _advance_identity(manifest, m, new_entries)
-    for _attempt in range(6):
-        try:
-            _commit(spark, table_path, manifest)
-            stats = {
-                "snapshot_id": manifest["snapshot_id"],
-                "files_rewritten": 0,
-                "files_untouched": len(manifest["files"])
-                - len(ours)
-                - len(new_entries),
-                "files_written": len(new_entries),
-                "files_dv": len(kept_affected),
-                "files_removed": len(gone),
-                "rows_deleted": int(sum(new_counts.values())),
-                "dv_file": dv_name,
-            }
-            if base is not m:
-                stats["rebased"] = True
-            return stats
-        except CowConcurrentWrite:
-            if rebase_condition is None:
-                raise
-            head = _rebase_head(
-                spark, table_path, base, affected_names, rebase_condition
-            )
-            if head is None:
-                raise
-            base = head
-            manifest = {
-                "snapshot_id": head["snapshot_id"] + 1,
-                "parent": head["snapshot_id"],
-                "operation": operation,
-                **_carried(head),
-                "files": [
-                    e for e in head["files"] if e["name"] not in affected_names
-                ]
-                + ours
-                + new_entries,
-            }
-    raise CowConcurrentWrite(
-        f"rebase retries exhausted under sustained contention at {table_path}"
-    )
 
 
 def delete(
@@ -4033,8 +3984,7 @@ def delete(
         return _mor_commit(spark, table_path, m, cond, condition, None, "mor_delete")
     affected = _affected_files(spark, table_path, m, cond, condition)
     if not affected:
-        return {"snapshot_id": m["snapshot_id"], "files_rewritten": 0,
-                "files_untouched": len(m["files"]), "files_written": 0}
+        return _unchanged(m)
     # SQL DELETE removes rows where the predicate is TRUE and KEEPS
     # rows where it is NULL; a bare ``filter(~cond)`` would drop the
     # NULL rows too (three-valued logic) — e.g. "DELETE WHERE
@@ -4081,18 +4031,7 @@ def insert_overwrite_dynamic(
             "vintages first"
         )
     schema = _snapshot_schema(m)
-    _refuse_explicit_identity(
-        m, list(rows.columns), "inserted by dynamic overwrite"
-    )
-    rows = _apply_identity(m, rows)
-    rows = rows.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in rows.columns
-            else _default_fill(m, f)
-            for f in schema.fields
-        ]
-    )
+    rows = _insert_rows(m, rows, "inserted by dynamic overwrite")
     # generated partition columns materialize before the distinct so
     # the replaced-partition set matches what staging will write
     rows = _apply_generated(rows, m.get("generated_columns"))
@@ -4101,12 +4040,7 @@ def insert_overwrite_dynamic(
         for r in rows.select(*parts).distinct().collect()
     }
     if not touched:
-        return {
-            "snapshot_id": m["snapshot_id"],
-            "files_rewritten": 0,
-            "files_untouched": len(m["files"]),
-            "files_written": 0,
-        }
+        return _unchanged(m)
 
     # membership testing compares typed payload values (_stat_val)
     # against typed partition stats (min==max==the value). A partition
@@ -4173,22 +4107,12 @@ def replace_where(
     it is what keeps "reload day X" from silently smuggling day-Y
     rows past the predicate everyone queries by."""
     m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
-    schema = _snapshot_schema(m)
     cond = F.expr(condition)
     # content-introducing path: same identity + DEFAULT semantics as
     # append (explicit identity values refuse, fresh ones allocate,
     # omitted defaulted columns fill — Spark 3.4 applies defaults to
     # INSERT ... REPLACE WHERE too)
-    _refuse_explicit_identity(m, list(rows.columns), "inserted by replace_where")
-    rows = _apply_identity(m, rows)
-    rows = rows.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in rows.columns
-            else _default_fill(m, f)
-            for f in schema.fields
-        ]
-    )
+    rows = _insert_rows(m, rows, "inserted by replace_where")
     if validate:
         bad = rows.filter(~F.coalesce(cond, F.lit(False))).count()
         if bad:
@@ -4238,8 +4162,7 @@ def update(
         )
     affected = _affected_files(spark, table_path, m, cond, condition)
     if not affected:
-        return {"snapshot_id": m["snapshot_id"], "files_rewritten": 0,
-                "files_untouched": len(m["files"]), "files_written": 0}
+        return _unchanged(m)
     aff_df = _read_entries(spark, table_path, m, _entries_for(m, affected))
     cols = [
         F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
@@ -4989,25 +4912,11 @@ def _merge_impl(
             stats = _rewrite_commit(
                 spark, table_path, m, set(), None, appended, "mor_merge",
                 rebase_conjuncts=rebase,
-            ) if appended is not None else None
-            if stats is None:
-                stats = {
-                    "snapshot_id": m["snapshot_id"],
-                    "files_rewritten": 0,
-                    "files_untouched": len(m["files"]),
-                    "files_written": 0,
-                }
+            ) if appended is not None else _unchanged(m)
         else:
             stats = _mor_assemble(
                 spark, table_path, m, mor_pos, appended, "mor_merge"
-            ) or {
-                "snapshot_id": m["snapshot_id"],
-                "files_rewritten": 0,
-                "files_untouched": len(m["files"]),
-                "files_written": 0,
-                "files_dv": 0,
-                "rows_deleted": 0,
-            }
+            )
     else:
         stats = _rewrite_commit(
             spark, table_path, m,
@@ -5025,7 +4934,6 @@ def append(
     spark: SparkSession,
     table_path: str,
     rows: DataFrame,
-    max_retries: int = 5,
     txn_app_id: str | None = None,
     txn_version: int | None = None,
     merge_schema: bool = False,
@@ -5045,9 +4953,9 @@ def append(
     retried here automatically (reload the head, re-point parent,
     commit; the staged files are reused, nothing recomputes). This is
     the Iceberg/Delta fast-append loop that lets many writers feed
-    one table. DELETE/UPDATE/MERGE deliberately do NOT auto-retry:
-    their affected-file detection may be invalidated by the winner,
-    so the caller must re-run the statement.
+    one table. DELETE/UPDATE/MERGE rebase only when the winner
+    provably left what they read alone (``_rebase_head``); otherwise
+    the caller must re-run the statement.
 
     Idempotent retries: pass ``txn_app_id`` + ``txn_version`` (Delta's
     ``txnAppId``/``txnVersion`` options) and the commit records
@@ -5065,22 +4973,23 @@ def append(
     # the reference's most-emitted verb flat-cost on huge tables
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
 
-    def _replayed(head: dict) -> dict | None:
-        if txn_app_id is None:
-            return None
-        if int((head.get("txns") or {}).get(txn_app_id, -(2**63))) >= txn_version:
-            return {
-                "snapshot_id": head["snapshot_id"],
-                "files_rewritten": 0,
-                "files_untouched": _n_files(spark, table_path, head),
-                "files_written": 0,
-                "replayed": True,
-            }
-        return None
+    def _replayed(head: dict) -> bool:
+        seen = (head.get("txns") or {}).get(txn_app_id, -(2**63))
+        return txn_app_id is not None and int(seen) >= txn_version
 
-    skip = _replayed(m)
-    if skip is not None:
-        return skip
+    def _stats(head: dict, snapshot_id: int, written: int) -> dict:
+        out = {
+            "snapshot_id": snapshot_id,
+            "files_rewritten": 0,
+            "files_untouched": _n_files(spark, table_path, head),
+            "files_written": written,
+        }
+        if snapshot_id == head["snapshot_id"]:  # nothing published
+            out["replayed"] = True
+        return out
+
+    if _replayed(m):
+        return _stats(m, m["snapshot_id"], 0)
     evo: dict | None = None
     base_keys: dict | None = None
     if merge_schema:
@@ -5096,121 +5005,52 @@ def append(
             if f.name not in tgt
         ]
         if new_fields:
-            base_keys = {
-                "schema": m["schema"],
-                "physical_names": m.get("physical_names"),
-                "used_physical": m.get("used_physical"),
-            }
+            evolved = ("schema", "physical_names", "used_physical")
+            base_keys = {k: m.get(k) for k in evolved}
             _evolve_schema_inplace(m, new_fields)
-            evo = {
-                "schema": m["schema"],
-                "physical_names": m.get("physical_names"),
-                "used_physical": m.get("used_physical"),
-            }
-    schema = _snapshot_schema(m)
-    # identity columns are engine-assigned (GENERATED ALWAYS): refuse
-    # explicit values, allocate fresh ones from the high-water mark
-    _refuse_explicit_identity(m, list(rows.columns), "inserted")
-    rows = _apply_identity(m, rows)
-    # schema columns absent from the input fill with their declared
-    # DEFAULT (r11) or NULL — standard INSERT column-list semantics
-    cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        if f.name in rows.columns
-        else _default_fill(m, f)
-        for f in schema.fields
-    ]
-    parts = m.get("partition_by") or []
-    casted = rows.select(*cols)
-    # the STAGED bytes are validated inside the staging value pass
-    # (r15 — see _stage_files); the retry loop below still re-validates
-    # if a concurrent ADD CONSTRAINT lands during the commit window
-    validated_for = m.get("check_constraints") or {}
-    new_entries = _stage_files(
-        spark,
-        table_path,
-        casted,
-        m["snapshot_id"] + 1,
-        parts,
-        m.get("bloom_columns") or [],
-        _phys_map(m),
-        m.get("generated_columns"),
-        _bucket_spec(m),
-        checks=validated_for or None,
-    )
-    last_err: Exception | None = None
-    for _attempt in range(max_retries + 1):
-        cur_checks = m.get("check_constraints") or {}
-        if cur_checks != validated_for:
-            # a concurrent ADD CONSTRAINT won a race during our retry
-            # window: the reloaded manifest carries constraints these
-            # staged rows were never checked against — re-validate
-            # before adopting them (else the commit would publish
-            # unvalidated rows under an active CHECK)
-            _validate_staged_or_clean(spark, table_path, m, new_entries, cur_checks)
-            validated_for = cur_checks
-        skip = _replayed(m)
-        if skip is not None:
+            evo = {k: m.get(k) for k in evolved}
+    casted = _insert_rows(m, rows, "inserted")
+
+    def stage(c: _Commit) -> None:
+        # the STAGED bytes are validated inside the staging value pass
+        # (r15 — see _stage_files); the commit loop re-validates if a
+        # concurrent ADD CONSTRAINT lands during the commit window
+        c.entries = _stage_files(
+            spark, table_path, casted, m["snapshot_id"] + 1, m,
+            m.get("check_constraints") or None,
+        )
+
+    def child(c: _Commit) -> dict | None:
+        if _replayed(c.head):
             # a rival writer of the SAME app committed this version
-            # while we were staging: drop our duplicate staged files
-            fs, _ = _fs(spark, table_path)
-            for e in new_entries:
-                fs.delete(_jpath(spark, f"{table_path}/data/{e['name']}"), False)
-            return skip
-        manifest = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent": m["snapshot_id"],
-            "operation": "append",
-            **_carried(m),
-            "check_constraints": cur_checks,
-        }
-        _advance_identity(manifest, m, new_entries)
+            # while we were staging: our staged files are duplicates
+            return None
+        manifest = _child(c.head, "append")
+        _advance_identity(manifest, c.head, c.entries)
         if txn_app_id is not None:
-            manifest["txns"] = {**(m.get("txns") or {}), txn_app_id: int(txn_version)}
-        try:
-            _commit_append(spark, table_path, m, manifest, new_entries)
-            return {
-                "snapshot_id": manifest["snapshot_id"],
-                "files_rewritten": 0,
-                "files_untouched": _n_files(spark, table_path, m),
-                "files_written": len(new_entries),
+            manifest["txns"] = {
+                **(c.head.get("txns") or {}), txn_app_id: int(txn_version)
             }
-        except CowConcurrentWrite as e:
-            last_err = e
-            head = _load_manifest_meta(
-                spark, table_path, current_snapshot(spark, table_path)
-            )
-            if _identity_moved(m, head):
-                # the winner allocated identity values past the mark
-                # these staged files were assigned from — silently
-                # retrying could publish DUPLICATE ids; re-run instead
-                raise CowConcurrentWrite(
-                    f"concurrent write advanced an identity high-water "
-                    f"mark at {table_path}; re-run the INSERT (its "
-                    "staged values could collide)"
-                ) from e
-            if evo is not None:
-                # staged parquet bytes were written under THIS call's
-                # evolved physical mapping — a concurrent schema/mapping
-                # change makes re-pointing unsafe (re-deriving the
-                # evolution could mint different physical names than
-                # the staged files carry), so refuse; otherwise
-                # transplant the evolution onto the fresh head
-                if (
-                    head.get("schema") != base_keys["schema"]
-                    or head.get("physical_names") != base_keys["physical_names"]
-                    or head.get("used_physical") != base_keys["used_physical"]
-                ):
-                    raise CowConcurrentWrite(
-                        f"concurrent schema change during a merge-schema "
-                        f"append at {table_path}; re-run the INSERT"
-                    ) from e
-                head["schema"] = evo["schema"]
-                head["used_physical"] = evo["used_physical"]
-                if evo["physical_names"]:
-                    head["physical_names"] = evo["physical_names"]
-            m = head
-    raise last_err  # exhausted retries under sustained contention
+        return manifest
+
+    def rebase(_base: dict) -> dict | None:
+        head = table_head_meta(spark, table_path)
+        if evo is not None:
+            # staged parquet bytes were written under THIS call's
+            # evolved physical mapping — a concurrent schema/mapping
+            # change makes re-pointing unsafe (re-deriving the
+            # evolution could mint different physical names than
+            # the staged files carry), so refuse; otherwise
+            # transplant the evolution onto the fresh head
+            if any(head.get(k) != v for k, v in base_keys.items()):
+                return None
+            head.update({k: v for k, v in evo.items() if v})
+        return head
+
+    c = _optimistic_commit(spark, table_path, m, stage, child, rebase, append=True)
+    if c.manifest is None:
+        return _stats(c.head, c.head["snapshot_id"], 0)
+    return _stats(c.head, c.manifest["snapshot_id"], len(c.entries))
 
 
 # Formats COPY INTO can load. XLSX stays on the interactive ingest
@@ -5330,7 +5170,6 @@ def copy_into(
     pattern: str | None = None,
     format_options: dict | None = None,
     force: bool = False,
-    max_retries: int = 5,
 ) -> dict:
     """Idempotent bulk file loading — Delta's COPY INTO. Loads every
     file under ``source`` (optionally glob-filtered by ``pattern``)
@@ -5359,14 +5198,39 @@ def copy_into(
     generated columns recompute, identity columns are engine-assigned
     (explicit values refused), CHECK constraints validate the staged
     bytes. Data cost is O(new files); commit metadata is the append
-    fast path (O(new files), ``_commit_append``)."""
-    from pyspark.sql.types import StructType
+    fast path (O(new files), ``_commit_carry``).
 
+    A rival COPY INTO that publishes some of the same files while this
+    one stages would make it load them twice: the attempt drops what it
+    staged and restarts against the new registry, at most
+    ``COMMIT_ATTEMPTS`` times."""
     fmt = (file_format or "").lower()
     if fmt not in COPY_FORMATS:
         raise ValueError(
             f"COPY INTO FILEFORMAT must be one of {COPY_FORMATS}: {file_format!r}"
         )
+    for _ in range(COMMIT_ATTEMPTS):
+        out = _copy_into_once(
+            spark, table_path, source, fmt, pattern, format_options, force
+        )
+        if out is not None:
+            return out
+    raise CowConcurrentWrite(f"concurrent COPY INTO contention at {table_path}; re-run")
+
+
+def _copy_into_once(
+    spark: SparkSession,
+    table_path: str,
+    source: str,
+    fmt: str,
+    pattern: str | None,
+    format_options: dict | None,
+    force: bool,
+) -> dict | None:
+    """One COPY INTO attempt against the current head; None when a
+    rival load of the same files won the race (see ``copy_into``)."""
+    from pyspark.sql.types import StructType
+
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     listed = _list_copy_source(spark, source, pattern)
     loaded = {e["path"] for e in _copy_registry(spark, table_path, m)}
@@ -5430,100 +5294,43 @@ def copy_into(
             )
     else:
         rows = spark.read.format(fmt).options(**opts).load(paths)
-    _refuse_explicit_identity(m, list(rows.columns), "loaded by COPY INTO")
-    rows = _apply_identity(m, rows)
-    cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        if f.name in rows.columns
-        else _default_fill(m, f)
-        for f in schema.fields
-    ]
-    # staged bytes validated inside the staging value pass (r15)
-    validated_for = m.get("check_constraints") or {}
-    new_entries = _stage_files(
-        spark,
-        table_path,
-        rows.select(*cols),
-        m["snapshot_id"] + 1,
-        m.get("partition_by") or [],
-        m.get("bloom_columns") or [],
-        _phys_map(m),
-        m.get("generated_columns"),
-        _bucket_spec(m),
-        checks=validated_for or None,
-    )
-    rows_loaded = sum(e["rows"] for e in new_entries)
+    rows = _insert_rows(m, rows, "loaded by COPY INTO")
     fs, _ = _fs(spark, table_path)
     record = json.dumps(todo).encode()
 
-    def _drop_staged() -> None:
-        for e in new_entries:
-            fs.delete(_jpath(spark, f"{table_path}/{DATA_DIR}/{e['name']}"), False)
+    def stage(c: _Commit) -> None:
+        # staged bytes validated inside the staging value pass (r15)
+        c.entries = _stage_files(
+            spark, table_path, rows, m["snapshot_id"] + 1, m,
+            m.get("check_constraints") or None,
+        )
 
-    last_err: Exception | None = None
-    for _attempt in range(max_retries + 1):
-        cur_checks = m.get("check_constraints") or {}
-        if cur_checks != validated_for:
-            _validate_staged_or_clean(spark, table_path, m, new_entries, cur_checks)
-            validated_for = cur_checks
+    def child(c: _Commit) -> dict | None:
         if not force:
-            cur_loaded = {e["path"] for e in _copy_registry(spark, table_path, m)}
-            overlap = [e for e in todo if e["path"] in cur_loaded]
-            if overlap:
-                # a rival COPY INTO published some of OUR files while
-                # we were staging: these staged bytes would double-load
-                # them. Drop the stage and re-derive — the registry
-                # makes the recursive re-run idempotent by definition.
-                _drop_staged()
-                if len(overlap) == len(todo):
-                    return {
-                        "snapshot_id": m["snapshot_id"],
-                        "files_loaded": 0,
-                        "rows_loaded": 0,
-                        "files_skipped": len(listed),
-                        "files_written": 0,
-                    }
-                remaining = max_retries - _attempt - 1
-                if remaining < 0:
-                    raise CowConcurrentWrite(
-                        f"concurrent COPY INTO contention at {table_path}; re-run"
-                    )
-                return copy_into(
-                    spark, table_path, source, file_format, pattern,
-                    format_options, force, remaining,
-                )
-        manifest = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent": m["snapshot_id"],
-            "operation": "copy_into",
-            **_carried(m),
-            "check_constraints": cur_checks,
-            "copy_shards": list(m.get("copy_shards") or [])
+            won = {e["path"] for e in _copy_registry(spark, table_path, c.head)}
+            if any(e["path"] in won for e in todo):
+                return None
+        manifest = _child(
+            c.head, "copy_into",
+            copy_shards=list(c.head.get("copy_shards") or [])
             + [_write_content_shard(spark, fs, table_path, record)],
-        }
-        _advance_identity(manifest, m, new_entries)
-        try:
-            _commit_append(spark, table_path, m, manifest, new_entries)
-            return {
-                "snapshot_id": manifest["snapshot_id"],
-                "files_loaded": len(todo),
-                "rows_loaded": rows_loaded,
-                "files_skipped": len(listed) - len(todo),
-                "files_written": len(new_entries),
-            }
-        except CowConcurrentWrite as e:
-            last_err = e
-            head = _load_manifest_meta(
-                spark, table_path, current_snapshot(spark, table_path)
-            )
-            if _identity_moved(m, head):
-                _drop_staged()
-                raise CowConcurrentWrite(
-                    f"concurrent write advanced an identity high-water "
-                    f"mark at {table_path}; re-run the COPY INTO"
-                ) from e
-            m = head
-    raise last_err
+        )
+        _advance_identity(manifest, c.head, c.entries)
+        return manifest
+
+    c = _optimistic_commit(
+        spark, table_path, m, stage, child,
+        lambda _base: table_head_meta(spark, table_path), append=True,
+    )
+    if c.manifest is None:
+        return None
+    return {
+        "snapshot_id": c.manifest["snapshot_id"],
+        "files_loaded": len(todo),
+        "rows_loaded": sum(e["rows"] for e in c.entries),
+        "files_skipped": len(listed) - len(todo),
+        "files_written": len(c.entries),
+    }
 
 
 def vacuum(
@@ -5882,8 +5689,7 @@ def compact(
         names = {r["__file"] for r in matched.select("__file").collect()}
         selected = [f_ for f_ in m["files"] if f_["name"] in names]
         if not selected:
-            return {"snapshot_id": m["snapshot_id"], "files_rewritten": 0,
-                    "files_untouched": len(m["files"]), "files_written": 0}
+            return _unchanged(m)
     # DV-aware read: compaction MATERIALIZES deletion vectors — the
     # rewrite keeps only live rows and the new entries carry no dv
     current = _read_entries(spark, table_path, m, selected)
@@ -6133,15 +5939,12 @@ def alter_drop_column(spark: SparkSession, table_path: str, col_name: str) -> in
             f"cannot drop {col_name}: referenced by generated column(s) "
             f"{gen_broken}; drop those first"
         )
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": "drop_column",
-        **_carried(m),
-        "schema": narrowed.json(),
-        "bloom_columns": [c for c in (m.get("bloom_columns") or []) if c != col_name],
-        "files": m["files"],
-    }
+    manifest = _child(
+        m, "drop_column",
+        schema=narrowed.json(),
+        bloom_columns=[c for c in (m.get("bloom_columns") or []) if c != col_name],
+        files=m["files"],
+    )
     if gen:
         manifest["generated_columns"] = gen
     else:
@@ -6287,14 +6090,11 @@ def alter_widen_column(
                 f"column(s) {diverged} would recompute to a different type "
                 "than declared; drop and re-add them instead"
             )
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"widen_column_{col_name}_to_{want}",
-        **_carried(m),
-        "schema": widened.json(),
-        "files": m["files"],
-    }
+    manifest = _child(
+        m, f"widen_column_{col_name}_to_{want}",
+        schema=widened.json(),
+        files=m["files"],
+    )
     # record that pre-widening file vintages exist: the engine read
     # path upcasts them through the manifest schema, but a RAW parquet
     # scan (bucketed_view's catalog table) would read the narrow
@@ -6397,17 +6197,14 @@ def alter_rename_column(
     if pmap[new_name] == new_name:
         del pmap[new_name]  # renamed back to its physical name
     used = list(m.get("used_physical") or [])
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"rename_column_{old_name}_to_{new_name}",
-        **_carried(m),
-        "schema": renamed.json(),
-        "bloom_columns": [
+    manifest = _child(
+        m, f"rename_column_{old_name}_to_{new_name}",
+        schema=renamed.json(),
+        bloom_columns=[
             new_name if c == old_name else c for c in (m.get("bloom_columns") or [])
         ],
-        "files": m["files"],
-    }
+        files=m["files"],
+    )
     if gen:
         manifest["generated_columns"] = gen
     else:
@@ -6510,13 +6307,7 @@ def truncate(spark: SparkSession, table_path: str) -> dict:
     ``vacuum`` expires them — which is also what makes this truncate
     safely reversible, unlike the filesystem wipe it replaces."""
     m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": "truncate",
-        **_carried(m),
-        "files": [],
-    }
+    manifest = _child(m, "truncate", files=[])
     _commit(spark, table_path, manifest)
     return {"snapshot_id": manifest["snapshot_id"], "files_rewritten": 0,
             "files_untouched": 0, "files_written": 0}
@@ -6555,13 +6346,12 @@ def rollback(spark: SparkSession, table_path: str, snapshot: int) -> int:
                 f"snapshot {snapshot} is no longer restorable: deletion vector "
                 f"{dv['name']} was vacuumed"
             )
-    manifest = {
-        "snapshot_id": head["snapshot_id"] + 1,
-        "parent": head["snapshot_id"],
-        "operation": f"rollback_to_{snapshot}",
-        **_carried(target),
-        "files": target["files"],
-    }
+    manifest = _child(
+        target, f"rollback_to_{snapshot}",
+        snapshot_id=head["snapshot_id"] + 1,
+        parent=head["snapshot_id"],
+        files=target["files"],
+    )
     # two pieces of TABLE-LEVEL state must never rewind with the data
     # (r11 review finding — _carried(target) would revert them):
     # tags are durable refs to snapshots that all stay readable after
@@ -6619,14 +6409,10 @@ def add_check_constraint(
     current = _read_files(spark, table_path, m, [f["name"] for f in m["files"]])
     _validate_constraints(current, {name: expr})
     checks[name] = expr
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"add_constraint_{name}",
-        **_carried(m),
-        "check_constraints": checks,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(
+        spark, table_path, m,
+        _child(m, f"add_constraint_{name}", check_constraints=checks),
+    )
 
 
 def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> int:
@@ -6636,14 +6422,10 @@ def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> in
     if name not in checks:
         raise ValueError(f"no such constraint: {name}")
     del checks[name]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"drop_constraint_{name}",
-        **_carried(m),
-        "check_constraints": checks,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit_carry(
+        spark, table_path, m,
+        _child(m, f"drop_constraint_{name}", check_constraints=checks),
+    )
 
 
 def table_head_meta(spark: SparkSession, table_path: str) -> dict:
@@ -6670,15 +6452,15 @@ def append_staged(
     table_path: str,
     entries: list[dict],
     operation: str = "stream_append",
-    max_retries: int = 5,
 ) -> dict:
     """Commit PRE-STAGED data files as a new-files-only snapshot — the
     low-level half of :func:`append` for writers that produce the
     parquet bytes themselves on executors (the ``cowsink`` streaming
     writer): each ``entries`` item is a manifest file entry
     (``{"name", "rows", "stats", "nulls"}``) whose file already sits
-    under ``data/``. Same no-read-set optimistic-commit retry loop as
-    ``append``. The ``cowsink`` streaming writer inlines this exact
+    under ``data/``. Same no-read-set optimistic-commit loop as
+    ``append``, which owns the files from here: a refused commit
+    deletes them. The ``cowsink`` streaming writer inlines this exact
     protocol self-contained (its commit hook runs in a Python worker
     where neither this package nor a SparkSession exists). Tables with partition columns or Bloom columns are
     refused (staged entries carry neither); CHECK constraints are
@@ -6703,38 +6485,25 @@ def append_staged(
         bad = set(e.get("stats") or {}) - known
         if bad:
             raise ValueError(f"staged entry {e['name']} has unknown columns {bad}")
-    validated_for = m.get("check_constraints") or {}
-    if validated_for and entries:
-        staged = _read_files(spark, table_path, m, [e["name"] for e in entries])
-        _validate_constraints(staged, validated_for)
-    last_err: Exception | None = None
-    for _attempt in range(max_retries + 1):
-        cur_checks = m.get("check_constraints") or {}
-        if cur_checks != validated_for and entries:
-            # a concurrent ADD CONSTRAINT won during the retry window:
-            # re-validate the staged files against the new set before
-            # adopting it (same guard as append())
-            staged = _read_files(spark, table_path, m, [e["name"] for e in entries])
-            _validate_constraints(staged, cur_checks)
-            validated_for = cur_checks
-        manifest = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent": m["snapshot_id"],
-            "operation": operation,
-            **_carried(m),
-            "partition_by": [],
-            "bloom_columns": [],
-            "check_constraints": cur_checks,
-        }
-        try:
-            _commit_append(spark, table_path, m, manifest, entries)
-            return {
-                "snapshot_id": manifest["snapshot_id"],
-                "files_rewritten": 0,
-                "files_untouched": _n_files(spark, table_path, m),
-                "files_written": len(entries),
-            }
-        except CowConcurrentWrite as e:
-            last_err = e
-            m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
-    raise last_err
+
+    def stage(c: _Commit) -> None:
+        c.entries = list(entries)
+
+    def rebase(_base: dict) -> dict | None:
+        # the staged entries carry no partition values and no blooms:
+        # a head that gained either cannot adopt them
+        head = table_head_meta(spark, table_path)
+        return None if head.get("partition_by") or head.get("bloom_columns") else head
+
+    # validated={}: nothing checked the files yet, so the loop
+    # validates them against the head's CHECK set before publishing
+    c = _optimistic_commit(
+        spark, table_path, m, stage, lambda c: _child(c.head, operation), rebase,
+        append=True, validated={},
+    )
+    return {
+        "snapshot_id": c.manifest["snapshot_id"],
+        "files_rewritten": 0,
+        "files_untouched": _n_files(spark, table_path, c.head),
+        "files_written": len(entries),
+    }

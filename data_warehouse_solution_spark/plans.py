@@ -152,6 +152,19 @@ def materialize_and_release(result: DataFrame, *pinned: DataFrame) -> DataFrame:
     return out
 
 
+def _pin_active_session(spark) -> bool:
+    """Make ``spark`` the JVM-thread-local ACTIVE session of the calling
+    thread; False when the session class does not offer the hook
+    (non-classic session / API drift)."""
+    try:
+        getattr(
+            spark._jvm, "org.apache.spark.sql.classic.SparkSession"
+        ).setActiveSession(spark._jsparkSession)
+    except Exception:
+        return False
+    return True
+
+
 def overlap_jobs(spark, *thunks):
     """Run independent driver actions concurrently so their Spark jobs
     back-fill each other's task tails (guide §2.6 — actions are only
@@ -160,25 +173,21 @@ def overlap_jobs(spark, *thunks):
     worker pins the JVM-thread-local ACTIVE session first: Python
     Data Source lookup and SQLConf.get resolve through
     ``SparkSession.getActiveSession``, which is unset on the fresh
-    py4j threads that back a Python thread pool."""
+    py4j threads that back a Python thread pool. When the session
+    cannot be pinned, the thunks run one after another on the
+    caller's thread instead: slower, but never unpinned."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def wrap(fn):
-        def run():
-            try:
-                getattr(
-                    spark._jvm, "org.apache.spark.sql.classic.SparkSession"
-                ).setActiveSession(spark._jsparkSession)
-            except Exception:
-                pass  # non-classic session / API drift: best-effort
-            return fn()
+    if len(thunks) == 1 or not _pin_active_session(spark):
+        return [fn() for fn in thunks]
 
-        return run
+    def run(fn):
+        if not _pin_active_session(spark):
+            raise RuntimeError("cannot pin the active session on a worker thread")
+        return fn()
 
-    if len(thunks) == 1:
-        return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
-        futures = [pool.submit(wrap(fn)) for fn in thunks]
+        futures = [pool.submit(run, fn) for fn in thunks]
         return [f.result() for f in futures]
 
 

@@ -961,11 +961,12 @@ def register_cow_batch(spark) -> None:
     runtime SQL conf, default false in 4.1): with it off, Spark
     REFUSES any reader that implements ``pushFilters`` rather than
     silently skipping pushdown, so the flag is part of registering
-    this source."""
+    this source. The conf is set on every call, since a later reset
+    would otherwise break cow reads; only the registration itself is
+    done once per session."""
     from . import register_once
 
-    def _do():
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        spark.dataSource.register(CowBatchDataSource)
-
-    register_once(spark, "cow", _do)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    register_once(
+        spark, "cow", lambda: spark.dataSource.register(CowBatchDataSource)
+    )

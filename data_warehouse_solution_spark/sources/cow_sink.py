@@ -169,7 +169,7 @@ def _build_sink_class():
 
     def _append_shards(table_path, m, entries, manifest):
         """Attach ``parent ∪ entries`` to ``manifest`` with O(new)
-        metadata I/O (r12 engine parity with cowtable._commit_append):
+        metadata I/O (r12 engine parity with cowtable._commit_carry):
         a sharded parent's shard names are REFERENCED from its
         manifest proper — never loaded, never rewritten — and only a
         trailing sub-half shard is read and merged so per-batch

@@ -9,6 +9,7 @@ of registry shards, and the gate verb's strict clause validation
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -48,6 +49,33 @@ def test_copy_into_loads_then_skips(spark, tmp_path):
     assert cow.read(spark, p).count() == 3
     # snapshot id did not advance on the no-op
     assert st2["snapshot_id"] == st["snapshot_id"]
+
+
+def test_copy_into_race_with_rival_of_same_files(spark, tmp_path, monkeypatch):
+    """A rival COPY INTO of the same files commits while this one is
+    staging: the loser loads nothing and keeps none of its staged
+    files."""
+    src = _write_csvs(tmp_path, {"a.csv": [(1, "a"), (2, "b")], "b.csv": [(3, "c")]})
+    p = _mk(spark, str(tmp_path / "t"))
+    real_stage = cow._stage_files
+
+    def stage_then_rival(*a, **kw):
+        entries = real_stage(*a, **kw)
+        monkeypatch.setattr(cow, "_stage_files", real_stage)
+        assert cow.copy_into(spark, p, src, "csv")["files_loaded"] == 2
+        return entries
+
+    monkeypatch.setattr(cow, "_stage_files", stage_then_rival)
+    st = cow.copy_into(spark, p, src, "csv")
+    assert st["files_loaded"] == 0 and st["files_written"] == 0
+    assert sorted(r["k"] for r in cow.read(spark, p).collect()) == [1, 2, 3]
+    m = cow._load_manifest(spark, p, cow.current_snapshot(spark, p))
+    data = os.path.join(p, "data")
+    on_disk = {
+        os.path.relpath(f, data)
+        for f in glob.glob(os.path.join(data, "**", "*.parquet"), recursive=True)
+    }
+    assert on_disk == {f["name"] for f in m["files"]}
 
 
 def test_copy_into_loads_only_new_files(spark, tmp_path):

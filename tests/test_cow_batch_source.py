@@ -34,6 +34,19 @@ def test_batch_source_matches_cowtable_read(spark, tmp_path):
     assert got == want and len(got) == 3
 
 
+def test_register_reasserts_filter_pushdown_conf(spark, tmp_path):
+    """Registration is memoized per session, but the pushdown conf the
+    reader needs is set on every call: a reset between two
+    registrations must not leave cow reads refused."""
+    path = str(tmp_path / "conf")
+    cow.create(spark, path, spark.createDataFrame([(1,), (2,)], "k long"))
+    register_cow_batch(spark)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    register_cow_batch(spark)
+    assert spark.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
+    assert _read(spark, path).filter("k > 1").count() == 1
+
+
 def test_batch_source_time_travel_and_errors(spark, tmp_path):
     path = str(tmp_path / "tt")
     cow.create(spark, path, spark.createDataFrame([(1,)], "k long"))

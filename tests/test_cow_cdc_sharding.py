@@ -329,9 +329,7 @@ def test_append_exhausts_retries_raises(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(cow, "_commit", always_beaten)
     with pytest.raises(cow.CowConcurrentWrite):
-        cow.append(
-            spark, path, spark.range(7).withColumnRenamed("id", "k"), max_retries=2
-        )
+        cow.append(spark, path, spark.range(7).withColumnRenamed("id", "k"))
 
 
 # -- cowcdc: the STREAMING Change-Data-Feed source --------------------------

@@ -8,6 +8,9 @@ driving the loser's commit path with the stale snapshot."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -195,3 +198,106 @@ def test_merge_conflicts_on_concurrent_alter(spark, tmp_path, monkeypatch):
             spark, monkeypatch, p, stale,
             lambda: cow.merge_upsert(spark, p, src, ["k"]),
         )
+
+
+# -- refused writes leave no orphaned files ---------------------------------
+
+
+def _unreferenced(spark, p):
+    """Parquet files under data/ and _dv/ that no snapshot references."""
+    referenced = set()
+    for n in cow._list_snapshots(spark, p):
+        for f in cow._load_manifest(spark, p, n)["files"]:
+            referenced.add(f"data/{f['name']}")
+            if f.get("dv"):
+                referenced.add(f"_dv/{f['dv']['name']}")
+    on_disk = {
+        os.path.relpath(f, p)
+        for d in ("data", "_dv")
+        for f in glob.glob(os.path.join(p, d, "**", "*.parquet"), recursive=True)
+    }
+    return on_disk - referenced
+
+
+def _lost_cow_delete(spark, p, monkeypatch):
+    _mk(spark, p)
+    m = cow._load_manifest(spark, p, cow.current_snapshot(spark, p))
+    cow.delete(spark, p, "k = 7")  # winner rewrites the file holding k=7
+    return lambda: _stale_cow_delete(spark, p, m, "k < 10"), cow.CowConcurrentWrite
+
+
+def _lost_mor_update(spark, p, monkeypatch):
+    _mk(spark, p, write_mode="mor")
+    m = cow._load_manifest(spark, p, cow.current_snapshot(spark, p))
+    cow.delete(spark, p, "k = 3")  # winner DV-masks the same file
+    return (
+        lambda: cow._mor_commit(
+            spark, p, m, F.expr("k < 10"), "k < 10", {"v": "v + 1"}, "mor_update"
+        ),
+        cow.CowConcurrentWrite,
+    )
+
+
+def _append_identity_moved(spark, p, monkeypatch):
+    cow.create(
+        spark, p, spark.createDataFrame([(0,)], "k long"),
+        identity_columns={"id": {"start": 1, "step": 1}},
+    )
+    real_stage = cow._stage_files
+
+    def stage_then_rival(*a, **kw):
+        entries = real_stage(*a, **kw)
+        monkeypatch.setattr(cow, "_stage_files", real_stage)
+        # the rival allocates ids past the mark our staged ids came from
+        cow.append(spark, p, spark.createDataFrame([(2,)], "k long"))
+        return entries
+
+    monkeypatch.setattr(cow, "_stage_files", stage_then_rival)
+    return (
+        lambda: cow.append(spark, p, spark.createDataFrame([(1,)], "k long")),
+        cow.CowConcurrentWrite,
+    )
+
+
+def _staging_failure(checks):
+    def setup(spark, p, monkeypatch):
+        cow.create(
+            spark, p, spark.createDataFrame([(1, 1.0)], "k long, v double"),
+            check_constraints=checks,
+        )
+
+        def footer_fails(*a, **kw):
+            raise OSError("injected footer read failure")
+
+        monkeypatch.setattr(cow, "_footer_stats", footer_fails)
+        rows = spark.createDataFrame([(2, 2.0), (3, 3.0)], "k long, v double")
+        return lambda: cow.append(spark, p, rows.repartition(2)), OSError
+
+    return setup
+
+
+@pytest.mark.parametrize(
+    "setup",
+    [
+        _lost_cow_delete,
+        _lost_mor_update,
+        _append_identity_moved,
+        _staging_failure(None),
+        _staging_failure({"vpos": "v > 0"}),
+    ],
+    ids=[
+        "cow_delete_lost_race",
+        "mor_update_lost_race",
+        "append_identity_moved",
+        "staging_failure_unconstrained",
+        "staging_failure_checked",
+    ],
+)
+def test_refused_write_leaves_no_orphans(spark, tmp_path, monkeypatch, setup):
+    """Every exit of a write that did not publish deletes what it
+    staged: data files under data/ and the deletion vector under _dv/."""
+    p = str(tmp_path / "t")
+    write, refusal = setup(spark, p, monkeypatch)
+    with pytest.raises(refusal):
+        write()
+    assert not _unreferenced(spark, p)
