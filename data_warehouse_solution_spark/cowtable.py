@@ -29,7 +29,7 @@ in the environment — no extra jars:
   when the winner provably left what they read alone
   (``_rebase_head``); create/replace and the rest refuse with
   ``CowConcurrentWrite``. The loop itself refuses a head whose
-  identity high-water marks moved, re-validates the staged bytes
+  identity high-water marks moved, re-validates the staged files
   when the CHECK set changed, and stops after ``COMMIT_ATTEMPTS``
   (6) publishes. Cleanup rule: a write that does not publish deletes
   every data file and deletion vector it staged, because no manifest
@@ -37,6 +37,11 @@ in the environment — no extra jars:
   fails with an unknown outcome are they left for ``vacuum``.
   Content-addressed manifest shards are never deleted (a winner may
   share them).
+- CHECK constraints are enforced on the files a write stages, never
+  the table: proven from their footer min/max and null counts when
+  those imply every constraint (``_checks_hold``: no read), else
+  counted by one read of the new files, usually riding the bloom or
+  stats pass.
 
 Affected-file selection prunes twice before touching data: the
 manifest keeps per-file min/max stats for numeric and string columns
@@ -178,6 +183,25 @@ def _read_file(spark: SparkSession, path: str) -> bytes:
     data = _handles(spark)["IOUtils"].toByteArray(stream)
     stream.close()
     return bytes(data)
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl`` column order) as a
+    DataFrame over a LocalRelation. It is built from an Arrow table
+    because a frame built from a Python list is a parallelized RDD,
+    and collecting that costs a Spark job; collecting this one costs
+    none. Names, types and nullability are those of ``ddl``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(
+        pa.table(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    )
 
 
 def _manifest_path(table_path: str, n: int) -> str:
@@ -650,9 +674,10 @@ def _optimistic_commit(
     A lost race asks ``rebase(head)`` for the newer head to rebuild on,
     or None to refuse (without ``rebase`` every race refuses). The
     loop itself refuses a head whose identity high-water marks moved
-    (the staged ids could collide), re-validates the staged bytes when
-    the head's CHECK set differs from ``validated`` (default: the
-    base's, which staging checked), and gives up after
+    (the staged ids could collide), re-validates the staged files
+    (from their stats when these prove it, else by a read) when the
+    head's CHECK set differs from ``validated`` (default: the base's,
+    which staging checked), and gives up after
     ``COMMIT_ATTEMPTS`` publishes.
 
     Every exit that did not publish deletes what was staged: nothing
@@ -674,10 +699,14 @@ def _optimistic_commit(
                 return c
             checks = c.head.get("check_constraints") or {}
             if checks and checks != validated and c.entries:
-                names = [e["name"] for e in c.entries]
-                _validate_constraints(
-                    _read_files(spark, table_path, c.head, names), checks
-                )
+                if not _checks_hold(
+                    checks, c.entries, _types(_snapshot_schema(c.head)),
+                    _phys_map(c.head),
+                ):
+                    names = [e["name"] for e in c.entries]
+                    _validate_constraints(
+                        _read_files(spark, table_path, c.head, names), checks
+                    )
                 validated = checks
             publishing = True
             try:
@@ -894,14 +923,15 @@ def _validate_constraints(df: DataFrame, constraints: dict | None) -> None:
     constraints) and refuse the write if any expression is FALSE for
     any row. NULL results pass (SQL three-valued CHECK semantics).
     Runs only over the rows of the write at hand, never the table."""
-    if not constraints:
-        return
-    aggs = [
-        F.sum(F.when(F.expr(f"NOT ({expr})"), 1).otherwise(0)).alias(name)
-        for name, expr in sorted(constraints.items())
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    bad = {name: int(n) for name, n in row.items() if n}
+    if constraints:
+        _refuse_violations(
+            _sum_check_rows(df.agg(*_check_aggs(constraints)).collect(), constraints)
+        )
+
+
+def _refuse_violations(viol: dict[str, int] | None) -> None:
+    """Refuse the write when any CHECK constraint counted a violation."""
+    bad = {name: n for name, n in sorted((viol or {}).items()) if n}
     if bad:
         raise CowConstraintViolation(
             f"CHECK constraint(s) violated by this write (name: rows): {bad}"
@@ -938,9 +968,11 @@ def _stage_files(
     partitioning, Bloom columns, physical column names, generated
     columns and bucket spec shape the write.
     With ``checks`` the staged bytes are ALSO validated against the
-    CHECK constraints before returning — fused into the bloom/stats
-    value pass when one runs (one columnar job instead of two, r15;
-    guide §1.2), a dedicated single read otherwise. On ANY failure
+    CHECK constraints before returning: proven from the new files'
+    stats when they imply every constraint (``_checks_hold``: no read
+    at all), else fused into the bloom/stats value pass when one runs
+    (one columnar job instead of two, r15; guide §1.2), else one
+    dedicated read that counts the violations. On ANY failure
     once the write has started (a violation, a failing stats pass, a
     refused rename) every staged file is deleted before re-raising:
     no manifest references them yet.
@@ -1071,10 +1103,9 @@ def _stage_files(
         # pass below; with renames the (rare) mapped read at the end
         # of this function validates instead — correctness first.
         fuse_ok = not any(l != p for l, p in physical_names.items())
-        fused_checks = checks if checks and fuse_ok else None
         # explicit schema so partition columns keep their declared
         # types under the constraint expressions (no dir inference)
-        pschema = logical if fused_checks else None
+        pschema = logical if checks and fuse_ok else None
         viol: dict[str, int] | None = None
         # stats come from the freshly written parquet FOOTERS — O(files)
         # driver-side metadata reads, no second pass over the data (the
@@ -1083,36 +1114,11 @@ def _stage_files(
         # is all pruning soundness needs. Falls back to one distributed
         # aggregate when the filesystem isn't footer-readable here.
         by_name = _footer_stats(table_path, data_root, moved, dtypes)
-        if by_name is None:
+        footers = by_name is not None
+        if not footers:
             by_name, viol = _spark_file_stats(
                 spark, data_root, moved, partition_by, dtypes, bloom_cols,
-                fused_checks, pschema,
-            )
-        elif bloom_cols:
-            # blooms still need a value pass — but only over the bloom
-            # columns (a narrow columnar read), not the whole schema;
-            # CHECK validation rides the same job (r15, guide §1.2)
-            blooms_by_name, viol = _spark_bloom_positions(
-                spark, data_root, moved, partition_by, bloom_cols,
-                fused_checks, pschema,
-            )
-            for k, v in by_name.items():
-                v.update(blooms_by_name.get(k, {}))
-        elif fused_checks:
-            # no value pass to ride: ONE dedicated read of only the
-            # new files (exactly what the former separate validation
-            # call paid; column pruning keeps it narrow)
-            reader = spark.read.schema(pschema)
-            if partition_by:
-                reader = reader.option("basePath", data_root)
-            _validate_constraints(
-                reader.parquet(*[f"{data_root}/{mv}" for mv in moved]),
-                fused_checks,
-            )
-        bad = {k: int(n) for k, n in sorted((viol or {}).items()) if n}
-        if bad:
-            raise CowConstraintViolation(
-                f"CHECK constraint(s) violated by this write (name: rows): {bad}"
+                checks if fuse_ok else None, pschema,
             )
         for m in moved:
             entry: dict = {"name": m}
@@ -1163,7 +1169,33 @@ def _stage_files(
             if r.get("__blooms"):
                 entry["blooms"] = r["__blooms"]
             entries.append(entry)
-        if checks and not fuse_ok and entries:
+        # the CHECKs this write still owes a read: none when the stats
+        # aggregate counted them or the new files' stats prove them
+        owed = checks if checks and viol is None and entries else None
+        if owed and _checks_hold(owed, entries, _types(logical), physical_names):
+            owed = None
+        fused = owed if fuse_ok else None
+        paths = [f"{data_root}/{e['name']}" for e in entries]
+        if footers and bloom_cols and entries:
+            # blooms still need a value pass — but only over the bloom
+            # columns (a narrow columnar read), not the whole schema;
+            # CHECK validation rides the same job (r15, guide §1.2)
+            blooms_by_name, viol = _spark_bloom_positions(
+                spark, data_root, paths, partition_by, bloom_cols, fused, pschema,
+            )
+            for e in entries:
+                bl = blooms_by_name.get(e["name"].rsplit("/", 1)[-1], {})
+                if bl.get("__blooms"):
+                    e["blooms"] = bl["__blooms"]
+        elif fused:
+            # no value pass to ride: ONE dedicated read of only the
+            # new files (column pruning keeps it narrow)
+            reader = spark.read.schema(pschema)
+            if partition_by:
+                reader = reader.option("basePath", data_root)
+            _validate_constraints(reader.parquet(*paths), fused)
+        _refuse_violations(viol)
+        if owed and not fuse_ok:
             # renamed-column tables: constraint expressions need the
             # logical->physical mapped read, which _read_files provides —
             # one dedicated validation scan (the pre-r15 shape)
@@ -1173,7 +1205,7 @@ def _stage_files(
                     {"schema": logical.json(), "physical_names": physical_names},
                     [e["name"] for e in entries],
                 ),
-                checks,
+                owed,
             )
     except BaseException:
         for mv in moved:
@@ -1307,10 +1339,10 @@ def _bloom_aggs(bloom_cols: list[str]) -> list[Column]:
 
 
 def _check_aggs(checks: dict) -> list[Column]:
-    """Per-constraint violation-count aggregates (the same expressions
-    ``_validate_constraints`` evaluates) — rideable on any per-file
-    aggregate over the staged bytes so CHECK enforcement shares the
-    bloom/stats value pass instead of paying its own scan (r15)."""
+    """Per-constraint violation-count aggregates — ``_validate_constraints``
+    runs them alone, and they ride any per-file aggregate over the
+    staged bytes so CHECK enforcement shares the bloom/stats value
+    pass instead of paying its own scan (r15)."""
     return [
         F.sum(F.when(F.expr(f"NOT ({expr})"), 1).otherwise(0)).alias(f"__ck_{name}")
         for name, expr in sorted(checks.items())
@@ -1331,7 +1363,7 @@ def _sum_check_rows(rows, checks: dict) -> dict[str, int]:
 def _spark_bloom_positions(
     spark: SparkSession,
     data_root: str,
-    moved: list[str],
+    paths: list[str],
     partition_by: list[str] | None,
     bloom_cols: list[str],
     checks: dict | None = None,
@@ -1350,7 +1382,7 @@ def _spark_bloom_positions(
         reader = reader.schema(schema)
     if partition_by:
         reader = reader.option("basePath", data_root)
-    new_df = reader.parquet(*[f"{data_root}/{m}" for m in moved])
+    new_df = reader.parquet(*paths)
     aggs = _bloom_aggs(bloom_cols)
     if checks:
         aggs = aggs + _check_aggs(checks)
@@ -1438,9 +1470,9 @@ def _spark_file_stats(
 # can't recognize simply prunes nothing — pruning only ever produces a
 # SUPERSET of the files the exact predicate scan would flag, so the
 # result is always exact; stats just bound how much the scan reads.
-_CONJUNCT_RE = re.compile(
-    r"^\s*(\w+)\s*(=|<=|>=|<|>)\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$"
-)
+# a literal: a quoted string or a plain number
+_LIT = r"('(?:[^']*)'|-?\d+(?:\.\d+)?)"
+_CONJUNCT_RE = re.compile(rf"^\s*(\w+)\s*(=|<=|>=|<|>)\s*{_LIT}\s*$")
 # null-test conjuncts prune via per-file null COUNTS: `IS NULL` is
 # refuted by a zero null count, `IS NOT NULL` by an all-null file
 _NULL_TEST_RE = re.compile(r"^\s*(\w+)\s+IS\s+(NOT\s+)?NULL\s*$", re.IGNORECASE)
@@ -1457,8 +1489,14 @@ _IS_NOT_NULL_MASK_RE = re.compile(r"\bIS\s+NOT\s+NULL\b", re.IGNORECASE)
 # the paren body is comma-split quote-aware and every item must be a
 # plain literal or the conjunct contributes nothing
 _IN_HEAD_RE = re.compile(r"^\s*(\w+)\s+IN\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL)
-_EQ_ONLY_RE = re.compile(r"^\s*(\w+)\s*=\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$")
-_LIT_RE = re.compile(r"^\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$")
+_EQ_ONLY_RE = re.compile(rf"^\s*(\w+)\s*=\s*{_LIT}\s*$")
+_LIT_RE = re.compile(rf"^\s*{_LIT}\s*$")
+# `col BETWEEN lit AND lit` is `col >= lit AND col <= lit`; the AND
+# splitter cuts it in two, so _parse_conjuncts glues the halves back
+_BETWEEN_WORD_RE = re.compile(r"\bBETWEEN\b", re.IGNORECASE)
+_BETWEEN_RE = re.compile(
+    rf"^\s*(\w+)\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}\s*$", re.IGNORECASE
+)
 
 
 def _mask_quotes_parens(text: str) -> str | None:
@@ -1555,24 +1593,47 @@ def _strip_one_paren(s: str) -> str:
 
 
 def _parse_conjuncts(condition: str) -> list[tuple[str, str, object]]:
-    # Soundness guard: a TOP-LEVEL OR / NOT (outside quotes AND outside
-    # parens — SQL precedence puts OR below AND) means the AND-split
-    # parts are not individually REQUIRED ("a = 1 AND b = 2 OR c = 3"
-    # parses as (a=1 AND b=2) OR c=3 — a file holding only c=3 rows
-    # refutes a=1 by stats yet must survive): parse nothing, prune
-    # nothing. OR *inside parens* is contained — each top-level AND
-    # part is still required, and a parenthesized OR-of-equality on one
-    # column is recognized as an IN-list below. Quoted literals never
-    # split (the splitter is quote-aware), so "s = 'a AND k = 3'" is
-    # one conjunct, not two.
+    """The pruning facts of ``condition``'s recognized top-level
+    conjuncts; none when it is not a pure top-level conjunction."""
+    return [f for part in _required_parts(condition) or [] for f in part]
+
+
+def _required_parts(condition: str) -> list[list[tuple[str, str, object]]] | None:
+    """The facts of each top-level conjunct of ``condition`` (an empty
+    list for a part not understood), or None when the conjuncts are
+    not each required.
+
+    Soundness guard: a TOP-LEVEL OR / NOT (outside quotes AND outside
+    parens — SQL precedence puts OR below AND) means the AND-split
+    parts are not individually REQUIRED ("a = 1 AND b = 2 OR c = 3"
+    parses as (a=1 AND b=2) OR c=3 — a file holding only c=3 rows
+    refutes a=1 by stats yet must survive): parse nothing, prune
+    nothing. OR *inside parens* is contained — each top-level AND
+    part is still required, and a parenthesized OR-of-equality on one
+    column is recognized as an IN-list below. Quoted literals never
+    split (the splitter is quote-aware), so "s = 'a AND k = 3'" is
+    one conjunct, not two; NOT BETWEEN falls to the NOT guard. A
+    backslash is a Spark string escape: the literal's text is then not
+    its value, and an escaped quote would mislead the quote-aware
+    splitter, so such a condition is not analyzed at all."""
     masked = _mask_quotes_parens(condition)
-    if masked is None:
-        return []
+    if masked is None or "\\" in condition:
+        return None
     if _NON_CONJUNCTIVE_RE.search(_IS_NOT_NULL_MASK_RE.sub("ISNOTNULL", masked)):
-        return []
-    out: list[tuple[str, str, object]] = []
-    for part in _split_toplevel_kw(condition, "AND"):
-        out.extend(_parse_part(part))
+        return None
+    parts = _split_toplevel_kw(condition, "AND")
+    out = []
+    i = 0
+    while i < len(parts):
+        part = parts[i]
+        if _BETWEEN_WORD_RE.search(_mask_quotes_parens(part) or "") and i + 1 < len(parts):
+            # the next part is this BETWEEN's upper bound, never a
+            # conjunct of its own (`k BETWEEN 1 AND j = 2` bounds k by
+            # `j = 2`)
+            i += 1
+            part = f"{part} AND {parts[i]}"
+        out.append(_parse_part(part))
+        i += 1
     return out
 
 
@@ -1580,6 +1641,10 @@ def _parse_part(part: str) -> list[tuple[str, str, object]]:
     """One REQUIRED top-level conjunct -> its pruning facts (possibly
     none: an unrecognized part contributes no pruning but the other
     conjuncts remain individually required and sound to prune on)."""
+    bm = _BETWEEN_RE.match(part)
+    if bm:
+        col, lo, hi = bm.groups()
+        return [(col, ">=", _parse_literal(lo)), (col, "<=", _parse_literal(hi))]
     nm = _NULL_TEST_RE.match(part)
     if nm:
         return [(nm.group(1), "notnull" if nm.group(2) else "isnull", None)]
@@ -1658,20 +1723,28 @@ def _eq_may_match(
     if col not in stats:
         return True  # no stats for the column: cannot exclude
     lo, hi = stats[col]
-    if isinstance(lo, str) and _ISO_TS_RE.match(lo):
-        # timestamp-shaped stats: the literal must canonicalize to the
-        # same fixed-width form or the comparison is unsound — decline
-        val = _canon_ts_literal(val)
-        if val is None:
-            return True
+    val = _stat_comparable(lo, val, None if types is None else types.get(col))
+    return val is None or not (val < lo or val > hi)
+
+
+def _stat_comparable(lo: object, val: object, col_type: str | None) -> object:
+    """``val`` in the form that compares soundly with the stat bound
+    ``lo`` of a ``col_type`` column (None: unknown), or None when no
+    such form exists (pruning and proofs must then decline):
+
+    - timestamp-shaped stats of a column not known to be a string:
+      the literal canonicalized to the same fixed-width form (a
+      string column compares the literal as written);
+    - numbers compare only with numbers;
+    - date-shaped stats only with ISO-date literals (the engine would
+      cast '2024-1-1' and match, but the string orders diverge)."""
+    if isinstance(lo, str) and _ISO_TS_RE.match(lo) and col_type != "string":
+        return _canon_ts_literal(val)
     if isinstance(val, (int, float)) != isinstance(lo, (int, float)):
-        return True  # type mismatch: stay conservative
+        return None
     if isinstance(lo, str) and _ISO_DATE_RE.match(lo) and not _ISO_DATE_RE.match(str(val)):
-        # date-shaped stats vs a non-canonical literal (e.g.
-        # '2024-1-1'): the engine would cast and match, but the
-        # string orders diverge — prune nothing on this value
-        return True
-    return not (val < lo or val > hi)
+        return None
+    return val
 
 
 def _file_may_match(
@@ -1710,23 +1783,9 @@ def _file_may_match(
         if col not in stats:
             continue  # no stats for the column: cannot exclude
         lo, hi = stats[col]
-        if isinstance(lo, str) and _ISO_TS_RE.match(lo):
-            # timestamp-shaped stats: canonicalize or decline (see
-            # _eq_may_match)
-            val = _canon_ts_literal(val)
-            if val is None:
-                continue
-        if isinstance(val, (int, float)) != isinstance(lo, (int, float)):
-            continue  # type mismatch: stay conservative
-        if (
-            isinstance(lo, str)
-            and _ISO_DATE_RE.match(lo)
-            and not _ISO_DATE_RE.match(str(val))
-        ):
-            # date-shaped stats vs a non-canonical literal (e.g.
-            # '2024-1-1'): the engine would cast and match, but the
-            # string orders diverge — prune nothing on this conjunct
-            continue
+        val = _stat_comparable(lo, val, None if types is None else types.get(col))
+        if val is None:
+            continue  # no sound comparison: stay conservative
         if op == "<" and lo >= val:
             return False
         if op == "<=" and lo > val:
@@ -1736,6 +1795,88 @@ def _file_may_match(
         if op == ">=" and hi < val:
             return False
     return True
+
+
+# -- CHECK constraints proven from stats ------------------------------------
+# A write whose files' [min, max] and null counts already imply every
+# CHECK needs no read to validate it (Dremel's answer-from-metadata
+# habit). The prover accepts only a top-level AND of `col op literal`
+# and `col IS NOT NULL` facts and says False to anything else, so the
+# violation-counting scan stays the one source of refusal messages.
+_PROVABLE_OPS = ("=", "<", "<=", ">", ">=")
+
+
+def _types(schema) -> dict[str, str]:
+    """Column name -> simple type name of a StructType."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def _checks_hold(
+    checks: dict,
+    entries: list[dict],
+    types: dict[str, str],
+    physical_names: dict[str, str] | None = None,
+) -> bool:
+    """True only when the stats of ``entries`` PROVE every CHECK in
+    ``checks`` for every row they hold. ``types`` maps the constraints'
+    logical column names to their types; entry stats are keyed by the
+    ``physical_names`` they map to. NULL passes a CHECK (SQL
+    three-valued logic); a missing stat or a constraint shape the
+    prover does not understand returns False. Bounds may be wider
+    than the values (truncated strings, stats of DV-masked rows), which
+    keeps a proof sound."""
+    facts = []
+    for expr in checks.values():
+        parts = _required_parts(expr)
+        if not parts or not all(parts):
+            return False
+        facts += [f for part in parts for f in part]
+    if any(col not in types for col, _, _ in facts):
+        return False  # the scan raises the analysis error
+    pmap = physical_names or {}
+    return all(
+        _fact_holds(e, pmap.get(col, col), op, val, types[col])
+        for e in entries
+        for col, op, val in facts
+    )
+
+
+def _fact_holds(entry: dict, col: str, op: str, val: object, col_type: str) -> bool:
+    """Do the entry's stats prove ``col op val`` (or ``col IS NOT
+    NULL``) true or NULL for each of its rows?"""
+    nulls = entry.get("nulls")
+    bounds = (entry.get("stats") or {}).get(col)
+    if nulls is None:
+        return False  # an entry from before null counts were kept
+    if op == "notnull":
+        # a bound shows the column is in the file, so its absence from
+        # ``nulls`` means zero nulls rather than a missing column
+        return bounds is not None and not nulls.get(col)
+    if op not in _PROVABLE_OPS:
+        return False
+    if nulls.get(col, 0) == entry.get("rows"):
+        return True  # every value NULL
+    if bounds is None:
+        return False
+    if col_type in ("float", "double") and op not in (">", ">="):
+        # NaN sorts above every value: it satisfies > and >= only, and
+        # footer bounds need not count it
+        return False
+    if col_type not in _STATS_TYPES:
+        return False
+    lo, hi = bounds
+    val = _stat_comparable(lo, val, col_type)
+    if val is None:
+        return False
+    if op == "=":
+        return lo == val == hi
+    if op == "<":
+        return hi < val
+    if op == "<=":
+        return hi <= val
+    if op == ">":
+        return lo > val
+    return lo >= val
 
 
 # Spark-Murmur3 literal hashing + bucket-id fold: ONE implementation,
@@ -1802,10 +1943,8 @@ def stats_candidate_files(m: dict, condition: str) -> list[dict]:
     conjuncts = _parse_conjuncts(condition)
     types = None
     if m.get("schema"):
-        schema = _snapshot_schema(m)
-        known = set(schema.fieldNames())
-        conjuncts = [c for c in conjuncts if c[0] in known]
-        types = {f.name: f.dataType.simpleString() for f in schema.fields}
+        types = _types(_snapshot_schema(m))
+        conjuncts = [c for c in conjuncts if c[0] in types]
     pmap = m.get("physical_names") or {}
     if pmap:
         # entry stats are keyed by PHYSICAL column names (rename never
@@ -3514,7 +3653,8 @@ def metadata_files(
         )
         for e in m["files"]
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file string, partition string, spec_id int, rows long,"
         " live_rows long, dv_file string, dv_rows long, stats string",
@@ -3535,7 +3675,8 @@ def metadata_history(spark: SparkSession, table_path: str) -> DataFrame:
         )
         for h in history(spark, table_path)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "snapshot_id long, operation string, n_files long, n_rows long,"
         " n_rows_live long, committed_at string",
@@ -6393,21 +6534,27 @@ def add_check_constraint(
     spark: SparkSession, table_path: str, name: str, expr: str
 ) -> int:
     """ALTER TABLE ... ADD CONSTRAINT name CHECK (expr) — the Delta
-    Lake semantics: the EXISTING table content is validated first (one
-    aggregate job over current files; a constraint that existing rows
-    violate is refused), then a metadata-only commit records it and
-    every later create/append/update/merge/replace_where write
-    validates its own rows against it (``_validate_constraints`` —
-    enforcement cost is O(rows written), never O(table)). NULL
-    evaluations pass, per the SQL standard."""
+    Lake semantics: the EXISTING table content is validated first (a
+    constraint that existing rows violate is refused) — proven from
+    the manifest's file stats when they imply it, else by one
+    aggregate job over current files — then a metadata-only commit
+    records it and every later create/append/update/merge/replace_where
+    write validates its own rows against it (enforcement cost is
+    O(rows written), never O(table)). NULL evaluations pass, per the
+    SQL standard."""
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
         raise ValueError(f"invalid constraint name: {name!r}")
     m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
     checks = dict(m.get("check_constraints") or {})
     if name in checks:
         raise ValueError(f"constraint {name} already exists: {checks[name]}")
-    current = _read_files(spark, table_path, m, [f["name"] for f in m["files"]])
-    _validate_constraints(current, {name: expr})
+    # file stats bound a superset of the live rows (a deletion vector
+    # only hides rows), so a proof over every entry covers the table
+    if not _checks_hold(
+        {name: expr}, m["files"], _types(_snapshot_schema(m)), _phys_map(m)
+    ):
+        current = _read_files(spark, table_path, m, [f["name"] for f in m["files"]])
+        _validate_constraints(current, {name: expr})
     checks[name] = expr
     return _commit_carry(
         spark, table_path, m,

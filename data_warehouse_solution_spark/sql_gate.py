@@ -38,6 +38,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .cowtable import local_frame
+
 # pipeline.py:110-114, plus WITH (CTE prologue of a SELECT)
 ALLOWED_VERBS = (
     "CREATE",
@@ -567,7 +569,8 @@ def _stats_df(spark: SparkSession, stats: dict) -> DataFrame:
             return "boolean"
         return "long" if isinstance(v, int) else "string"
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(stats[k] for k in sorted(stats))],
         ", ".join(f"{k} {_t(stats[k])}" for k in sorted(stats)),
     )
@@ -720,8 +723,9 @@ def _apply_changes_sql(spark: SparkSession, statement: str) -> DataFrame | None:
 # Conditions, expressions and payload queries keep the statement's OWN
 # text (the parse tree's source spans), never an Expression.sql()
 # re-rendering: cowtable's stats pruning reads the condition text, and
-# Spark's ``((k > 1) AND (k < 9))`` / ``between(...)`` renderings would
-# stop it pruning.
+# Spark's ``((k > 1) AND (k < 9))`` rendering would stop it pruning
+# (``k BETWEEN 1 AND 9`` as written prunes; the rendered
+# ``between(k, 1, 9)`` would not).
 
 
 @dataclass
@@ -1333,8 +1337,8 @@ def _create_view(
     from . import catalog as _cat
 
     if if_not_exists and _cat.entry_kind(spark, name) == "view":
-        return spark.createDataFrame(
-            [(_cat.normalize_name(name),)], "view string"
+        return local_frame(
+            spark, [(_cat.normalize_name(name),)], "view string"
         )  # IF NOT EXISTS: existing view wins, no-op (tables still refuse)
     body = _strip_trailing_line_comment(body or "")
     head = _VERB_RE.match(body)
@@ -1351,8 +1355,8 @@ def _create_view(
     except Exception as e:
         raise ValueError(f"CREATE VIEW body does not plan: {e}") from None
     _cat.register_view(spark, name, body, replace=replace)
-    return spark.createDataFrame(
-        [(_cat.normalize_name(name),)], "view string"
+    return local_frame(
+        spark, [(_cat.normalize_name(name),)], "view string"
     )
 
 
@@ -1432,7 +1436,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             committed = cow.shallow_clone(spark, src, dst, snapshot=snap)
             if name is not None:
                 _cat.register(spark, name, dst)
-            return spark.createDataFrame([(committed,)], "snapshot_id long")
+            return local_frame(spark, [(committed,)], "snapshot_id long")
         gen_cols = None
         dflt_cols = None
         ident_cols = None
@@ -1475,7 +1479,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             snap = cow.create_like(spark, new_path, src)
             if name is not None:
                 _cat.register(spark, name, new_path)
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         cm = _CREATE_COW_RE.match(statement)
         if cm:
             # CREATE TABLE <path-or-name> USING cow
@@ -1585,7 +1589,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                     )
                 _cat.register(spark, name, table_path)
                 snap = cow.current_snapshot(spark, table_path)
-                return spark.createDataFrame([(snap,)], "snapshot_id long")
+                return local_frame(spark, [(snap,)], "snapshot_id long")
 
             # TBLPROPERTIES: SQL-text users can make merge-on-read the
             # table's DML default, completing the pure-SQL lake lifecycle
@@ -1622,7 +1626,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 snap = cow.create(spark, table_path, payload, **create_kwargs)
                 if name is not None:
                     _cat.register(spark, name, table_path, replace=prior is not None)
-                return spark.createDataFrame([(snap,)], "snapshot_id long")
+                return local_frame(spark, [(snap,)], "snapshot_id long")
             if (prior is None or prior == table_path) and cow.is_cow_table(
                 spark, table_path
             ):
@@ -1635,7 +1639,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 snap = cow.replace_table(spark, table_path, payload, **create_kwargs)
                 if name is not None:
                     _cat.register(spark, name, table_path, replace=prior is not None)
-                return spark.createDataFrame([(snap,)], "snapshot_id long")
+                return local_frame(spark, [(snap,)], "snapshot_id long")
             # LOCATION moves the table: history cannot carry across a
             # root move — stage the replacement at a sibling temp path and swap it
             # in only after the full write succeeds: manifest data-file
@@ -1675,7 +1679,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             cow._COW_TABLE_MEMO.discard(stage)
             if name is not None:
                 _cat.register(spark, name, table_path, replace=prior is not None)
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
     elif verb == "ALTER":
         rt = _ALTER_RENAME_TABLE_RE.match(statement)
         if rt:
@@ -1701,8 +1705,8 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 path_ = _cat.resolve_or_raise(spark, old)
                 _cat.register(spark, new, path_)
                 _cat.unregister(spark, old)
-                return spark.createDataFrame(
-                    [(old, new, path_)], "old string, new string, path string"
+                return local_frame(
+                    spark, [(old, new, path_)], "old string, new string, path string"
                 )
         tp = _ALTER_SET_TP_RE.match(statement)
         if tp and cow.is_cow_table(spark, _resolve_target(spark, tp.group(1))):
@@ -1711,7 +1715,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             snap = cow.alter_set_write_mode(
                 spark, _resolve_target(spark, tp.group(1)), _write_mode_prop(tp.group(2))
             )
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         nn_set = _ALTER_SET_NOTNULL_RE.match(statement)
         nn_drop = _ALTER_DROP_NOTNULL_RE.match(statement)
         nn = nn_set or nn_drop
@@ -1730,7 +1734,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 )
             else:
                 snap = cow.drop_check_constraint(spark, npath, f"nn_{col}")
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         df_set = _ALTER_SET_DEFAULT_RE.match(statement)
         df_drop = _ALTER_DROP_DEFAULT_RE.match(statement)
         dfm = df_set or df_drop
@@ -1747,7 +1751,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 snap = cow.alter_drop_column_default(
                     spark, dpath, df_drop.group(2)
                 )
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         tg_add = _ALTER_CREATE_TAG_RE.match(statement)
         tg_drop = _ALTER_DROP_TAG_RE.match(statement)
         tg = tg_add or tg_drop
@@ -1769,7 +1773,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 )
             else:
                 snap = cow.drop_tag(spark, tpath, tg_drop.group(2))
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         pf_add = _ALTER_ADD_PF_RE.match(statement)
         pf_drop = _ALTER_DROP_PF_RE.match(statement)
         pf = pf_add or pf_drop
@@ -1783,7 +1787,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 else cow.alter_drop_partition_field
             )
             snap = fn(spark, _resolve_target(spark, pf.group(1)), pf.group(2))
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         ck_add = _ALTER_ADD_CK_RE.match(statement)
         ck_drop = _ALTER_DROP_CK_RE.match(statement)
         ck = ck_add or ck_drop
@@ -1798,7 +1802,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 snap = cow.drop_check_constraint(
                     spark, _resolve_target(spark, ck.group(1)), ck.group(2)
                 )
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         av = _ALTER_VIEW_RE.match(statement)
         if av:
             from . import catalog as _cat
@@ -1820,13 +1824,13 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             snap = cow.alter_rename_column(
                 spark, _resolve_target(spark, rn.group(1)), rn.group(2), rn.group(3)
             )
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         wd = _ALTER_WIDEN_RE.match(statement)
         if wd and cow.is_cow_table(spark, _resolve_target(spark, wd.group(1))):
             snap = cow.alter_widen_column(
                 spark, _resolve_target(spark, wd.group(1)), wd.group(2), wd.group(3).strip()
             )
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
         am = _ALTER_ADD_RE.match(statement)
         rm = _ALTER_DROP_RE.match(statement)
         target = _resolve_target(spark, (am or rm).group(1)) if (am or rm) else None
@@ -1835,7 +1839,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 snap = cow.alter_add_columns(spark, target, _strip_outer_parens(am.group(2)))
             else:
                 snap = cow.alter_drop_column(spark, target, rm.group(2))
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
     elif verb == "TRUNCATE":
         tm = _TRUNCATE_HEAD_RE.match(statement)
         if tm and cow.is_cow_table(spark, _resolve_target(spark, tm.group(1))):
@@ -1863,11 +1867,11 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 )
             if kind != "view":
                 if dv.group(1):  # IF EXISTS
-                    return spark.createDataFrame([(False,)], "dropped boolean")
+                    return local_frame(spark, [(False,)], "dropped boolean")
                 # unknown name: a native Spark view may own it
                 return spark.sql(statement)
             _cat.unregister(spark, nm)
-            return spark.createDataFrame([(True,)], "dropped boolean")
+            return local_frame(spark, [(True,)], "dropped boolean")
         pm = _DROP_HEAD_RE.match(statement)
         if pm:
             from . import catalog as _cat
@@ -1890,10 +1894,10 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 if cow.is_cow_table(spark, p):
                     cow.drop(spark, p)
                 _cat.unregister(spark, raw)
-                return spark.createDataFrame([(True,)], "dropped boolean")
+                return local_frame(spark, [(True,)], "dropped boolean")
             if cow.is_cow_table(spark, raw):
                 cow.drop(spark, raw)
-                return spark.createDataFrame([(True,)], "dropped boolean")
+                return local_frame(spark, [(True,)], "dropped boolean")
     return None
 
 
@@ -2011,8 +2015,8 @@ def _cow_ref_view(
             (e["path"], int(e.get("size") or 0), int(e.get("mtime") or 0))
             for e in cow.copied_files(spark, path)
         ]
-        df = spark.createDataFrame(
-            rows, "path string, size long, mtime long"
+        df = local_frame(
+            spark, rows, "path string, size long, mtime long"
         )
     else:
         df = None
@@ -2310,7 +2314,7 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
         return df._jdf.queryExecution().explainString(jmode)
 
     def _out(txt: str) -> DataFrame:
-        return spark.createDataFrame([(txt,)], "plan string")
+        return local_frame(spark, [(txt,)], "plan string")
 
     if ivb in ("SELECT", "WITH", "VALUES"):
         df = run_sql(spark, inner)
@@ -2768,7 +2772,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                     _resolve_target(spark, vm.group(1)),
                     keep_last=int(vm.group(2)) if vm.group(2) else 1,
                 )
-                return spark.createDataFrame(
+                return local_frame(
+                    spark,
                     [
                         (
                             it["kind"],
@@ -2785,12 +2790,13 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 _resolve_target(spark, vm.group(1)),
                 keep_last=int(vm.group(2)) if vm.group(2) else 1,
             )
-            return spark.createDataFrame([(removed,)], "files_removed long")
+            return local_frame(spark, [(removed,)], "files_removed long")
     elif verb == "DESCRIBE":
         hm = _HISTORY_RE.match(statement)
         if hm and cow.is_cow_table(spark, _resolve_target(spark, hm.group(1))):
             rows = cow.history(spark, _resolve_target(spark, hm.group(1)))
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [(r["snapshot_id"], r["operation"], r["n_files"], r["n_rows"]) for r in rows],
                 "snapshot_id long, operation string, n_files long, n_rows long",
             )
@@ -2834,14 +2840,14 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                     if e.get("partition")
                 }
             )
-            return spark.createDataFrame(
-                [(s,) for s in seen], "partition string"
+            return local_frame(
+                spark, [(s,) for s in seen], "partition string"
             )
         st_ = _SHOW_TAGS_RE.match(statement)
         if st_ and cow.is_cow_table(spark, _resolve_target(spark, st_.group(1))):
             t = cow.tags(spark, _resolve_target(spark, st_.group(1)))
-            return spark.createDataFrame(
-                sorted(t.items()), "tag string, snapshot_id long"
+            return local_frame(
+                spark, sorted(t.items()), "tag string, snapshot_id long"
             )
         sm_ = _SHOW_TABLES_RE.match(statement)
         if sm_:
@@ -2860,8 +2866,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 entries = {
                     k: v for k, v in entries.items() if _fn.fnmatchcase(k, pat)
                 }
-            return spark.createDataFrame(
-                list(entries.items()), "name string, path string"
+            return local_frame(
+                spark, list(entries.items()), "name string, path string"
             )
         smv_ = _SHOW_MATVIEWS_RE.match(statement)
         if smv_:
@@ -2883,8 +2889,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 entries = {
                     k: v for k, v in entries.items() if _fn.fnmatchcase(k, pat)
                 }
-            return spark.createDataFrame(
-                list(entries.items()), "name string, sql string"
+            return local_frame(
+                spark, list(entries.items()), "name string, sql string"
             )
     elif verb == "CONVERT":
         cv = _CONVERT_RE.match(statement)
@@ -2899,7 +2905,7 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 else None
             )
             snap = cow.convert_to_cow(spark, path, partition_by=specs)
-            return spark.createDataFrame([(snap,)], "snapshot_id long")
+            return local_frame(spark, [(snap,)], "snapshot_id long")
     elif verb == "REORG":
         rm = _REORG_RE.match(statement)
         if rm and cow.is_cow_table(spark, _resolve_target(spark, rm.group(1))):
@@ -2922,8 +2928,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
             else:
                 target = cow.snapshot_as_of(spark, path, sm.group(4))
             new_snap = cow.rollback(spark, path, target)
-            return spark.createDataFrame(
-                [(target, new_snap)],
+            return local_frame(
+                spark, [(target, new_snap)],
                 "restored_to_snapshot long, new_snapshot long",
             )
     return None
@@ -2957,16 +2963,16 @@ def _show_create_table(spark: SparkSession, target: str) -> DataFrame:
         if view_sql is not None:
             # a VIEW round-trips as its CREATE VIEW statement (r13)
             nm = _cat.normalize_name(raw)
-            return spark.createDataFrame(
-                [(f"CREATE VIEW {nm} AS {view_sql}",)],
+            return local_frame(
+                spark, [(f"CREATE VIEW {nm} AS {view_sql}",)],
                 "createtab_stmt string",
             )
         mv_e = _cat.resolve_matview(spark, raw)
         if mv_e is not None:
             # a MATERIALIZED VIEW round-trips the same way (r14)
             nm = _cat.normalize_name(raw)
-            return spark.createDataFrame(
-                [(f"CREATE MATERIALIZED VIEW {nm} AS {mv_e['sql']}",)],
+            return local_frame(
+                spark, [(f"CREATE MATERIALIZED VIEW {nm} AS {mv_e['sql']}",)],
                 "createtab_stmt string",
             )
         name = raw
@@ -3027,7 +3033,7 @@ def _show_create_table(spark: SparkSession, target: str) -> DataFrame:
         stmts.append(
             f"ALTER TABLE {tgt} ADD CONSTRAINT {cname} CHECK ({expr})"
         )
-    return spark.createDataFrame([(s,) for s in stmts], "createtab_stmt string")
+    return local_frame(spark, [(s,) for s in stmts], "createtab_stmt string")
 
 
 def _describe_table(spark: SparkSession, target: str) -> DataFrame:
@@ -3060,8 +3066,8 @@ def _describe_table(spark: SparkSession, target: str) -> DataFrame:
                 ("# name", _cat.normalize_name(raw), None),
                 ("# sql", view_sql, None),
             ]
-            return spark.createDataFrame(
-                rows, "col_name string, data_type string, info string"
+            return local_frame(
+                spark, rows, "col_name string, data_type string, info string"
             )
         mv_e = _cat.resolve_matview(spark, raw)
         if mv_e is not None:
@@ -3082,8 +3088,8 @@ def _describe_table(spark: SparkSession, target: str) -> DataFrame:
                 ("# base_snapshot", str(mv_e.get("last_snapshot")), None),
                 ("# sql", mv_e["sql"], None),
             ]
-            return spark.createDataFrame(
-                rows, "col_name string, data_type string, info string"
+            return local_frame(
+                spark, rows, "col_name string, data_type string, info string"
             )
         name = raw
         path = _cat.resolve_or_raise(spark, raw)
@@ -3149,4 +3155,4 @@ def _describe_table(spark: SparkSession, target: str) -> DataFrame:
         rows.append((f"# check: {cname}", expr, None))
     for tname, tsnap in sorted((head.get("tags") or {}).items()):
         rows.append((f"# tag: {tname}", str(tsnap), None))
-    return spark.createDataFrame(rows, "col_name string, data_type string, info string")
+    return local_frame(spark, rows, "col_name string, data_type string, info string")

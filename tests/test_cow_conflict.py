@@ -50,6 +50,25 @@ def test_cow_delete_rebases_over_disjoint_append(spark, tmp_path):
     assert got == set(range(10, 100)) | {1000, 1001, 1002, 1003, 1004}
 
 
+def test_cow_between_delete_rebases_over_disjoint_append(spark, tmp_path):
+    """BETWEEN is a >= and a <= fact to the stats analyzer, so a winner
+    that appended outside the range is refuted and the loser rebases;
+    an append inside the range still conflicts."""
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    m = cow._load_manifest(spark, p, cow.current_snapshot(spark, p))
+    cow.append(spark, p, spark.createDataFrame(
+        [(1000 + i, 0.5) for i in range(5)], "k long, v double"))
+    st = _stale_cow_delete(spark, p, m, "k BETWEEN 0 AND 9")
+    assert st.get("rebased") is True
+    got = {r["k"] for r in cow.read(spark, p).collect()}
+    assert got == set(range(10, 100)) | {1000, 1001, 1002, 1003, 1004}
+    m = cow._load_manifest(spark, p, cow.current_snapshot(spark, p))
+    cow.append(spark, p, spark.createDataFrame([(15, 1.0)], "k long, v double"))
+    with pytest.raises(cow.CowConcurrentWrite):
+        _stale_cow_delete(spark, p, m, "k between 12 and 20")
+
+
 def test_cow_delete_conflicts_on_overlapping_append(spark, tmp_path):
     p = str(tmp_path / "t2")
     _mk(spark, p)

@@ -69,8 +69,29 @@ def test_gate_prunes_like_the_api(spark, tmp_path, monkeypatch, cond):
         assert sorted(map(tuple, cow.read(spark, via_sql).collect())) == sorted(
             map(tuple, cow.read(spark, via_api).collect())
         )
-        if cond != "k BETWEEN 30 AND 41":  # BETWEEN is not stat-pruned
-            assert seen[0] < 6, (verb, cond, seen)
+        assert seen[0] < 6, (verb, cond, seen)
+
+
+@pytest.mark.parametrize(
+    "cond, facts",
+    [
+        ("k between 30 and 41", [("k", ">=", 30), ("k", "<=", 41)]),
+        ("k NOT BETWEEN 30 AND 41", []),
+        # a non-literal bound yields no fact, and its upper half is a
+        # bound, not a conjunct of its own
+        ("k BETWEEN n AND 41", []),
+        ("k BETWEEN 1 AND n = 2", []),
+        ("k BETWEEN n AND 41 AND n = 3", [("n", "=", 3)]),
+        ("s = 'a BETWEEN 1 AND 2'", [("s", "=", "a BETWEEN 1 AND 2")]),
+        (
+            "k BETWEEN 1 AND 5 AND j = 2",
+            [("k", ">=", 1), ("k", "<=", 5), ("j", "=", 2)],
+        ),
+        ("(k BETWEEN 1 AND 5)", [("k", ">=", 1), ("k", "<=", 5)]),
+    ],
+)
+def test_between_conjuncts(cond, facts):
+    assert cow._parse_conjuncts(cond) == facts
 
 
 def test_explain_shows_the_executed_record_without_jobs(spark, tmp_path):
@@ -129,3 +150,33 @@ def test_relative_and_unbalanced_path_targets_write_nothing(spark, tmp_path):
             with pytest.raises(ValueError, match="absolute path"):
                 run_sql(spark, stmt)
     assert not os.path.exists(f"{root}/c")
+
+
+@pytest.mark.parametrize(
+    "cond",
+    [
+        # an escaped quote: the literal is "a' AND k = 3 AND 'b"
+        "s = 'a\\' AND k = 3 AND \\'b'",
+        # Spark decodes \t, so the text is not the value
+        "s = 'a\\tb'",
+    ],
+)
+def test_escaped_literals_are_not_analyzed(cond):
+    assert cow._parse_conjuncts(cond) == []
+
+
+@pytest.mark.parametrize(
+    "value, cond",
+    [
+        ("a\tb", "s = 'a\\tb'"),
+        # a string column holding a timestamp-shaped value compares
+        # the literal as written: ' ' sorts before 'T'
+        ("2024-01-01 06:00:00.000000", "s < '2024-01-01T05:00:00'"),
+    ],
+)
+def test_string_literals_prune_as_spark_compares(spark, tmp_path, value, cond):
+    p = str(tmp_path / "t")
+    cow.create(spark, p, spark.createDataFrame([(value,)], "s string"))
+    got = run_sql(spark, f"DELETE FROM cow.`{p}` WHERE {cond}").first()
+    assert got["files_rewritten"] == 1
+    assert cow.read(spark, p).count() == 0
