@@ -1734,7 +1734,7 @@ def cow_batch_writer_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned layout (the r7 punch-list #3): producers holding only
     the format string append to a table created with partition_by +
     bucket_by, each write task groups its rows by (partition value,
-    Murmur3 bucket id) — the shared ``_closure_hash`` closures,
+    Murmur3 bucket id) — ``format_rules``' Murmur3, the engine's own,
     bit-identical to F.hash — and stages one file per cell with the
     ``_000NN`` suffix and the bucket id on the manifest entry.
     Asserted HERE over every staged file (driver-side manifest walk,

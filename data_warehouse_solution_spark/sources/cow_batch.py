@@ -26,14 +26,15 @@ read only their file via pyarrow — the same parallelism a parquet
 scan gets); the driver touches only the manifest. The reader
 implements ``pushFilters`` (Spark 4.1 Python DataSource pushdown):
 pushed =/range/IN/IS-NULL conjuncts prune FILES against the manifest
-entries' min/max + null-count stats and per-file Bloom filters before
-any partition is emitted, so a point SELECT over a bloom-indexed or
-clustered table opens O(matching files), not O(table). All filters
-are returned as residual — Spark re-evaluates rows over the
-survivors, making an unsound prune impossible by construction.
-Pushed equality/IN conjuncts pinning ALL bucket columns additionally
-resolve the key's bucket id (shared Murmur3 closures, parity with the
-engine's ``_bucket_candidate_filter``) and open 1/n of the files.
+entries' min/max + null-count stats, per-file Bloom filters and, when
+they pin every bucket column, the key's Murmur3 bucket, before any
+partition is emitted — so a point SELECT over a bloom-indexed,
+clustered or bucketed table opens O(matching files), not O(table).
+The decision is ``format_rules._file_may_match`` and
+``_bucket_candidate_filter``, the functions ``cowtable`` prunes with,
+so the two readers cannot disagree about which files may match. All
+filters are also returned as residual: Spark re-evaluates rows over
+the surviving files.
 Remaining limits, documented not hidden: column pruning does not
 reach the pyarrow read (Spark's Python DataSource API has no
 prune-columns hook yet — every projection reads full files; use
@@ -43,17 +44,88 @@ local-filesystem paths only, like ``cowcdc``/``cowsink``.
 
 from __future__ import annotations
 
+import datetime as _dt
+import json as _json
+import os as _os
+
+from ..format_rules import (
+    _bucket_candidate_filter,
+    _canon_ts,
+    _child,
+    _file_may_match,
+)
+from . import _local_table as lt
+from ._staging import _SPARK_JSON_CANON, changed_features, plan_write, stage_task
+
+
+def _resolve_snapshot(table_path, options):
+    snaps = lt.snapshots(table_path)
+    if not snaps:
+        raise ValueError(f"no COW table at {table_path}")
+    version = options.get("versionasof") or options.get("versionAsOf")
+    ts = options.get("timestampasof") or options.get("timestampAsOf")
+    if version is not None and ts is not None:
+        raise ValueError("pass versionAsOf OR timestampAsOf, not both")
+    if version is not None:
+        # a non-numeric versionAsOf is a snapshot tag name
+        n = (
+            int(version)
+            if str(version).isdigit()
+            else lt.tag_snapshot(table_path, snaps[-1], version)
+        )
+        if n not in snaps:
+            raise ValueError(
+                f"snapshot {n} is not available at {table_path} "
+                "(expired by vacuum, or never committed)"
+            )
+        return n
+    if ts is not None:
+        want = lt.utc_instant(ts)
+        best = None
+        for n in snaps:
+            m = lt.load_manifest(table_path, n, expand=False)
+            if lt.committed_at(table_path, m, n) <= want:
+                best = n
+        if best is None:
+            raise ValueError(
+                f"no snapshot at {table_path} is as old as {ts} "
+                "(timestamp precedes the first commit)"
+            )
+        return best
+    return snaps[-1]
+
+
+def _table_path(options):
+    p = lt.table_path(options) or options.get("path")
+    if not p:
+        raise ValueError(
+            "cow batch source requires a path / 'tablePath' option "
+            "(or a registered name via option('table', ...))"
+        )
+    return p
+
+
+def _filter_literal(val):
+    """Spark Filter value -> the manifest-stats-comparable form;
+    None means the type has no sound comparison against recorded
+    stats (decimals, binaries...) and the conjunct must not
+    prune."""
+    if isinstance(val, bool):
+        return None  # boolean stats not recorded; stay conservative
+    if isinstance(val, (int, float, str)):
+        return val
+    if isinstance(val, _dt.datetime):
+        # TIMESTAMP stats are canonical fixed-width strings (r12)
+        return _canon_ts(val)
+    if isinstance(val, _dt.date):
+        return val.isoformat()  # DATE stats are ISO strings
+    return None
+
 
 def _build_batch_source_class():
-    """Factory: classes close over their deps by value (cloudpickle
-    ships them to executor workers where this package is not
-    importable — the repo's self-contained-closure rule)."""
-    import datetime as _dt
-    import json as _json
-    import os as _os
-    import re as _re
-    import uuid as _uuid
-
+    """Factory for the source's classes. Their hooks run in Python
+    planner and executor workers; the functions they call live in
+    importable modules, which ``register_once`` ships there."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -61,363 +133,6 @@ def _build_batch_source_class():
         InputPartition,
         WriterCommitMessage,
     )
-
-    _PA_TYPES = {
-        "tinyint": "int8",
-        "smallint": "int16",
-        "int": "int32",
-        "bigint": "int64",
-        "float": "float32",
-        "double": "float64",
-        "string": "string",
-        "boolean": "bool_",
-        "date": "date32",
-    }
-
-    _MANIFEST_RE = _re.compile(r"^manifest-(\d{8})\.json$")
-
-    from ._closure_hash import make_murmur_fns
-    from ._closure_staging import make_staging_fns
-
-    # nested closures: pickled BY VALUE into planner/worker processes
-    _, _bucket_of_key = make_murmur_fns()
-    (_arrow_schema, _validate_rows, _stage_groups, _probe_checks,
-     _probe_generated, _apply_generated_rows) = make_staging_fns()
-
-    def _local(path):
-        return path[7:] if path.startswith("file://") else path.removeprefix("file:")
-
-    def _snapshots(table_path):
-        mdir = _os.path.join(_local(table_path), "_manifests")
-        if not _os.path.isdir(mdir):
-            return []
-        return sorted(
-            int(m.group(1))
-            for n in _os.listdir(mdir)
-            if (m := _MANIFEST_RE.match(n))
-        )
-
-    def _manifest_path(table_path, n):
-        return _os.path.join(_local(table_path), "_manifests", f"manifest-{n:08d}.json")
-
-    def _load_manifest(table_path, n):
-        with open(_manifest_path(table_path, n)) as fh:
-            m = _json.load(fh)
-        if "file_shards" in m:
-            files = []
-            for name in m["file_shards"]:
-                with open(
-                    _os.path.join(_local(table_path), "_manifests", name)
-                ) as fh:
-                    files += _json.load(fh)
-            m["files"] = files
-        return m
-
-    def _resolve_snapshot(table_path, options):
-        snaps = _snapshots(table_path)
-        if not snaps:
-            raise ValueError(f"no COW table at {table_path}")
-        version = options.get("versionasof") or options.get("versionAsOf")
-        ts = options.get("timestampasof") or options.get("timestampAsOf")
-        if version is not None and ts is not None:
-            raise ValueError("pass versionAsOf OR timestampAsOf, not both")
-        if version is not None:
-            if not str(version).isdigit():
-                # r11 snapshot tags: a non-numeric versionAsOf is a
-                # tag name resolved through the HEAD manifest's map
-                tag_map = _load_manifest(table_path, snaps[-1]).get("tags") or {}
-                if str(version) not in tag_map:
-                    raise ValueError(
-                        f"unknown tag {version!r} at {table_path}; "
-                        f"known tags: {sorted(tag_map) or '(none)'}"
-                    )
-                version = tag_map[str(version)]
-            n = int(version)
-            if n not in snaps:
-                raise ValueError(
-                    f"snapshot {n} is not available at {table_path} "
-                    "(expired by vacuum, or never committed)"
-                )
-            return n
-        if ts is not None:
-            want = _dt.datetime.fromisoformat(ts)
-            if want.tzinfo is None:
-                want = want.replace(tzinfo=_dt.timezone.utc)
-            best = None
-            for n in snaps:
-                with open(_manifest_path(table_path, n)) as fh:
-                    stamp = _json.load(fh).get("committed_at")
-                if stamp is not None:
-                    at = _dt.datetime.fromisoformat(stamp)
-                else:  # legacy manifest: file mtime
-                    at = _dt.datetime.fromtimestamp(
-                        _os.path.getmtime(_manifest_path(table_path, n)),
-                        tz=_dt.timezone.utc,
-                    )
-                if at <= want:
-                    best = n
-            if best is None:
-                raise ValueError(
-                    f"no snapshot at {table_path} is as old as {ts} "
-                    "(timestamp precedes the first commit)"
-                )
-            return best
-        return snaps[-1]
-
-    def _strip_scheme(p):
-        if p.startswith("file://"):
-            return p[7:]
-        if p.startswith("file:"):
-            return p[5:]
-        return p
-
-    def _resolve_name_option(options):
-        """``option("table", name)`` (r11 punch #5): resolve a
-        catalog-registered NAME to its table path — the self-contained
-        mirror of ``catalog.resolve_or_raise`` (this code runs in
-        spawned planner/worker Python processes where neither the
-        package nor a SparkSession exists, the same constraint the
-        stats-matcher mirror above documents; parity is pinned by
-        ``tests/test_cow_batch_source.py``). The catalog directory
-        comes from ``option("catalogDir", ...)`` when the session
-        overrides ``spark.dws.cow.catalogDir``; the default mirrors
-        the engine default — ``<cwd>/spark-warehouse/_cow_catalog``
-        (planner workers inherit the driver JVM's cwd, which is what
-        Spark's default ``spark.sql.warehouse.dir`` resolves under).
-        Unknown names raise WITH the registered-table list."""
-        name = options.get("table")
-        if not name:
-            return None
-        name = name.strip().strip("`\"").lower()
-        cat = _strip_scheme(
-            options.get("catalogdir")
-            or options.get("catalogDir")
-            or _os.path.join(_os.getcwd(), "spark-warehouse", "_cow_catalog")
-        )
-        entry = _os.path.join(cat, f"{name}.json")
-        if not _os.path.isfile(entry):
-            known = (
-                sorted(fn[:-5] for fn in _os.listdir(cat) if fn.endswith(".json"))
-                if _os.path.isdir(cat)
-                else []
-            )
-            raise ValueError(
-                f"unknown table name {name!r} — registered tables: "
-                f"{known if known else '(none)'} (set option('catalogDir', ...) "
-                "if the session overrides spark.dws.cow.catalogDir)"
-            )
-        with open(entry) as fh:
-            return _strip_scheme(_json.loads(fh.read())["path"])
-
-    def _table_path(options):
-        p = _resolve_name_option(options) or (
-            options.get("tablepath")
-            or options.get("tablePath")
-            or options.get("path")
-        )
-        if not p:
-            raise ValueError(
-                "cow batch source requires a path / 'tablePath' option "
-                "(or a registered name via option('table', ...))"
-            )
-        return p
-
-    # ---- file pruning (pushFilters) -------------------------------
-    # Self-contained mirror of cowtable's stats/bloom file matcher
-    # (`_file_may_match`, `_eq_may_match`, `_bloom_may_contain` and
-    # the XXH64 pair behind it): DataSource code executes in spawned
-    # Python planner/worker processes where this package is not
-    # importable, so the logic must travel inside the pickled class.
-    # `tests/test_cow_batch_source.py` pins the two matchers against
-    # each other on randomized entries so they cannot drift.
-    _U64 = (1 << 64) - 1
-    _P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-    _P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-    _ISO_DATE = _re.compile(r"^\d{4}-\d{2}-\d{2}")
-    # canonical timestamp-stat shape (cowtable._canon_ts: UTC-naive,
-    # space-separated, fixed 6-digit fraction — fixed width keeps
-    # lexicographic order == chronological order)
-    _ISO_TS = _re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d{6}$")
-
-    def _canon_ts_lit(s):
-        """Literal -> canonical timestamp-stat string, or None
-        (decline to prune). Mirrors cowtable._canon_ts_literal."""
-        if isinstance(s, _dt.datetime):
-            if s.tzinfo is not None:
-                s = s.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return s.isoformat(sep=" ", timespec="microseconds")
-        if not isinstance(s, str):
-            return None
-        try:
-            return _canon_ts_lit(_dt.datetime.fromisoformat(s))
-        except ValueError:
-            return None
-
-    def _rotl(x, r):
-        return ((x << r) | (x >> (64 - r))) & _U64
-
-    def _fmix(h):
-        h ^= h >> 33
-        h = (h * _P2) & _U64
-        h ^= h >> 29
-        h = (h * _P3) & _U64
-        return h ^ (h >> 32)
-
-    def _round(acc, k):
-        acc = (acc + k * _P2) & _U64
-        return (_rotl(acc, 31) * _P1) & _U64
-
-    def _xxh_long(value, seed):
-        h = (seed + _P5 + 8) & _U64
-        h ^= _round(0, value & _U64)
-        h = (_rotl(h, 27) * _P1 + _P4) & _U64
-        return _fmix(h)
-
-    def _xxh_bytes(data, seed):
-        n, i = len(data), 0
-        if n >= 32:
-            v1 = (seed + _P1 + _P2) & _U64
-            v2 = (seed + _P2) & _U64
-            v3 = seed & _U64
-            v4 = (seed - _P1) & _U64
-            while i <= n - 32:
-                v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
-                v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-                v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-                v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-                i += 32
-            h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _U64
-            for v in (v1, v2, v3, v4):
-                h ^= _round(0, v)
-                h = (h * _P1 + _P4) & _U64
-        else:
-            h = (seed + _P5) & _U64
-        h = (h + n) & _U64
-        while i <= n - 8:
-            h ^= _round(0, int.from_bytes(data[i : i + 8], "little"))
-            h = (_rotl(h, 27) * _P1 + _P4) & _U64
-            i += 8
-        if i <= n - 4:
-            h ^= (int.from_bytes(data[i : i + 4], "little") * _P1) & _U64
-            h = (_rotl(h, 23) * _P2 + _P3) & _U64
-            i += 4
-        while i < n:
-            h ^= (data[i] * _P5) & _U64
-            h = (_rotl(h, 11) * _P1) & _U64
-            i += 1
-        return _fmix(h)
-
-    def _bloom_hit(bl, probe):
-        import base64 as _b64
-
-        bitmap = _b64.b64decode(bl["b64"])
-        for j in range(bl["k"]):
-            p = _xxh_bytes(probe.encode("utf-8"), _xxh_long(j, 42)) & (bl["m"] - 1)
-            if not bitmap[p >> 3] & (1 << (p & 7)):
-                return False
-        return True
-
-    def _probe_value(val, col_type):
-        if isinstance(val, bool) or not isinstance(val, (str, int)):
-            return None
-        if col_type is None:
-            return str(val)
-        if col_type in ("int", "bigint", "smallint", "tinyint"):
-            if isinstance(val, int):
-                return str(val)
-            try:
-                return str(int(val.strip()))
-            except ValueError:
-                return None
-        if col_type == "string":
-            return val if isinstance(val, str) else None
-        return None
-
-    def _eq_may(entry, col, val, types):
-        bl = (entry.get("blooms") or {}).get(col)
-        probe = _probe_value(val, None if types is None else types.get(col))
-        if bl is not None and probe is not None and not _bloom_hit(bl, probe):
-            return False
-        stats = entry.get("stats") or {}
-        if col not in stats:
-            return True
-        lo, hi = stats[col]
-        if isinstance(lo, str) and _ISO_TS.match(lo):
-            val = _canon_ts_lit(val)
-            if val is None:
-                return True
-        if isinstance(val, (int, float)) != isinstance(lo, (int, float)):
-            return True
-        if isinstance(lo, str) and _ISO_DATE.match(lo) and not _ISO_DATE.match(str(val)):
-            return True
-        return not (val < lo or val > hi)
-
-    def _entry_may_match(entry, conjuncts, types):
-        """False only when stats/nulls/bloom PROVE a conjunct can
-        never hold in this file — byte-identical decision procedure
-        to ``cowtable._file_may_match``."""
-        stats = entry.get("stats") or {}
-        nulls = entry.get("nulls")
-        for col, op, val in conjuncts:
-            if op in ("isnull", "notnull"):
-                if nulls is None:
-                    continue
-                nc = nulls.get(col, 0)
-                if op == "isnull" and nc == 0:
-                    return False
-                if op == "notnull" and nc == entry.get("rows"):
-                    return False
-                continue
-            if nulls is not None and nulls.get(col, 0) == entry.get("rows"):
-                return False
-            if op == "in":
-                if not any(_eq_may(entry, col, v, types) for v in val):
-                    return False
-                continue
-            if op == "=":
-                if not _eq_may(entry, col, val, types):
-                    return False
-                continue
-            if col not in stats:
-                continue
-            lo, hi = stats[col]
-            if isinstance(lo, str) and _ISO_TS.match(lo):
-                val = _canon_ts_lit(val)
-                if val is None:
-                    continue
-            if isinstance(val, (int, float)) != isinstance(lo, (int, float)):
-                continue
-            if (
-                isinstance(lo, str)
-                and _ISO_DATE.match(lo)
-                and not _ISO_DATE.match(str(val))
-            ):
-                continue
-            if op == "<" and lo >= val:
-                return False
-            if op == "<=" and lo > val:
-                return False
-            if op == ">" and hi <= val:
-                return False
-            if op == ">=" and hi < val:
-                return False
-        return True
-
-    def _filter_literal(val):
-        """Spark Filter value -> the manifest-stats-comparable form;
-        None means the type has no sound comparison against recorded
-        stats (decimals, binaries...) and the conjunct must not
-        prune."""
-        if isinstance(val, bool):
-            return None  # boolean stats not recorded; stay conservative
-        if isinstance(val, (int, float, str)):
-            return val
-        if isinstance(val, _dt.datetime):
-            # TIMESTAMP stats are canonical fixed-width strings (r12)
-            return _canon_ts_lit(val)
-        if isinstance(val, _dt.date):
-            return val.isoformat()  # DATE stats are ISO strings
-        return None
 
     class FilePartition(InputPartition):
         def __init__(self, data_dir, name, col_names, col_types, dv_path=None, pmap=None):
@@ -485,9 +200,9 @@ def _build_batch_source_class():
                 yield f  # always residual: Spark re-checks rows
 
         def partitions(self):
-            m = _load_manifest(self.table_path, self.snapshot)
-            data_dir = _os.path.join(_local(self.table_path), "data")
-            dv_dir = _os.path.join(_local(self.table_path), "_dv")
+            m = lt.load_manifest(self.table_path, self.snapshot)
+            data_dir = _os.path.join(lt.local(self.table_path), "data")
+            dv_dir = _os.path.join(lt.local(self.table_path), "_dv")
             pmap = m.get("physical_names") or {}
             files = m["files"]
             if self.conjuncts:
@@ -495,43 +210,8 @@ def _build_batch_source_class():
                 # never rewrites stats); probe under those
                 conjs = [(pmap.get(c, c), op, v) for c, op, v in self.conjuncts]
                 types = {pmap.get(k, k): v for k, v in self.col_types.items()}
-                files = [f for f in files if _entry_may_match(f, conjs, types)]
-                spec = m.get("bucket_by")
-                if spec:
-                    # BUCKET pruning, mirroring cowtable's engine-side
-                    # rule: an equality (or single-column IN) pinning
-                    # all bucket columns resolves the key's bucket with
-                    # one local Murmur3 and refutes every other
-                    # bucket's files; conservative everywhere else
-                    bphys = [pmap.get(c, c) for c in spec["columns"]]
-                    nb = int(spec["buckets"])
-                    eqs = {}
-                    for c, op, v in conjs:
-                        if c in bphys and c not in eqs:
-                            if op == "=":
-                                eqs[c] = [v]
-                            elif op == "in" and len(bphys) == 1:
-                                eqs[c] = list(v)
-                    if set(eqs) == set(bphys):
-                        btypes = [types.get(c) for c in bphys]
-                        tuples = [[]]
-                        for c in bphys:
-                            tuples = [t + [v] for t in tuples for v in eqs[c]]
-                        buckets = set()
-                        ok = True
-                        for t in tuples:
-                            b = _bucket_of_key(t, btypes, nb)
-                            if b is None:
-                                ok = False
-                                break
-                            buckets.add(b)
-                        if ok:
-                            files = [
-                                f
-                                for f in files
-                                if f.get("bucket") is None
-                                or f["bucket"] in buckets
-                            ]
+                files = [f for f in files if _file_may_match(f, conjs, types)]
+                files = _bucket_candidate_filter(m, files, conjs, types)
             return [
                 FilePartition(
                     data_dir,
@@ -545,78 +225,21 @@ def _build_batch_source_class():
             ]
 
         def read(self, partition):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            from urllib.parse import unquote as _unq
-
-            def _part_vals(name):
-                # Hive col=value/ path segments: the writer strips these
-                # columns from the file bytes; re-inject them typed
-                out = {}
-                for seg in name.split("/")[:-1]:
-                    c, sep, v = seg.partition("=")
-                    if not sep or c not in partition.col_names:
-                        continue
-                    v = _unq(v)
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        out[c] = None
-                        continue
-                    t = partition.col_types.get(c, "")
-                    if t in ("int", "bigint", "smallint", "tinyint"):
-                        out[c] = int(v)
-                    elif t in ("float", "double"):
-                        out[c] = float(v)
-                    elif t == "date":
-                        out[c] = _dt.date.fromisoformat(v)
-                    elif t == "timestamp":
-                        out[c] = _dt.datetime.fromisoformat(v)
-                    elif t == "boolean":
-                        out[c] = v.lower() == "true"
-                    else:
-                        out[c] = v
-                return out
-
-            pdf = pq.read_table(
-                _os.path.join(partition.data_dir, partition.name)
-            ).to_pandas()
-            if partition.pmap:
-                # column mapping: files store PHYSICAL names; surface
-                # the logical ones (mirrors cowtable._read_files)
-                pdf = pdf.rename(
-                    columns={p: l for l, p in partition.pmap.items()}
+            if partition is None:
+                # Spark hands a reader whose partitions() is empty one
+                # None partition: every file was pruned, or the
+                # snapshot has none
+                return
+            yield from lt.frame_rows(
+                lt.read_file(
+                    partition.data_dir,
+                    partition.name,
+                    partition.dv_path,
+                    partition.col_names,
+                    partition.col_types,
+                    partition.pmap,
                 )
-            if partition.dv_path is not None:
-                # merge-on-read: mask the deletion vector's positions
-                # for THIS file (pos = 0-based row index, which is
-                # exactly the pyarrow read order)
-                import numpy as np
-                import pyarrow.compute as pc
-
-                base = partition.name.rsplit("/", 1)[-1]
-                dv = pq.read_table(partition.dv_path, columns=["file", "pos"])
-                pos = dv.filter(pc.equal(dv["file"], base))["pos"].to_numpy()
-                if len(pos):
-                    keep = np.ones(len(pdf), dtype=bool)
-                    keep[pos.astype(int)] = False
-                    pdf = pdf[keep].reset_index(drop=True)
-            pvals = _part_vals(partition.name)
-            for c in partition.col_names:
-                if c in pvals:
-                    pdf[c] = pvals[c]
-                elif c not in pdf.columns:
-                    pdf[c] = None  # schema-evolved older file: NULL
-            for tup in pdf[partition.col_names].itertuples(index=False, name=None):
-                yield tuple(
-                    None
-                    if v is None or (isinstance(v, float) and v != v) or v is pd.NaT
-                    else (
-                        v.to_pydatetime()
-                        if isinstance(v, pd.Timestamp)
-                        else v.item() if hasattr(v, "item") else v
-                    )
-                    for v in tup
-                )
+            )
 
     class CowStagedFile(WriterCommitMessage):
         def __init__(self, entries):
@@ -637,8 +260,8 @@ def _build_batch_source_class():
         partitioned tables land each group under its ``col=value/``
         directory with the values recorded (decoded) on the entry and
         min==max partition stats; bloom-indexed columns get the same
-        manifest-level filter (identical XXH64 position scheme — the
-        mirrored ``_xxh_*`` above, parity-pinned by tests); CHECK
+        manifest-level filter (``format_rules``' XXH64 positions, the
+        ones the engine stages and probes with); CHECK
         constraints are validated over the task's rows BEFORE any byte
         lands (DuckDB evaluation of the ANSI expression — parseability
         is probed at planning time so a non-portable expression fails
@@ -676,41 +299,7 @@ def _build_batch_source_class():
                 # the batch contract requires a message (unlike the
                 # streaming sink); an entry-less one means "no file"
                 return CowStagedFile([])
-            # generated columns are recomputed FIRST (overwriting the
-            # frame's values — a generated column IS its expression),
-            # so CHECKs referencing them validate the landed values
-            rows = _apply_generated_rows(
-                rows, self.col_names, self.col_types, self.generated,
-                "cow writer",
-            )
-            # validate, THEN stage: a violating task leaves no bytes
-            _validate_rows(
-                rows, self.col_names, self.col_types,
-                self.check_constraints, "cow writer",
-            )
-            entries = _stage_groups(
-                rows,
-                {
-                    "col_names": self.col_names,
-                    "col_types": self.col_types,
-                    "pmap": self.pmap,
-                    "partition_by": self.partition_by,
-                    "bloom_columns": self.bloom_columns,
-                    "bucket": self.bucket,
-                    "data_dir": _os.path.join(_local(self.table_path), "data"),
-                    "prefix": "batch",
-                },
-            )
-            return CowStagedFile(entries)
-
-        def _drop_staged(self, messages):
-            data_dir = _os.path.join(_local(self.table_path), "data")
-            for msg in messages:
-                for e in getattr(msg, "entries", None) or []:
-                    try:
-                        _os.remove(_os.path.join(data_dir, *e["name"].split("/")))
-                    except OSError:
-                        pass
+            return CowStagedFile(stage_task(rows, self, "cow writer", "batch"))
 
         def commit(self, messages):
             import tempfile as _tempfile
@@ -722,82 +311,49 @@ def _build_batch_source_class():
                 for e in (m.entries or [])
             ]
             for _attempt in range(8):
-                snaps = _snapshots(self.table_path)
-                head = _load_manifest(self.table_path, snaps[-1])
-                drifted = {
-                    "partitioning": (head.get("partition_by") or [])
-                    != self.partition_by,
-                    "bloom indexing": (head.get("bloom_columns") or [])
-                    != self.bloom_columns,
-                    "CHECK constraints": (head.get("check_constraints") or {})
-                    != self.check_constraints,
-                    "generated columns": (head.get("generated_columns") or {})
-                    != self.generated,
-                    "bucketing": (head.get("bucket_by") or None) != self.bucket,
-                }
-                appeared = [k for k, v in drifted.items() if v]
+                # manifest proper only: an append references the
+                # parent's shards by name
+                snaps = lt.snapshots(self.table_path)
+                head = lt.load_manifest(self.table_path, snaps[-1], expand=False)
+                appeared = changed_features(head, self)
                 if appeared:
-                    # a table feature DIVERGED from what the writer
-                    # captured at planning (e.g. a concurrent ALTER
-                    # added a CHECK constraint the staged rows were
-                    # never validated against — the engine path
-                    # re-validates on exactly this race): abort
-                    # loudly, never publish unvetted bytes
-                    self._drop_staged(messages)
+                    # the engine path re-validates on this race; a
+                    # detached writer can only abort loudly
+                    lt.drop_staged(self.table_path, messages)
                     raise RuntimeError(
                         f"cow writer: {'/'.join(appeared)} changed on "
                         f"{self.table_path} between planning and commit; "
                         "re-run the write"
                     )
                 n = head["snapshot_id"] + 1
-                manifest = {
-                    k: v
-                    for k, v in head.items()
-                    if k
-                    in (
-                        "schema",
-                        "partition_by",
-                        "bloom_columns",
-                        "check_constraints",
-                        "write_mode",
-                        "physical_names",
-                        "used_physical",
-                        "txns",
-                        "bucket_by",
-                        "widened_columns",
-                        "generated_columns",
-                        "partition_specs",
-                        "default_spec_id",
-                    )
-                }
-                manifest.update(
-                    {
-                        "snapshot_id": n,
-                        "parent": head["snapshot_id"],
-                        "operation": "overwrite" if self.overwrite else "batch_append",
-                        "files": entries if self.overwrite else head["files"] + entries,
-                        "committed_at": _dt.datetime.now(
-                            _dt.timezone.utc
-                        ).isoformat(timespec="microseconds"),
-                    }
+                manifest = _child(
+                    head,
+                    "overwrite" if self.overwrite else "batch_append",
+                    committed_at=lt.utc_now(),
                 )
-                mdir = _os.path.join(_local(self.table_path), "_manifests")
+                if self.overwrite:
+                    manifest["files"] = entries
+                else:
+                    lt.append_files(self.table_path, head, entries, manifest)
+                if head.get("txns"):
+                    manifest["txns"] = head["txns"]
+                mdir = lt.manifest_dir(self.table_path)
                 fd, tmp = _tempfile.mkstemp(dir=mdir, suffix=".tmp")
                 with _os.fdopen(fd, "w") as fh:
                     _json.dump(manifest, fh)
                 try:
-                    _os.link(tmp, _manifest_path(self.table_path, n))
+                    _os.link(tmp, lt.manifest_path(self.table_path, n))
                     _os.remove(tmp)
                     return
                 except FileExistsError:
                     _os.remove(tmp)  # lost the race: reload head, retry
-            self._drop_staged(messages)
+            lt.drop_staged(self.table_path, messages)
             raise RuntimeError(
                 f"cow batch write lost {8} commit races at {self.table_path}"
             )
 
         def abort(self, messages):
-            self._drop_staged(messages)
+            lt.drop_staged(self.table_path, messages)
 
     class CowBatchDataSource(DataSource):
         """``spark.read.format("cow")`` / ``df.write.format("cow")``
@@ -812,7 +368,7 @@ def _build_batch_source_class():
 
             table_path = _table_path(self.options)
             n = _resolve_snapshot(table_path, self.options)
-            m = _load_manifest(table_path, n)
+            m = lt.load_manifest(table_path, n, expand=False)
             return StructType.fromJson(_json.loads(m["schema"]))
 
         def reader(self, schema):
@@ -820,14 +376,14 @@ def _build_batch_source_class():
 
         def writer(self, schema, overwrite):
             table_path = _table_path(self.options)
-            snaps = _snapshots(table_path)
+            snaps = lt.snapshots(table_path)
             if not snaps:
                 raise ValueError(
                     f"no COW table at {table_path} — create it with "
                     "cowtable.create first (the writer appends/overwrites "
                     "an existing table's content, it does not define schema)"
                 )
-            head = _load_manifest(table_path, snaps[-1])
+            head = lt.load_manifest(table_path, snaps[-1], expand=False)
             if head.get("identity_columns"):
                 # identity allocation needs the engine's high-water
                 # commit (manifest counter state a detached DSv2 task
@@ -839,89 +395,12 @@ def _build_batch_source_class():
                     "cowtable.append or gate INSERT (the engine "
                     "allocates their values)"
                 )
-            gen = head.get("generated_columns") or {}
-            parts = head.get("partition_by") or []
-            tschema0 = _json.loads(head["schema"])
-            # Spark's type JSON says 'long'/'integer'; canonicalize to
-            # simpleString before the supported-type checks
-            _CANON0 = {
-                "long": "bigint",
-                "integer": "int",
-                "short": "smallint",
-                "byte": "tinyint",
-            }
-            ttypes0 = {
-                f["name"]: _CANON0.get(f["type"], f["type"])
-                if isinstance(f["type"], str)
-                else f["type"]
-                for f in tschema0["fields"]
-            }
-            _GROUPABLE = ("tinyint", "smallint", "int", "bigint", "string", "date")
-            bad_part = [c for c in parts if ttypes0.get(c) not in _GROUPABLE]
-            if bad_part:
-                raise ValueError(
-                    f"cow writer: unsupported partition column type(s) for "
-                    f"{bad_part} — use cowtable.append"
-                )
-            bucket = head.get("bucket_by") or None
-            if bucket:
-                # bucket assignment is Murmur3 parity via the shared
-                # _closure_hash closures — supported for exactly the
-                # types those closures hash bit-identically to F.hash
-                bad_bkt = [
-                    c for c in bucket["columns"] if ttypes0.get(c) not in _GROUPABLE
-                ]
-                if bad_bkt:
-                    raise ValueError(
-                        f"cow writer: unsupported bucket column type(s) for "
-                        f"{bad_bkt} — use cowtable.append"
-                    )
-            checks = head.get("check_constraints") or {}
-            # probe ANSI parseability NOW (planning time) so a
-            # Spark-only expression fails the job upfront, never per
-            # executor task (shared probe: _closure_staging)
-            _probe_checks(tschema0["fields"], checks, "cow writer")
-            # generated columns (r8 punch-list #5): recomputable here
-            # iff each expression DuckDB-parses against the
-            # non-generated columns AND yields the declared type —
-            # probed NOW so a Spark-only expression fails the job
-            # upfront; the write path then recomputes the values per
-            # task, overwriting whatever the frame carried (the
-            # engine's _apply_generated invariant)
-            _probe_generated(tschema0["fields"], gen, "cow writer")
-            tschema = _json.loads(head["schema"])
-            tnames = [f["name"] for f in tschema["fields"]]
-            ttypes = {f["name"]: f["type"] for f in tschema["fields"]}
-            non_scalar = [c for c, t in ttypes.items() if not isinstance(t, str)]
-            if non_scalar:
-                raise ValueError(f"cow writer: unsupported nested columns {non_scalar}")
-            frame_cols = sorted(f.name for f in schema.fields)
-            missing = set(tnames) - set(frame_cols)
-            if frame_cols != sorted(tnames) and (
-                missing - set(gen) or set(frame_cols) - set(tnames)
-            ):
-                # generated columns may be OMITTED from the frame (the
-                # write recomputes them anyway); everything else must
-                # match exactly
-                raise ValueError(
-                    f"cow writer: frame columns {frame_cols}"
-                    f" != table columns {sorted(tnames)} (cast/rename first;"
-                    " only generated columns may be omitted)"
-                )
-            _CANON = {
-                "long": "bigint",
-                "integer": "int",
-                "short": "smallint",
-                "byte": "tinyint",
-            }
-            col_types = {c: _CANON.get(t, t) for c, t in ttypes.items()}
-            # planning-time staging-type check: a column the pyarrow
-            # staging path cannot type (binary/array/...) fails the
-            # job upfront with the column named, never per task
-            _arrow_schema(tnames, col_types, {})
+            tnames, col_types = plan_write(
+                head, [f.name for f in schema.fields], "cow writer", "cowtable.append"
+            )
             for f in schema.fields:
                 want = col_types[f.name]
-                got = _CANON.get(
+                got = _SPARK_JSON_CANON.get(
                     f.dataType.jsonValue() if isinstance(f.dataType.jsonValue(), str) else "",
                     f.dataType.simpleString(),
                 )
@@ -936,17 +415,13 @@ def _build_batch_source_class():
                 col_types,
                 head.get("physical_names") or {},
                 bool(overwrite),
-                partition_by=parts,
+                partition_by=head.get("partition_by") or [],
                 bloom_columns=head.get("bloom_columns") or [],
-                check_constraints=checks,
-                bucket=bucket,
-                generated=gen,
+                check_constraints=head.get("check_constraints") or {},
+                bucket=head.get("bucket_by") or None,
+                generated=head.get("generated_columns") or {},
             )
 
-    # test handles: the pinning test in test_cow_batch_source.py runs
-    # this self-contained matcher against cowtable's on randomized
-    # entries so the two decision procedures cannot drift
-    CowBatchDataSource._entry_may_match = staticmethod(_entry_may_match)
     CowBatchDataSource._reader_cls = CowBatchReader
     return CowBatchDataSource
 

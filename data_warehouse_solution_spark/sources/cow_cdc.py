@@ -21,7 +21,8 @@ Design (mirrors the batch ``cowtable.changes`` exactly):
   ever being opened). Per-partition work is bounded by the commit's
   touched files, the same bound the batch CDC has.
 - **Executor-side read is pure pyarrow/pandas** (a stream reader runs
-  in a Python worker with no SparkSession): read the removed and
+  in a Python worker with no SparkSession; ``_local_table.read_file``
+  is the per-file read the batch ``cow`` reader uses): read the removed and
   added parquet files, bag-EXCEPT them by counting (+1 added / -1
   removed per row), and emit the net rows — a copy-on-write rewrite
   carries unaffected rows over byte-identical, so they cancel and
@@ -45,79 +46,21 @@ Usage::
 
 from __future__ import annotations
 
+import json as _json
+import os as _os
+
+from . import _local_table as lt
+
 
 def _build_stream_source_class():
-    """Factory: classes close over their deps by value (cloudpickle
-    ships them to executors; the package need not be importable
-    there) — the same closure rule as ``http_csv``."""
-    import datetime as _dt
-    import json as _json
-    import os as _os
-    import re as _re
-
+    """Factory for the source's classes. Their hooks run in Python
+    planner and executor workers; the functions they call live in
+    importable modules, which ``register_once`` ships there."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
         InputPartition,
     )
-
-    _MANIFEST_RE = _re.compile(r"^manifest-(\d{8})\.json$")
-
-    def _local(path):
-        return path[7:] if path.startswith("file://") else path.removeprefix("file:")
-
-    def _table_path_opt(options):
-        """tablePath, or a catalog NAME via ``option("table", ...)``
-        (r11 punch #5) — the self-contained ``catalog.resolve_or_raise``
-        mirror (this runs in spawned planner processes; parity pinned
-        by ``tests/test_cow_batch_source.py``). ``catalogDir`` option
-        overrides the engine-default ``<cwd>/spark-warehouse/
-        _cow_catalog`` location."""
-        name = options.get("table")
-        if name:
-            name = name.strip().strip("`\"").lower()
-            cat = _local(
-                options.get("catalogdir")
-                or options.get("catalogDir")
-                or _os.path.join(_os.getcwd(), "spark-warehouse", "_cow_catalog")
-            )
-            entry = _os.path.join(cat, f"{name}.json")
-            if not _os.path.isfile(entry):
-                known = (
-                    sorted(f[:-5] for f in _os.listdir(cat) if f.endswith(".json"))
-                    if _os.path.isdir(cat)
-                    else []
-                )
-                raise ValueError(
-                    f"unknown table name {name!r} — registered tables: "
-                    f"{known if known else '(none)'}"
-                )
-            with open(entry) as fh:
-                return _local(_json.loads(fh.read())["path"])
-        return options.get("tablepath") or options.get("tablePath")
-
-    def _load_manifest(table_path, n):
-        mpath = _os.path.join(_local(table_path), "_manifests", f"manifest-{n:08d}.json")
-        with open(mpath) as fh:
-            m = _json.load(fh)
-        if "file_shards" in m:  # sharded large-table file list
-            files = []
-            for name in m["file_shards"]:
-                with open(_os.path.join(_local(table_path), "_manifests", name)) as fh:
-                    files += _json.load(fh)
-            m["files"] = files
-        return m
-
-    def _snapshots(table_path):
-        mdir = _os.path.join(_local(table_path), "_manifests")
-        if not _os.path.isdir(mdir):
-            return []
-        out = []
-        for name in _os.listdir(mdir):
-            mm = _MANIFEST_RE.match(name)
-            if mm:
-                out.append(int(mm.group(1)))
-        return sorted(out)
 
     class CommitPartition(InputPartition):
         def __init__(
@@ -134,7 +77,7 @@ def _build_stream_source_class():
 
     class CowCdcStreamReader(DataSourceStreamReader):
         def __init__(self, schema, options):
-            self.table_path = _table_path_opt(options)
+            self.table_path = lt.table_path(options)
             if not self.table_path:
                 raise ValueError("cowcdc requires the 'tablePath' option")
             # table columns only (schema() appended the two CDC cols)
@@ -142,7 +85,7 @@ def _build_stream_source_class():
             self.col_types = {
                 f.name: f.dataType.simpleString() for f in schema.fields[:-2]
             }
-            snaps = _snapshots(self.table_path)
+            snaps = lt.snapshots(self.table_path)
             if not snaps:
                 raise ValueError(f"no COW snapshots at {self.table_path}")
             start = options.get("startingsnapshot") or options.get("startingSnapshot")
@@ -157,48 +100,17 @@ def _build_stream_source_class():
                 # Delta CDF parity (INCLUSIVE): the first snapshot
                 # committed at-or-after the instant is the first one
                 # streamed, so the base is the latest snapshot
-                # committed STRICTLY BEFORE it — a commit stamped
-                # exactly at the requested timestamp streams as the
-                # first batch (r12 review fix: `<=` excluded it)
-                import datetime as _dt
-
-                want = _dt.datetime.fromisoformat(ts)
-                if want.tzinfo is None:
-                    want = want.replace(tzinfo=_dt.timezone.utc)
-                best = None
+                # committed STRICTLY BEFORE it (0 when the instant
+                # precedes the first commit: replay all)
+                want = lt.utc_instant(ts)
+                self.start_snapshot = 0
                 for n in snaps:
-                    m_ = _load_manifest(self.table_path, n)
-                    stamp = m_.get("committed_at")
-                    if stamp is not None:
-                        at = _dt.datetime.fromisoformat(stamp)
-                    else:  # legacy manifest: file mtime
-                        at = _dt.datetime.fromtimestamp(
-                            _os.path.getmtime(
-                                _os.path.join(
-                                    _local(self.table_path),
-                                    "_manifests",
-                                    f"manifest-{n:08d}.json",
-                                )
-                            ),
-                            tz=_dt.timezone.utc,
-                        )
-                    if at < want:
-                        best = n
-                if best is None:
-                    best = 0  # precedes the first commit: replay all
-                self.start_snapshot = best
+                    m = lt.load_manifest(self.table_path, n, expand=False)
+                    if lt.committed_at(self.table_path, m, n) < want:
+                        self.start_snapshot = n
             elif start is not None and not str(start).isdigit():
-                # r11 snapshot tags: a non-numeric start is a tag name
-                # resolved through the HEAD manifest's map
-                tags = _load_manifest(self.table_path, snaps[-1]).get(
-                    "tags"
-                ) or {}
-                if str(start) not in tags:
-                    raise ValueError(
-                        f"unknown tag {start!r} at {self.table_path}; "
-                        f"known tags: {sorted(tags) or '(none)'}"
-                    )
-                self.start_snapshot = int(tags[str(start)])
+                # a non-numeric start is a snapshot tag name
+                self.start_snapshot = lt.tag_snapshot(self.table_path, snaps[-1], start)
             else:
                 self.start_snapshot = (
                     int(start) if start is not None else snaps[-1]
@@ -208,13 +120,13 @@ def _build_stream_source_class():
             return {"snapshot": self.start_snapshot}
 
         def latestOffset(self):
-            snaps = _snapshots(self.table_path)
+            snaps = lt.snapshots(self.table_path)
             return {"snapshot": snaps[-1] if snaps else self.start_snapshot}
 
         def partitions(self, start, end):
             lo, hi = start["snapshot"], end["snapshot"]
-            data_dir = _os.path.join(_local(self.table_path), "data")
-            dv_dir = _os.path.join(_local(self.table_path), "_dv")
+            data_dir = _os.path.join(lt.local(self.table_path), "data")
+            dv_dir = _os.path.join(lt.local(self.table_path), "_dv")
             out = []
 
             def _eff(f):
@@ -227,9 +139,9 @@ def _build_stream_source_class():
             # startingSnapshot=0 replays ALL history: snapshot ids start
             # at 1, so the pre-create state is a synthesized empty
             # manifest and commit 1 streams as pure inserts
-            prev = {"files": []} if lo == 0 else _load_manifest(self.table_path, lo)
+            prev = {"files": []} if lo == 0 else lt.load_manifest(self.table_path, lo)
             for n in range(lo + 1, hi + 1):
-                m = _load_manifest(self.table_path, n)
+                m = lt.load_manifest(self.table_path, n)
                 pf = {_eff(f) for f in prev["files"]}
                 cf = {_eff(f) for f in m["files"]}
                 out.append(
@@ -248,95 +160,24 @@ def _build_stream_source_class():
             return out
 
         def read(self, partition):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            from urllib.parse import unquote as _unq
-
-            def _part_vals(name):
-                # Hive-style col=value/ directory segments of the file's
-                # relative path — the writer strips these columns from
-                # the file bytes, so the CDC reader re-injects them here
-                # (typed), exactly like the batch read's basePath does
-                out = {}
-                for seg in name.split("/")[:-1]:
-                    c, _, v = seg.partition("=")
-                    if not _ or c not in partition.col_names:
-                        continue
-                    v = _unq(v)
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        out[c] = None
-                        continue
-                    t = partition.col_types.get(c, "")
-                    if t in ("int", "bigint", "smallint", "tinyint"):
-                        out[c] = int(v)
-                    elif t in ("float", "double"):
-                        out[c] = float(v)
-                    elif t == "date":
-                        # the batch path types date partitions; leaving
-                        # the raw directory string here would mismatch
-                        # the DateType schema field at row conversion
-                        out[c] = _dt.date.fromisoformat(v)
-                    elif t == "timestamp":
-                        out[c] = _dt.datetime.fromisoformat(v)
-                    elif t == "boolean":
-                        out[c] = v.lower() == "true"
-                    else:
-                        out[c] = v
-                return out
-
-            def _frame(entries):
-                import numpy as np
-                import pyarrow.compute as pc
-
-                frames = []
+            def _rows(entries):
                 for name, dv_name in entries:
-                    t = pq.read_table(_os.path.join(partition.data_dir, name))
-                    pdf = t.to_pandas()
-                    if dv_name is not None:
-                        # merge-on-read entry: mask the dv's positions
-                        # for THIS file (row position = read order)
-                        base = name.rsplit("/", 1)[-1]
-                        dv = pq.read_table(
-                            _os.path.join(partition.dv_dir, dv_name),
-                            columns=["file", "pos"],
+                    dv_path = None if dv_name is None else _os.path.join(partition.dv_dir, dv_name)
+                    yield from lt.frame_rows(
+                        lt.read_file(
+                            partition.data_dir,
+                            name,
+                            dv_path,
+                            partition.col_names,
+                            partition.col_types,
+                            partition.pmap,
                         )
-                        pos = dv.filter(pc.equal(dv["file"], base))["pos"].to_numpy()
-                        if len(pos):
-                            keep = np.ones(len(pdf), dtype=bool)
-                            keep[pos.astype(int)] = False
-                            pdf = pdf[keep].reset_index(drop=True)
-                    if partition.pmap:
-                        # column mapping: files hold PHYSICAL names
-                        pdf = pdf.rename(
-                            columns={p: l for l, p in partition.pmap.items()}
-                        )
-                    pvals = _part_vals(name)
-                    for c in partition.col_names:
-                        if c in pvals:
-                            pdf[c] = pvals[c]
-                        elif c not in pdf.columns:
-                            # schema-evolved older file: column reads NULL
-                            pdf[c] = None
-                    frames.append(pdf[partition.col_names])
-                if not frames:
-                    return pd.DataFrame(columns=partition.col_names)
-                return pd.concat(frames, ignore_index=True)
-
-            def _keys(pdf):
-                for tup in pdf.itertuples(index=False, name=None):
-                    yield tuple(
-                        None
-                        if v is None or (isinstance(v, float) and v != v) or v is pd.NaT
-                        else (v.to_pydatetime() if isinstance(v, pd.Timestamp) else
-                              v.item() if hasattr(v, "item") else v)
-                        for v in tup
                     )
 
             counts: dict[tuple, int] = {}
-            for key in _keys(_frame(partition.added)):
+            for key in _rows(partition.added):
                 counts[key] = counts.get(key, 0) + 1
-            for key in _keys(_frame(partition.removed)):
+            for key in _rows(partition.removed):
                 counts[key] = counts.get(key, 0) - 1
             for key, net in counts.items():
                 if net == 0:
@@ -356,10 +197,10 @@ def _build_stream_source_class():
             return "cowcdc"
 
         def schema(self):
-            table_path = _table_path_opt(self.options)
+            table_path = lt.table_path(self.options)
             if not table_path:
                 raise ValueError("cowcdc requires the 'tablePath' option")
-            snaps = _snapshots(table_path)
+            snaps = lt.snapshots(table_path)
             if not snaps:
                 raise ValueError(f"no COW snapshots at {table_path}")
             from pyspark.sql.types import (
@@ -369,7 +210,7 @@ def _build_stream_source_class():
                 StructType,
             )
 
-            m = _load_manifest(table_path, snaps[-1])
+            m = lt.load_manifest(table_path, snaps[-1], expand=False)
             base = StructType.fromJson(_json.loads(m["schema"]))
             return StructType(
                 list(base.fields)

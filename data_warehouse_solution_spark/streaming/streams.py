@@ -579,8 +579,8 @@ def stream_cowsink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stream_cdc_feed_roundtrip``'s reader.
 
     The target is BUCKETED on event_id (r8): each sink task groups
-    its rows by Murmur3 bucket id (shared ``_closure_hash`` parity
-    closures), stages one file per bucket with the ``_000NN`` suffix,
+    its rows by Murmur3 bucket id (``format_rules``, the engine's
+    own hash), stages one file per bucket with the ``_000NN`` suffix,
     and the commit carries the bucket spec — asserted over every
     staged entry HERE, so streaming producers feed the flagship
     zero-Exchange-join layout through the format string alone."""

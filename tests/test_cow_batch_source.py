@@ -160,67 +160,152 @@ def test_pushdown_is_sound_after_rename_and_unknown_types(spark, tmp_path):
     assert len(rdr.partitions()) == total
 
 
-def test_pushdown_matcher_pinned_against_cowtable(spark):
-    """Randomized agreement: the DataSource's self-contained matcher
-    must decide identically to cowtable._file_may_match on arbitrary
-    entries and conjuncts (including bloom probes, which exercise the
-    duplicated XXH64)."""
-    import base64
+def _random_table(spark, path, rng):
+    """A small multi-file table: ints with NULLs, bloom-indexed
+    multi-character strings, timestamp-shaped STRINGs and a real
+    TIMESTAMP column."""
+    import datetime as dt
+
+    words = ["a", "ab", "apple", "apricot", "b", "ban", "banana", "zz", "Zed", "mu\u00f1"]
+    schema = "k int, s string, t string, ts timestamp"
+
+    def batch(n):
+        rows = []
+        for _ in range(n):
+            at = dt.datetime(2024, 1, 1) + dt.timedelta(minutes=rng.randrange(0, 24 * 60))
+            rows.append((
+                None if rng.random() < 0.15 else rng.randrange(-20, 20),
+                None if rng.random() < 0.1 else rng.choice(words),
+                None if rng.random() < 0.1 else at.isoformat(sep=" ", timespec="microseconds"),
+                at,
+            ))
+        return spark.createDataFrame(rows, schema)
+
+    cow.create(spark, path, batch(rng.randrange(1, 6)), bloom_columns=["s"])
+    for _ in range(rng.randrange(2, 5)):
+        cow.append(spark, path, batch(rng.randrange(1, 6)))
+
+
+def _random_filter(rng):
+    """One pushed-down-able predicate: =, a range, IN or IS [NOT] NULL
+    on one column, sometimes ANDed with a second; a few refute every
+    file outright."""
+
+    def one():
+        col = rng.choice(["k", "s", "t", "ts"])
+        op = rng.choice(["=", "<", "<=", ">", ">=", "in", "isnull", "notnull"])
+        if op in ("isnull", "notnull"):
+            return f"{col} IS {'NOT ' if op == 'notnull' else ''}NULL"
+        if col == "k":
+            lits = [str(rng.randrange(-25, 25)) for _ in range(3)]
+        elif col == "s":
+            lits = [repr(rng.choice(["a", "ap", "apple", "b", "banana", "c", "nope", "zz"])) for _ in range(3)]
+        else:
+            hour = rng.randrange(0, 24)
+            lits = [
+                rng.choice([
+                    f"'2024-01-01T{hour:02d}:00:00'",
+                    f"'2024-01-01 {hour:02d}:30:00'",
+                    f"'2024-01-01 {hour:02d}:00:00.000000'",
+                    "'2024-01-01'",
+                    "'2024-01-02'",
+                ])
+                for _ in range(3)
+            ]
+            if col == "ts":
+                lits = [f"TIMESTAMP {x}" for x in lits]
+        if op == "in":
+            return f"{col} IN ({', '.join(lits)})"
+        return f"{col} {op} {lits[0]}"
+
+    if rng.random() < 0.1:
+        return rng.choice(["k > 100", "s = 'nope'", "t > 'zzz'", "k < -100 AND s IS NOT NULL"])
+    return one() if rng.random() < 0.6 else f"{one()} AND {one()}"
+
+
+def test_reader_results_match_cowtable_read(spark, tmp_path):
+    """End-to-end result parity between the two readers:
+    ``spark.read.format("cow")`` returns exactly the rows
+    ``cowtable.read`` does, on randomized small tables and randomized
+    pushed filters, including filters that refute every file. The
+    fixed cases come first: a STRING column whose stats look like
+    timestamps (a literal must compare as written, not canonicalized
+    into a timestamp), and a read whose every file is pruned."""
     import random
+    from collections import Counter
 
-    from data_warehouse_solution_spark.cowtable import (
-        _bloom_positions,
-        _file_may_match,
+    from .conftest import hyp_examples
+
+    register_cow_batch(spark)
+
+    def check(path, pred):
+        want = Counter(map(tuple, cow.read(spark, path).filter(pred).collect()))
+        got = Counter(map(tuple, _read(spark, path).filter(pred).collect()))
+        assert got == want, (path, pred)
+
+    ts_str = str(tmp_path / "ts_shaped")
+    cow.create(
+        spark, ts_str, spark.createDataFrame([("2024-01-01 06:00:00.000000",)], "s string")
     )
-    from data_warehouse_solution_spark.sources.cow_batch import CowBatchDataSource
+    check(ts_str, "s < '2024-01-01T05:00:00'")
+    assert _read(spark, ts_str).filter("s < '2024-01-01T05:00:00'").count() == 1
+    ints = str(tmp_path / "ints")
+    cow.create(spark, ints, spark.range(5).selectExpr("CAST(id AS INT) AS k"))
+    assert _read(spark, ints).filter("k > 100").count() == 0
+    empty = str(tmp_path / "empty")
+    cow.create(spark, empty, spark.createDataFrame([], "k int"))
+    assert _read(spark, empty).count() == 0
 
-    rng = random.Random(77)
-    m_bits, k_hash = 256, 3
+    rng = random.Random(20261018)
+    for i in range(4):
+        path = str(tmp_path / f"rand{i}")
+        _random_table(spark, path, rng)
+        for _ in range(hyp_examples(40) // 4 + 2):
+            check(path, _random_filter(rng))
 
-    def bloom_of(values):
-        bitmap = bytearray(m_bits // 8)
-        for v in values:
-            for p in _bloom_positions(str(v), m_bits, k_hash):
-                bitmap[p >> 3] |= 1 << (p & 7)
-        return {"b64": base64.b64encode(bytes(bitmap)).decode(), "m": m_bits, "k": k_hash}
 
-    types = {"a": "bigint", "s": "string"}
-    for trial in range(300):
-        lo = rng.randrange(-50, 50)
-        hi = lo + rng.randrange(0, 60)
-        svals = rng.sample(["x", "y", "z", "w", "q"], rng.randrange(1, 4))
-        rows = rng.randrange(1, 100)
-        entry = {
-            "rows": rows,
-            "stats": {"a": [lo, hi], "s": [min(svals), max(svals)]},
-            "nulls": {"a": rng.choice([0, rows // 2, rows]), "s": 0},
-        }
-        if rng.random() < 0.6:
-            entry["blooms"] = {
-                "a": bloom_of(range(lo, hi + 1)),
-                "s": bloom_of(svals),
-            }
-        conjs = []
-        for _ in range(rng.randrange(1, 4)):
-            col = rng.choice(["a", "s"])
-            if col == "a":
-                op = rng.choice(["=", "<", "<=", ">", ">=", "in", "isnull", "notnull"])
-                val = (
-                    [rng.randrange(-60, 120) for _ in range(2)]
-                    if op == "in"
-                    else None if op in ("isnull", "notnull") else rng.randrange(-60, 120)
-                )
-            else:
-                op = rng.choice(["=", "in"])
-                val = (
-                    rng.sample(["x", "y", "z", "nope", "q"], 2)
-                    if op == "in"
-                    else rng.choice(["x", "y", "z", "nope"])
-                )
-            conjs.append((col, op, val))
-        want = _file_may_match(entry, conjs, types)
-        got = CowBatchDataSource._entry_may_match(entry, conjs, types)
-        assert got == want, (trial, entry, conjs)
+_OUTSIDE_CHECKOUT = """
+import os, sys, tempfile
+sys.path.insert(0, sys.argv[1])
+from data_warehouse_solution_spark.session import EngineConfig, build_session
+import data_warehouse_solution_spark.cowtable as cow
+from data_warehouse_solution_spark.sources.cow_batch import register_cow_batch
+
+spark = build_session(EngineConfig(
+    app_name="cwd-outside", master="local[2]", shuffle_partitions=2, driver_memory="1g"
+))
+path = os.path.join(tempfile.mkdtemp(), "t")
+cow.create(spark, path, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+           bloom_columns=["v"])
+register_cow_batch(spark)
+print("read", spark.read.format("cow").load(path).filter("v = 'b'").count())
+spark.createDataFrame([(3, "c")], "k int, v string").write.format("cow").mode("append").save(path)
+print("written", cow.read(spark, path).count())
+spark.stop()
+"""
+
+
+def test_sources_run_from_a_cwd_outside_the_checkout(tmp_path):
+    """The sources' planner and executor workers import the package
+    even when neither the cwd nor PYTHONPATH reaches the checkout: the
+    driver alone puts it on ``sys.path``, and registration ships it.
+    One subprocess (one JVM) reads and batch-writes a ``cow`` table."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_CHECKOUT, root],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "read 1" in out.stdout and "written 3" in out.stdout, out.stdout
 
 
 def test_reader_bucket_pruning_parity_and_correctness(spark, tmp_path):

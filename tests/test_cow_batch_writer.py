@@ -435,3 +435,70 @@ def test_batch_writer_unsupported_type_fails_at_planning(spark, tmp_path):
         spark.createDataFrame(
             [(2, bytearray(b"y"))], "k long, payload binary"
         ).write.format("cow").option("tablePath", p).mode("append").save()
+
+
+def test_dsv2_commits_carry_the_engine_table_state(spark, tmp_path):
+    """The ``cow`` batch writer and the ``cowsink`` stream writer build
+    their child manifest with the engine's carry rule, so a tag, a
+    column DEFAULT and COPY INTO's loaded-file registry survive their
+    commits, and re-running the COPY still loads nothing."""
+    from data_warehouse_solution_spark.sources.cow_sink import CowSinkDataSource
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    (src / "a.csv").write_text("k,s,v\n7,g,7.5\n")
+    p = str(tmp_path / "t")
+    _mk(spark, p, column_defaults={"s": "'dflt'"})
+    assert cow.copy_into(spark, p, str(src), "csv", format_options={"header": "true"})[
+        "files_loaded"
+    ] == 1
+    cow.create_tag(spark, p, "v1")
+
+    def carried():
+        head = cow._load_manifest(spark, p, cow.current_snapshot(spark, p))
+        return (
+            sorted(head.get("tags") or {}),
+            (head.get("column_defaults") or {}).get("s"),
+            bool(head.get("copy_shards")),
+        )
+
+    (
+        spark.createDataFrame([(3, "c", 3.5)], "k long, s string, v double")
+        .write.format("cow")
+        .option("tablePath", p)
+        .mode("append")
+        .save()
+    )
+    assert carried() == (["v1"], "'dflt'", True)
+    w = CowSinkDataSource({"tablePath": p, "txnAppId": "carry"}).streamWriter(
+        cow.table_schema(spark, p), overwrite=False
+    )
+    rows = spark.createDataFrame([(4, "d", 4.5)], "k long, s string, v double").collect()
+    w.commit([w.write(iter(rows))], batchId=0)
+    assert carried() == (["v1"], "'dflt'", True)
+    assert cow.copy_into(spark, p, str(src), "csv", format_options={"header": "true"})[
+        "files_loaded"
+    ] == 0
+    assert cow.read(spark, p).count() == 5
+
+
+def test_batch_append_references_parent_shards(spark, tmp_path, monkeypatch):
+    """A ``cow`` batch append into a SHARDED table references the
+    parent's shards by name and writes one new shard, like the engine's
+    and the sink's appends, instead of inlining the whole file list."""
+    import json
+
+    monkeypatch.setattr(cow, "MANIFEST_SHARD_ROWS", 4)
+    p = str(tmp_path / "sharded")
+    cow.create(spark, p, spark.range(40).selectExpr("id AS k").repartition(13))
+    m1 = json.loads(cow._read_file(spark, cow._manifest_path(p, 1)).decode())
+    assert len(m1["file_shards"]) > 2 and m1["n_files"] == 13
+    register_cow_batch(spark)
+    spark.range(1).selectExpr("id + 100 AS k").write.format("cow").option(
+        "tablePath", p
+    ).mode("append").save()
+    m2 = json.loads(cow._read_file(spark, cow._manifest_path(p, 2)).decode())
+    assert "files" not in m2 and m2["n_files"] == 14
+    assert set(m1["file_shards"][:-1]) <= set(m2["file_shards"])
+    assert len(set(m2["file_shards"]) - set(m1["file_shards"])) == 1
+    assert cow.read(spark, p).count() == 41

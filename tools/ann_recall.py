@@ -93,15 +93,10 @@ def main() -> None:
     )
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     args = ap.parse_args()
-    from pyspark.sql import SparkSession
+    from data_warehouse_solution_spark.session import EngineConfig, build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .appName("ann-recall")
-        .getOrCreate()
+    spark = build_session(
+        EngineConfig(app_name="ann-recall", master=f"local[{args.cpus}]", shuffle_partitions=32)
     )
     spark.sparkContext.setLogLevel("ERROR")
     print(json.dumps(measure(spark, args.sf_dir)))

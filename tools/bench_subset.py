@@ -25,21 +25,10 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
 
-    from pyspark.sql import SparkSession
+    from data_warehouse_solution_spark.session import EngineConfig, build_session
 
-    spark = (
-        SparkSession.builder.appName("dws-bench-subset")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
+    spark = build_session(
+        EngineConfig(app_name="dws-bench-subset", master=f"local[{cpus}]", shuffle_partitions=max(int(cpus), 8))
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -24,24 +24,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from data_warehouse_solution_spark.session import EngineConfig, build_session
 
-    spark = (
-        SparkSession.builder.appName("dws-plans")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep the session config identical to bench.py's so captured
-        # plans are shaped by the same AQE settings the timings ran
-        # under (skew-join rewrites change the physical plan)
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
+    spark = build_session(
+        EngineConfig(app_name="dws-plans", master=f"local[{cpus}]", shuffle_partitions=max(int(cpus), 8))
     )
     spark.sparkContext.setLogLevel("ERROR")
 

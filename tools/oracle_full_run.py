@@ -30,18 +30,10 @@ def main() -> int:
         sf_dir = sys.argv[sys.argv.index("--sf-dir") + 1]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from data_warehouse_solution_spark.session import EngineConfig, build_session
 
-    spark = (
-        SparkSession.builder.appName("dws-oracle-full")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = build_session(
+        EngineConfig(app_name="dws-oracle-full", master=f"local[{cpus}]", shuffle_partitions=max(int(cpus), 8))
     )
     spark.sparkContext.setLogLevel("ERROR")
 
