@@ -52,12 +52,17 @@ correct). Declared ``bloom_columns`` additionally carry per-file
 Bloom filters, so point (`=`) predicates on high-cardinality
 unordered keys — where every file's min/max spans the whole domain —
 still prune to the handful of files that may hold the value (see the
-bloom section below). Surviving candidates then go through an exact predicate
-scan over the hidden ``_metadata.file_path`` column — Catalyst prunes
+bloom section below). When several candidates survive, COW
+DELETE/UPDATE probe them with an exact predicate scan over the hidden
+``_metadata.file_path`` column (``_affected_files``) — Catalyst prunes
 to the predicate's columns and parquet row-group stats skip clean
-stripes. At 100 TB the rewrite cost is proportional to the affected
-files and the planning cost to the stat-surviving candidates, not
-the table — the entire point of COW.
+stripes — and rewrite only the files that match. A single surviving
+candidate is not probed: its rewrite is staged directly and the
+staging write counts the matches, so a statement that matched nothing
+publishes nothing (one Spark job instead of three). At 100 TB the
+rewrite cost is proportional to the affected files and the planning
+cost to the stat-surviving candidates, not the table — the entire
+point of COW.
 
 Manifest scalability: beyond ``MANIFEST_SHARD_ROWS`` file entries a
 snapshot's file list is sharded into side ``manifest-N-files-K.json``
@@ -103,7 +108,7 @@ import uuid
 import weakref
 from urllib.parse import urlsplit
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .format_rules import (
@@ -1688,7 +1693,9 @@ def _read_files(
     # ``lineage`` surfaces (_cow_file, _cow_pos) from the hidden
     # ``_metadata`` columns — those resolve only against the SCAN,
     # not past a Union, so they must attach per vintage group here
-    sel = [F.col(pmap.get(n, n)).alias(n) for n in schema.fieldNames()]
+    # a column that was never renamed is selected by name: a Column
+    # object per name costs a few py4j round trips each
+    sel = [F.col(pmap[n]).alias(n) if n in pmap else n for n in schema.fieldNames()]
     if lineage:
         sel += [
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
@@ -1782,8 +1789,7 @@ def _read_entries(
     dvd = [e for e in entries if e.get("dv")]
     parts: list[DataFrame] = []
     if plain:
-        df = _read_files(spark, table_path, m, plain, lineage=lineage)
-        parts.append(df.select(*out_cols))
+        parts.append(_read_files(spark, table_path, m, plain, lineage=lineage))
     if dvd:
         scan = _read_files(
             spark, table_path, m, [e["name"] for e in dvd], lineage=True
@@ -3292,17 +3298,27 @@ def reorg_purge(
 
 
 def _affected_files(
-    spark: SparkSession, table_path: str, m: dict, cond, condition_str: str
+    spark: SparkSession,
+    table_path: str,
+    m: dict,
+    cond,
+    condition_str: str,
+    candidates: list[dict] | None = None,
 ) -> set[str]:
-    """Basenames of data files containing >=1 row matching ``cond``.
+    """Names of data files containing >=1 row matching ``cond`` (the
+    probe: two Spark jobs under AQE).
 
     Two pruning layers before any data is read: (1) MANIFEST stats —
     files whose min/max ranges refute the condition's recognized
     conjuncts are skipped without opening them (the Iceberg move);
-    (2) the exact predicate scan over the surviving candidates is
-    column-pruned by Catalyst and row-group-skipped by parquet footer
-    stats. The scan keeps selection exact whatever the predicate."""
-    candidates = stats_candidate_files(m, condition_str)
+    ``candidates`` passes in a ``stats_candidate_files`` result the
+    caller already holds; (2) the exact predicate scan over the
+    surviving candidates is column-pruned by Catalyst and
+    row-group-skipped by parquet footer stats. The scan keeps selection
+    exact whatever the predicate. COW DELETE/UPDATE probe only when
+    the stats leave several candidates (see ``_cow_rewrite``)."""
+    if candidates is None:
+        candidates = stats_candidate_files(m, condition_str)
     if not candidates:
         return set()
     # basenames are snapshot-scoped-unique; map them back to the
@@ -3407,11 +3423,17 @@ def _rewrite_commit(
     operation: str,
     rebase_condition: str | None = None,
     rebase_conjuncts: list | None = None,
+    matched: Observation | None = None,
 ) -> dict:
     """Snapshot N+1 = (files - affected) + rewrite(affected) +
     appended. Returns commit stats. ``rebase_condition`` (predicate
     DML) or ``rebase_conjuncts`` (MERGE's source-key envelope) opt
-    into conflict rebase on a lost commit race — see _rebase_head."""
+    into conflict rebase on a lost commit race — see _rebase_head.
+
+    ``matched`` is an unprobed rewrite's count of matching rows,
+    observed on ``rewritten`` (metric ``n``) by the staging write
+    itself: when it is 0 nothing is published, the staged files are
+    deleted, and the stats are ``_unchanged(m)``."""
     snap = m["snapshot_id"] + 1
     checks = m.get("check_constraints") or None
     # CHECK enforcement happens on the STAGED files (one read of only
@@ -3456,7 +3478,9 @@ def _rewrite_commit(
         if appended is not None:
             c.entries += _stage_files(spark, table_path, appended, snap, m, checks)
 
-    def child(c: _Commit) -> dict:
+    def child(c: _Commit) -> dict | None:
+        if matched is not None and not matched.get["n"]:
+            return None
         untouched = [f for f in c.head["files"] if f["name"] not in affected]
         manifest = _child(c.head, operation, files=untouched + c.entries)
         _advance_identity(manifest, c.head, c.entries)
@@ -3473,6 +3497,8 @@ def _rewrite_commit(
             spark, table_path, head, affected, rebase_condition, rebase_conjuncts
         ),
     )
+    if c.manifest is None:
+        return _unchanged(m)
     stats = {
         "snapshot_id": c.manifest["snapshot_id"],
         "files_rewritten": len(affected),
@@ -3688,6 +3714,45 @@ def _mor_assemble(
         free_local_checkpoints(new_pos)
 
 
+def _cow_rewrite(
+    spark: SparkSession,
+    table_path: str,
+    m: dict,
+    cond: Column,
+    condition: str,
+    operation: str,
+    rewrite,
+) -> dict:
+    """Copy-on-write DELETE/UPDATE: stage ``rewrite(rows)`` for the
+    files holding a match and commit them over ``m``.
+
+    Manifest stats pick the candidate files once. Several candidates
+    are probed (``_affected_files``, two jobs) so only the files that
+    really match are rewritten. A single candidate is not probed: its
+    rewrite is staged directly, and the staging write's own job counts
+    the matching rows (an ``Observation`` of ``count_if(cond)`` on the
+    rows before ``rewrite``). When that count is 0, ``_rewrite_commit``
+    publishes nothing and deletes the staged file. Matched or not, the
+    statement costs one Spark job instead of three."""
+    candidates = stats_candidate_files(m, condition)
+    matched = None
+    if len(candidates) == 1:
+        affected = {candidates[0]["name"]}
+        matched = Observation()
+        rows = _read_entries(spark, table_path, m, candidates).observe(
+            matched, F.count_if(cond).alias("n")
+        )
+    else:
+        affected = _affected_files(spark, table_path, m, cond, condition, candidates)
+        if not affected:
+            return _unchanged(m)
+        rows = _read_entries(spark, table_path, m, _entries_for(m, affected))
+    return _rewrite_commit(
+        spark, table_path, m, affected, rewrite(rows), None, operation,
+        rebase_condition=condition, matched=matched,
+    )
+
+
 def delete(
     spark: SparkSession, table_path: str, condition: str, mode: str | None = None
 ) -> dict:
@@ -3695,6 +3760,9 @@ def delete(
     table's declared ``write_mode`` (default copy-on-write):
 
     - ``"cow"`` rewrites only the files that contain matching rows.
+      The files come from manifest stats; several candidates are
+      probed first, a single one is rewritten unprobed and kept when
+      nothing in it matched (``_cow_rewrite``).
     - ``"mor"`` (merge-on-read) rewrites NOTHING: one deletion-vector
       file records the matched row positions and the affected
       manifest entries point at it — see the module docstring. The
@@ -3705,19 +3773,13 @@ def delete(
     cond = F.expr(condition)
     if _resolve_mode(m, mode) == "mor":
         return _mor_commit(spark, table_path, m, cond, condition, None, "mor_delete")
-    affected = _affected_files(spark, table_path, m, cond, condition)
-    if not affected:
-        return _unchanged(m)
     # SQL DELETE removes rows where the predicate is TRUE and KEEPS
     # rows where it is NULL; a bare ``filter(~cond)`` would drop the
     # NULL rows too (three-valued logic) — e.g. "DELETE WHERE
     # priority = 42" must not delete every priority-IS-NULL row.
-    survivors = _read_entries(spark, table_path, m, _entries_for(m, affected)).filter(
-        ~F.coalesce(cond, F.lit(False))
-    )
-    return _rewrite_commit(
-        spark, table_path, m, affected, survivors, None, "delete",
-        rebase_condition=condition,
+    return _cow_rewrite(
+        spark, table_path, m, cond, condition, "delete",
+        lambda rows: rows.filter(~F.coalesce(cond, F.lit(False))),
     )
 
 
@@ -3869,6 +3931,9 @@ def update(
 
     - ``"cow"`` rewrites only the files that contain matching rows;
       non-matching rows in those files are carried over unchanged.
+      The files come from manifest stats; several candidates are
+      probed first, a single one is rewritten unprobed and kept when
+      nothing in it matched (``_cow_rewrite``).
     - ``"mor"`` (merge-on-read) marks the matched rows deleted in a
       deletion vector and APPENDS the transformed rows as new files —
       Delta's DV update. Cost is O(matched rows), not O(affected
@@ -3883,19 +3948,15 @@ def update(
         return _mor_commit(
             spark, table_path, m, cond, condition, assignments, "mor_update"
         )
-    affected = _affected_files(spark, table_path, m, cond, condition)
-    if not affected:
-        return _unchanged(m)
-    aff_df = _read_entries(spark, table_path, m, _entries_for(m, affected))
     cols = [
         F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
         if c in assignments
-        else F.col(c)
-        for c in aff_df.columns
+        else c
+        for c in _snapshot_schema(m).fieldNames()
     ]
-    return _rewrite_commit(
-        spark, table_path, m, affected, aff_df.select(*cols), None, "update",
-        rebase_condition=condition,
+    return _cow_rewrite(
+        spark, table_path, m, cond, condition, "update",
+        lambda rows: rows.select(*cols),
     )
 
 

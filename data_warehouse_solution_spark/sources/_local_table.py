@@ -212,33 +212,40 @@ def _partition_values(name: str, col_names: list, col_types: dict) -> dict:
 
 
 def read_file(data_dir, name, dv_path, col_names, col_types, pmap):
-    """One data file as a pandas frame of the table's logical columns,
-    the way ``cowtable.read`` sees it: the deletion vector's positions
-    (row position = pyarrow read order) masked out, physical column
-    names mapped back to logical ones, Hive partition values
-    re-injected typed, and columns the file predates NULL."""
+    """One data file as a ``pyarrow.Table`` of the table's logical
+    columns, the way ``cowtable.read`` sees it: the deletion vector's
+    positions (row position = pyarrow read order) masked out, physical
+    column names mapped back to logical ones, Hive partition values
+    re-injected typed, and columns the file predates NULL (typed
+    ``null``: the caller casts to the declared schema)."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    pdf = pq.read_table(os.path.join(data_dir, name)).to_pandas()
+    t = pq.read_table(os.path.join(data_dir, name))
     if dv_path is not None:
         base = name.rsplit("/", 1)[-1]
         dv = pq.read_table(dv_path, columns=["file", "pos"])
         pos = dv.filter(pc.equal(dv["file"], base))["pos"].to_numpy()
         if len(pos):
-            keep = np.ones(len(pdf), dtype=bool)
+            keep = np.ones(t.num_rows, dtype=bool)
             keep[pos.astype(int)] = False
-            pdf = pdf[keep].reset_index(drop=True)
-    if pmap:
-        pdf = pdf.rename(columns={p: lg for lg, p in pmap.items()})
+            t = t.filter(keep)
+    phys = {p: lg for lg, p in (pmap or {}).items()}
+    t = t.rename_columns([phys.get(c, c) for c in t.column_names])
     pvals = _partition_values(name, col_names, col_types)
+    n = t.num_rows
+    cols = []
     for c in col_names:
         if c in pvals:
-            pdf[c] = pvals[c]
-        elif c not in pdf.columns:
-            pdf[c] = None
-    return pdf[col_names]
+            v = pvals[c]
+            cols.append(pa.nulls(n) if v is None else pa.array([v] * n))
+        elif c in t.column_names:
+            cols.append(t[c])
+        else:
+            cols.append(pa.nulls(n))
+    return pa.table(cols, names=col_names)
 
 
 def frame_rows(pdf):

@@ -133,6 +133,7 @@ def _build_batch_source_class():
         InputPartition,
         WriterCommitMessage,
     )
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     class FilePartition(InputPartition):
         def __init__(self, data_dir, name, col_names, col_types, dv_path=None, pmap=None):
@@ -149,6 +150,7 @@ def _build_batch_source_class():
             self.snapshot = _resolve_snapshot(self.table_path, options)
             self.col_names = [f.name for f in schema.fields]
             self.col_types = {f.name: f.dataType.simpleString() for f in schema.fields}
+            self.arrow_schema = to_arrow_schema(schema)  # what read() yields
             self.conjuncts = []  # (logical col, op, literal) accepted for pruning
 
         def pushFilters(self, filters):
@@ -230,16 +232,14 @@ def _build_batch_source_class():
                 # None partition: every file was pruned, or the
                 # snapshot has none
                 return
-            yield from lt.frame_rows(
-                lt.read_file(
-                    partition.data_dir,
-                    partition.name,
-                    partition.dv_path,
-                    partition.col_names,
-                    partition.col_types,
-                    partition.pmap,
-                )
-            )
+            yield from lt.read_file(
+                partition.data_dir,
+                partition.name,
+                partition.dv_path,
+                partition.col_names,
+                partition.col_types,
+                partition.pmap,
+            ).cast(self.arrow_schema).to_batches()
 
     class CowStagedFile(WriterCommitMessage):
         def __init__(self, entries):

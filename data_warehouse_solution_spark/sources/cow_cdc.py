@@ -171,7 +171,7 @@ def _build_stream_source_class():
                             partition.col_names,
                             partition.col_types,
                             partition.pmap,
-                        )
+                        ).to_pandas()
                     )
 
             counts: dict[tuple, int] = {}

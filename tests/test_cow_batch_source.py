@@ -34,6 +34,25 @@ def test_batch_source_matches_cowtable_read(spark, tmp_path):
     assert got == want and len(got) == 3
 
 
+def test_batch_source_reads_nested_types_and_nan(spark, tmp_path):
+    """Arrays, maps, structs and a NaN double read as ``cowtable.read``
+    reads them, over a partitioned table with a column added later."""
+    path = str(tmp_path / "t")
+    df = spark.sql(
+        "SELECT id AS k, array(CAST(id AS STRING), NULL) AS a, map('x', id) AS m, "
+        "named_struct('f', id, 'g', CAST(id AS DOUBLE)) AS s, "
+        "CAST(id AS DECIMAL(10, 2)) AS d, "
+        "CASE WHEN id = 3 THEN double('NaN') ELSE 1.5 END AS x, id % 2 = 0 AS b "
+        "FROM range(6)"
+    ).coalesce(1)
+    cow.create(spark, path, df, partition_by=["b"])
+    cow.alter_add_column(spark, path, "late", "string")
+    register_cow_batch(spark)
+    got = sorted(map(repr, _read(spark, path).collect()))
+    assert got == sorted(map(repr, cow.read(spark, path).collect()))
+    assert "x=nan" in got[3]
+
+
 def test_register_reasserts_filter_pushdown_conf(spark, tmp_path):
     """Registration is memoized per session, but the pushdown conf the
     reader needs is set on every call: a reset between two

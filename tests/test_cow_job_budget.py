@@ -4,10 +4,14 @@ Pinned here: a statement's result frame is a local relation, so
 collecting it launches no Spark job; a CHECK that the staged files'
 footer stats prove is never validated by a read; a CHECK they do not
 prove still runs the violation-counting scan, whose counts are the
-refusal message; and ``ADD CONSTRAINT`` asks the manifest stats before
-it scans the table."""
+refusal message; ``ADD CONSTRAINT`` asks the manifest stats before
+it scans the table; and a DELETE or UPDATE whose stats leave one
+candidate file is one job, matched or not, while several candidates
+keep the probe."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -163,3 +167,61 @@ def test_checks_hold_maps_renamed_columns():
     types = {"k": "bigint"}
     assert cow._checks_hold({"c": "k > 0"}, [entry], types, {"k": "k_phys"})
     assert not cow._checks_hold({"c": "k > 0"}, [entry], types)
+
+
+def _jobs(spark, stmt: str) -> int:
+    before = _next_job(spark)
+    run_sql(spark, stmt).collect()
+    return _next_job(spark) - before
+
+
+def _probe_jobs(spark) -> int:
+    """The probe's ``distinct().collect()`` is one job, plus the one AQE
+    spends on the shuffle stage it materializes first."""
+    return 2 if spark.conf.get("spark.sql.adaptive.enabled") == "true" else 1
+
+
+def test_one_candidate_dml_is_one_job(spark, tmp_path):
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    t = f"cow.`{p}`"
+    assert _jobs(spark, f"UPDATE {t} SET q = q + 1 WHERE k BETWEEN 12 AND 15") == 1
+    assert _jobs(spark, f"DELETE FROM {t} WHERE k BETWEEN 20 AND 22") == 1
+    assert cow.read(spark, p).count() == 37
+    assert cow.read(spark, p).filter("k BETWEEN 12 AND 15 AND q = k + 2").count() == 4
+
+
+def test_several_candidates_keep_the_probe(spark, tmp_path):
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    t = f"cow.`{p}`"
+    want = _probe_jobs(spark) + 1
+    assert _jobs(spark, f"UPDATE {t} SET q = q + 1 WHERE k BETWEEN 8 AND 12") == want
+    assert _jobs(spark, f"DELETE FROM {t} WHERE k BETWEEN 18 AND 21") == want
+    assert cow.read(spark, p).count() == 36
+
+
+@pytest.mark.parametrize("verb", ["delete", "update"])
+def test_one_candidate_without_a_match_publishes_nothing(spark, tmp_path, verb):
+    """Stats cannot refute ``q * 2 = 1``, so file 1 is the one
+    candidate; no row matches, and the statement leaves the table as
+    the probe would have: same head, same files, the probe's dict."""
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    cond = "k BETWEEN 12 AND 15 AND q * 2 = 1"
+    head = cow.current_snapshot(spark, p)
+    m = cow._load_manifest(spark, p, head)
+    before = sorted(os.listdir(p)), sorted(os.listdir(os.path.join(p, "data")))
+    stmt = (
+        f"DELETE FROM cow.`{p}` WHERE {cond}"
+        if verb == "delete"
+        else f"UPDATE cow.`{p}` SET q = 0 WHERE {cond}"
+    )
+    assert _jobs(spark, stmt) == 1
+    if verb == "delete":
+        got = cow.delete(spark, p, cond)
+    else:
+        got = cow.update(spark, p, cond, {"q": "0"})
+    assert got == cow._unchanged(m)
+    assert cow.current_snapshot(spark, p) == head
+    assert (sorted(os.listdir(p)), sorted(os.listdir(os.path.join(p, "data")))) == before
