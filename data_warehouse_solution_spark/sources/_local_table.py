@@ -240,7 +240,7 @@ def read_file(data_dir, name, dv_path, col_names, col_types, pmap):
     for c in col_names:
         if c in pvals:
             v = pvals[c]
-            cols.append(pa.nulls(n) if v is None else pa.array([v] * n))
+            cols.append(pa.nulls(n) if v is None else pa.repeat(v, n))
         elif c in t.column_names:
             cols.append(t[c])
         else:

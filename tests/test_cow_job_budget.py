@@ -6,8 +6,8 @@ footer stats prove is never validated by a read; a CHECK they do not
 prove still runs the violation-counting scan, whose counts are the
 refusal message; ``ADD CONSTRAINT`` asks the manifest stats before
 it scans the table; and a DELETE or UPDATE whose stats leave one
-candidate file is one job, matched or not, while several candidates
-keep the probe."""
+candidate file is one job, matched or not, while several candidates,
+or one large one, keep the probe."""
 
 from __future__ import annotations
 
@@ -199,6 +199,22 @@ def test_several_candidates_keep_the_probe(spark, tmp_path):
     assert _jobs(spark, f"UPDATE {t} SET q = q + 1 WHERE k BETWEEN 8 AND 12") == want
     assert _jobs(spark, f"DELETE FROM {t} WHERE k BETWEEN 18 AND 21") == want
     assert cow.read(spark, p).count() == 36
+
+
+def test_one_large_candidate_keeps_the_probe(spark, tmp_path, monkeypatch):
+    """The unprobed rewrite is for a candidate of at most
+    ``_UNPROBED_MAX_ROWS`` rows; each file here has 10."""
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    t = f"cow.`{p}`"
+    monkeypatch.setattr(cow, "_UNPROBED_MAX_ROWS", 9)
+    want = _probe_jobs(spark) + 1
+    assert _jobs(spark, f"UPDATE {t} SET q = q + 1 WHERE k BETWEEN 12 AND 15") == want
+    assert _jobs(spark, f"DELETE FROM {t} WHERE k BETWEEN 20 AND 22") == want
+    monkeypatch.setattr(cow, "_UNPROBED_MAX_ROWS", 10)
+    assert _jobs(spark, f"UPDATE {t} SET q = q + 1 WHERE k BETWEEN 32 AND 35") == 1
+    assert cow.read(spark, p).count() == 37
+    assert cow.read(spark, p).filter("k BETWEEN 32 AND 35 AND q = k + 2").count() == 4
 
 
 @pytest.mark.parametrize("verb", ["delete", "update"])
