@@ -327,16 +327,23 @@ def _purge_table_caches(table_path: str) -> None:
 
 
 def _list_snapshots(spark: SparkSession, table_path: str) -> list[int]:
-    fs, _ = _fs(spark, table_path)
-    mdir = _jpath(spark, f"{table_path}/{MANIFEST_DIR}")
-    if not fs.exists(mdir):
-        return []
-    out = []
-    for st in fs.listStatus(mdir):
-        mm = _SNAPSHOT_RE.match(st.getPath().getName())
-        if mm:
-            out.append(int(mm.group(1)))
-    return sorted(out)
+    local = _local_fs_path(table_path)
+    if local is not None and os.path.isabs(local):
+        # no py4j: a Hadoop listing costs ~3 round trips per entry,
+        # and every snapshot adds an entry
+        try:
+            names = [e.name for e in os.scandir(f"{local}/{MANIFEST_DIR}")]
+        except (FileNotFoundError, NotADirectoryError):
+            return []
+    else:
+        fs, _ = _fs(spark, table_path)
+        mdir = _jpath(spark, f"{table_path}/{MANIFEST_DIR}")
+        if not fs.exists(mdir):
+            return []
+        names = [st.getPath().getName() for st in fs.listStatus(mdir)]
+    return sorted(
+        int(mm.group(1)) for n in names if (mm := _SNAPSHOT_RE.match(n))
+    )
 
 
 def _load_manifest(spark: SparkSession, table_path: str, n: int) -> dict:
@@ -3970,123 +3977,53 @@ def update(
     )
 
 
+def _q(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _paren(sql: str) -> str:
+    """A caller's SQL expression text, safe to embed in a larger one
+    (the newline ends a trailing ``--`` comment)."""
+    return f"({sql}\n)"
+
+
+def _by_action(whens: list[tuple[int, str]], otherwise: str) -> str:
+    """SQL text: the expression of the clause whose index is
+    ``__action``, else ``otherwise``."""
+    if not whens:
+        return otherwise
+    arms = " ".join(f"WHEN __action = {i} THEN {e}" for i, e in whens)
+    return f"CASE {arms} ELSE {otherwise} END"
+
+
+def _select_sql(df: DataFrame, exprs: dict[str, str], schema) -> DataFrame:
+    """``df`` projected to ``{name: SQL expression text}``, each
+    ``schema`` field cast to its type. One ``selectExpr`` plus a Column
+    cast only where the result type differs: a Column built per output
+    column costs dozens of py4j round trips, this a few per column."""
+    out = df.selectExpr(*[f"{e} AS {_q(n)}" for n, e in exprs.items()])
+    got = {f.name: f.dataType for f in out.schema.fields}
+    casts = {
+        f.name: F.col(_q(f.name)).cast(f.dataType)
+        for f in schema.fields
+        if f.name in got and got[f.name] != f.dataType
+    }
+    return out.withColumns(casts) if casts else out
+
+
 def merge_upsert(
     spark: SparkSession, table_path: str, source: DataFrame, keys: list[str]
 ) -> dict:
-    """Restricted whole-row MERGE — see :func:`_merge_upsert_impl`.
-    Wrapper adds the same r15 size-gated source materialization as
-    :func:`merge` (the key-distinct, key-range, anti-join and append
-    staging re-evaluate the source 3-4x; a subquery source pays its
-    subtree per pass unless checkpointed once)."""
-    from .plans import free_local_checkpoints, multipass_source_nodes
-
-    ckpt = None
-    if multipass_source_nodes(source):
-        source = ckpt = source.localCheckpoint(eager=True)
-    try:
-        return _merge_upsert_impl(spark, table_path, source, keys)
-    finally:
-        if ckpt is not None:
-            free_local_checkpoints(ckpt)
-
-
-def _merge_upsert_impl(
-    spark: SparkSession, table_path: str, source: DataFrame, keys: list[str]
-) -> dict:
-    """MERGE: rows whose key matches a source row are REPLACED by the
-    source row; unmatched source rows are APPENDED. Only files that
-    contain a matching key rewrite (files without matches cannot hold
-    a replaced row, so they are untouched by construction).
-
-    Affected-file detection prunes with manifest stats BEFORE opening
-    any data file: one tiny agg computes the source keys' min/max
-    envelope, and ``_file_may_match`` skips files whose key ranges are
-    provably disjoint — with time-ordered keys (the common upsert
-    shape) a 100 TB merge opens only the recent files, not the table.
-    The exact left-semi scan over the survivors keeps selection exact.
-    Returns commit stats incl. ``files_scanned`` = how many candidate
-    files that exact scan actually read."""
-    from .plans import maybe_broadcast
-
-    m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
-    if _resolve_mode(m, None) == "mor" or m.get("identity_columns"):
-        # a write_mode="mor" table upserts through the deletion-vector
-        # path — merge() with the equivalent SET */INSERT * clauses
-        # (differentially pinned equal by tests). Identity tables
-        # delegate too: merge()'s SET * keeps each matched row's
-        # engine-assigned identity and its INSERT * allocates fresh
-        # ones, where this restricted path's whole-row replacement
-        # would clobber them with the source's NULL fill.
-        return merge(
-            spark,
-            table_path,
-            source,
-            keys,
-            [
-                {"when": "matched", "then": "update", "set": "*"},
-                {"when": "not_matched", "then": "insert", "values": "*"},
-            ],
-        )
-    schema = _snapshot_schema(m)
-    # project AND CAST the source through the manifest schema: a
-    # narrower source type (int where the table holds bigint) would
-    # write parquet whose physical type disagrees with the manifest
-    # and poison later manifest-schema reads of those files.
-    # GENERATED columns may be absent from the source — NULL-fill
-    # them; _stage_files recomputes every one from its expression
-    # before any byte lands, so the fill value is never written.
-    gen = m.get("generated_columns") or {}
-    source = source.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if (f.name in source.columns or f.name not in gen)
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
+    """Whole-row MERGE on ``keys``: :func:`merge` with ``UPDATE SET *``
+    on a match and ``INSERT *`` otherwise."""
+    return merge(
+        spark, table_path, source, keys,
+        [
+            {"when": "matched", "then": "update", "set": "*"},
+            {"when": "not_matched", "then": "insert", "values": "*"},
+        ],
     )
-    src_keys = maybe_broadcast(source.select(*keys).distinct())
-    key_range = source.agg(
-        *[
-            a
-            for k in keys
-            for a in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
-        ]
-    ).collect()[0]
-    conjuncts: list[tuple[str, str, object]] = []
-    for k in keys:
-        lo, hi = key_range[f"__lo_{k}"], key_range[f"__hi_{k}"]
-        if lo is None or hi is None:
-            continue  # empty/all-null source key: no bound from it
-        # a file may hold a matching key only if its range intersects
-        # [lo, hi]; _file_may_match refutes via max < lo or min > hi.
-        # Date/timestamp keys come back as datetime objects while the
-        # manifest stores ISO strings (_stat_val) — convert through
-        # the same encoding or the stat comparison raises TypeError
-        conjuncts.append((_phys_map(m).get(k, k), ">=", _stat_val(lo)))
-        conjuncts.append((_phys_map(m).get(k, k), "<=", _stat_val(hi)))
-    candidates = [f for f in m["files"] if _file_may_match(f, conjuncts)]
-    affected: set[str] = set()
-    if candidates:
-        base_to_name = {c["name"].rsplit("/", 1)[-1]: c["name"] for c in candidates}
-        cur = _read_entries(spark, table_path, m, candidates, lineage=True)
-        rows = (
-            cur.join(src_keys, keys, "left_semi")
-            .select("_cow_file")
-            .distinct()
-            .collect()
-        )
-        affected = {base_to_name[r["_cow_file"]] for r in rows}
-    kept = None
-    if affected:
-        kept = _read_entries(spark, table_path, m, _entries_for(m, affected)).join(
-            src_keys, keys, "left_anti"
-        )
-    stats = _rewrite_commit(
-        spark, table_path, m, affected, kept, source, "merge",
-        rebase_conjuncts=conjuncts,
-    )
-    stats["files_scanned"] = len(candidates)
-    return stats
 
 
 def _refuse_source_refs(text: str, what: str) -> None:
@@ -4119,6 +4056,44 @@ def _refuse_source_refs(text: str, what: str) -> None:
                     f"rows): {text!r}"
                 )
         i += 1
+
+
+# key types whose Python values order as Spark orders them ('timestamp'
+# becomes local wall-clock time, which a DST fold reorders)
+_DRIVER_ORDERED = (
+    "int", "bigint", "smallint", "tinyint", "float", "double", "string",
+    "date", "timestamp_ntz",
+)
+
+
+def _key_range(source: DataFrame, keys: list[str], schema):
+    """The source keys' envelope, ``__lo_<k>`` / ``__hi_<k>`` per key
+    (None when every value is NULL), as a dict or an agg Row. A source
+    over a local relation (VALUES, ``local_frame``) is collected, which
+    launches no Spark job, and ordered on the driver as Spark orders it
+    (NaN above every double); any other source pays an aggregate job."""
+    if (
+        all(schema[k].dataType.simpleString() in _DRIVER_ORDERED for k in keys)
+        and source._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    ):
+
+        def order(v):
+            return (v != v, v)  # NaN != NaN: last
+
+        rows = source.select(*keys).collect()
+        out = {}
+        for i, k in enumerate(keys):
+            vals = [r[i] for r in rows if r[i] is not None]
+            out[f"__lo_{k}"] = min(vals, key=order, default=None)
+            out[f"__hi_{k}"] = max(vals, key=order, default=None)
+        return out
+    return source.agg(
+        *[
+            a
+            for k in keys
+            for a in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
+        ]
+    ).collect()[0]
 
 
 def _key_candidates(
@@ -4203,8 +4178,8 @@ def _merge_impl(
     schema_evolution: bool = False,
     _probed: dict | None = None,
 ) -> dict:
-    """Multi-clause MERGE (the full Delta/ANSI surface
-    ``merge_upsert`` restricts): ``clauses`` is an ordered list of
+    """Multi-clause MERGE (Delta/ANSI): ``clauses`` is an ordered
+    list of
 
     - ``{"when": "matched", "and": <cond?>, "then": "update",
        "set": {col: expr} | "*"}``
@@ -4240,10 +4215,10 @@ def _merge_impl(
     construction, so the affected-file scan serves only
     unmatched-source detection.
 
-    Scale shape is ``merge_upsert``'s: candidates stat-pruned by the
-    source keys' min/max envelope, exact left-semi scan finds the
-    files that actually hold matches, ONLY those rewrite; inserts are
-    new files. Returns commit stats incl. ``files_scanned``.
+    Scale shape: candidates stat-pruned by the source keys' min/max
+    envelope, an exact scan finds the files that actually hold
+    matches, ONLY those rewrite; inserts are new files. Returns commit
+    stats incl. ``files_scanned``.
     NOT MATCHED BY SOURCE semantically examines EVERY target row
     (rows are selected by the ABSENCE of a source match, so no key
     envelope can prune — Delta shares this property); the exam is one
@@ -4372,18 +4347,20 @@ def _merge_impl(
     missing = [k for k in keys if k not in cols]
     if missing:
         raise ValueError(f"merge keys not in the table: {missing}")
-    # like merge_upsert: cast the overlapping source columns through
-    # the manifest schema (parquet physical-type safety); EXTRA source
-    # columns survive for use in clause conditions/expressions
-    source = source.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-            if f.name in source.columns
-        ],
-        *[c for c in source.columns if c not in cols],
+    # cast the overlapping source columns through the manifest schema
+    # (parquet physical-type safety); EXTRA source columns survive for
+    # use in clause conditions/expressions
+    src_cols = source.columns
+    source = _select_sql(
+        source,
+        {
+            c: _q(c)
+            for c in [c for c in cols if c in src_cols]
+            + [c for c in src_cols if c not in cols]
+        },
+        schema,
     )
-    src_missing = [k for k in keys if k not in source.columns]
+    src_missing = [k for k in keys if k not in src_cols]
     if src_missing:
         raise ValueError(f"merge keys not in the source: {src_missing}")
     idset = set(m.get("identity_columns") or {})
@@ -4398,14 +4375,14 @@ def _merge_impl(
                 _refuse_explicit_identity(m, list(aset), "assigned by MERGE UPDATE")
             if c.get("then") == "update" and (aset or "*") == "*":
                 _refuse_explicit_identity(
-                    m, [x for x in source.columns if x in idset],
+                    m, [x for x in src_cols if x in idset],
                     "assigned by MERGE UPDATE SET *",
                 )
             if c.get("then") == "insert":
                 vals = c.get("values") or "*"
                 if vals == "*":
                     _refuse_explicit_identity(
-                        m, [x for x in source.columns if x in idset],
+                        m, [x for x in src_cols if x in idset],
                         "inserted by MERGE INSERT *",
                     )
                 else:
@@ -4437,13 +4414,7 @@ def _merge_impl(
         else None
     )
     if probed is None:
-        key_range = source.agg(
-            *[
-                a
-                for k in keys
-                for a in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
-            ]
-        ).collect()[0]
+        key_range = _key_range(source, keys, schema)
     else:
         key_range = probed["key_range"]
     conjuncts, candidates, base_to_name, cur = _key_candidates(
@@ -4611,28 +4582,25 @@ def _merge_impl(
             action = F.when(cond, F.lit(i)) if action is None else action.when(cond, F.lit(i))
         action = action.otherwise(F.lit(-1)) if action is not None else F.lit(-1)
         work = joined.withColumn("__action", action)
-        out_cols = []
+        out_cols = {}
         for f in schema.fields:
-            col = F.col(f"t.{f.name}")
-            for i, c in reversed(actions):
+            whens = []
+            for i, c in actions:
                 if c["then"] != "update":
                     continue
                 aset = c.get("set") or "*"
                 if aset == "*":
                     if f.name in idset:
                         continue  # identity persists through SET *
-                    if f.name not in source.columns:
+                    if f.name not in src_cols:
                         # SET * copies same-name source columns only
                         # (Delta's expansion rule) — a target column
                         # the source lacks keeps its current value
                         continue
-                    expr = F.col(f"s.{f.name}")
+                    whens.append((i, f"s.{_q(f.name)}"))
                 elif f.name in aset:
-                    expr = F.expr(aset[f.name])
-                else:
-                    continue
-                col = F.when(F.col("__action") == i, expr).otherwise(col)
-            out_cols.append(col.cast(f.dataType).alias(f.name))
+                    whens.append((i, _paren(aset[f.name])))
+            out_cols[f.name] = _by_action(whens, f"t.{_q(f.name)}")
         delete_ids = [i for i, c in actions if c["then"] == "delete"]
         if eff_mode == "mor":
             # every action row's CURRENT version is deleted by
@@ -4643,12 +4611,13 @@ def _merge_impl(
             )
             update_ids = [i for i, c in actions if c["then"] == "update"]
             if update_ids:
-                mor_updates = work.filter(
-                    F.col("__action").isin(update_ids)
-                ).select(*out_cols)
+                mor_updates = _select_sql(
+                    work.filter(F.col("__action").isin(update_ids)),
+                    out_cols, schema,
+                )
         else:
             keep = ~F.col("__action").isin(delete_ids) if delete_ids else F.lit(True)
-            rewritten = work.filter(keep).select(*out_cols)
+            rewritten = _select_sql(work.filter(keep), out_cols, schema)
     inserts = None
     nm_clauses = [c for c in clauses if c["when"] == "not_matched"]
     if nm_clauses:
@@ -4667,28 +4636,29 @@ def _merge_impl(
             action = F.when(cond, F.lit(i)) if action is None else action.when(cond, F.lit(i))
         action = action.otherwise(F.lit(-1)) if action is not None else F.lit(-1)
         work = unmatched.withColumn("__action", action).filter(F.col("__action") != -1)
-        out_cols = []
+        defaults = m.get("column_defaults") or {}
+        out_cols = {}
         for f in schema.fields:
             # columns an INSERT clause leaves unset fill with their
             # declared DEFAULT (r11) or NULL, like engine append
-            d = (m.get("column_defaults") or {}).get(f.name)
-            fill = F.expr(d) if d is not None else F.lit(None)
-            col = fill
+            d = defaults.get(f.name)
+            fill = _paren(d) if d is not None else "NULL"
+            whens = []
             for i, c in enumerate(clauses):
                 if c["when"] != "not_matched":
                     continue
                 vals = c.get("values") or "*"
                 if vals == "*":
-                    expr = F.col(f"s.{f.name}") if f.name in source.columns else fill
+                    expr = f"s.{_q(f.name)}" if f.name in src_cols else fill
                 elif f.name in vals:
-                    expr = F.expr(vals[f.name])
+                    expr = _paren(vals[f.name])
                 else:
                     expr = fill
-                col = F.when(F.col("__action") == i, expr).otherwise(col)
-            out_cols.append(col.cast(f.dataType).alias(f.name))
+                whens.append((i, expr))
+            out_cols[f.name] = _by_action(whens, fill)
         # fresh identity values for the inserted rows (the out_cols
         # fill left identity columns NULL by construction)
-        inserts = _apply_identity(m, work.select(*out_cols))
+        inserts = _apply_identity(m, _select_sql(work, out_cols, schema))
     # NMBS clauses select rows a concurrent writer could invalidate by
     # adding ANY non-matching row — no stat envelope proves a winner's
     # files irrelevant, so rebase is off and a race refuses loudly.

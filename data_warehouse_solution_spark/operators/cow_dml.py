@@ -682,7 +682,7 @@ def cow_merge_sql_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself gate SQL whose cow.`path` reference reads the target's
     pre-merge state (substitution + merge composing). Only files
     holding a matching key rewrite, stat-pruned by the source keys'
-    min/max envelope (``cowtable.merge_upsert``). End state
+    min/max envelope (``cowtable.merge``). End state
     value-checked against the relational application (DuckDB oracle).
     MERGE stays OUTSIDE the reference-parity statement filter (not a
     whitelisted verb) like the OPTIMIZE/VACUUM extensions."""
@@ -761,7 +761,7 @@ def cow_merge_multi_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT MATCHED AND cond THEN INSERT (cols) VALUES (exprs)`` with a
     partial column list NULL-filling the rest — executed as ONE
     copy-on-write commit (``cowtable.merge``; ambiguity-guarded,
-    stat-pruned by the source key envelope like ``merge_upsert``).
+    stat-pruned by the source key envelope).
     The oracle replays the clause algebra relationally in DuckDB —
     the conditional-routing MERGE every CDC-apply pipeline runs."""
     import shutil

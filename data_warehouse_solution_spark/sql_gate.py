@@ -756,11 +756,6 @@ _BARE_PATH_TARGET_RE = re.compile(
     r"(/[^\s`]*|[A-Za-z][A-Za-z0-9+.\-]*:/[^\s`]*)",
     re.IGNORECASE,
 )
-# cowtable.merge_upsert's exact semantics (whole-row upsert)
-_UPSERT_CLAUSES = [
-    {"when": "matched", "then": "update", "set": "*"},
-    {"when": "not_matched", "then": "insert", "values": "*"},
-]
 _MERGE_THEN = {
     "DeleteAction": "delete",
     "UpdateAction": "update",
@@ -1117,15 +1112,6 @@ def _run_dml(spark: SparkSession, d: _DmlStatement) -> DataFrame:
     # cow.`...` refs, names and views all resolve
     rows = run_sql(spark, d.payload)
     if d.kind == "merge":
-        # Delta-style MERGE: the SET */INSERT * form is
-        # cowtable.merge_upsert (matched rows replaced by the source
-        # row, unmatched source rows appended; only files holding a
-        # matching key rewrite, stat-pruned by the source keys' min/max
-        # envelope); every richer clause list — and WITH SCHEMA
-        # EVOLUTION, whose new source columns evolve the schema — is
-        # cowtable.merge's multi-clause commit
-        if d.clauses == _UPSERT_CLAUSES and not d.evolve:
-            return _stats_df(spark, cow.merge_upsert(spark, d.target, rows, d.keys))
         return _stats_df(
             spark,
             cow.merge(

@@ -166,3 +166,29 @@ def test_append_never_expands_parent_shards(spark, tmp_path, monkeypatch):
     m2 = cow._load_manifest(spark, p, 2)
     assert m2["n_files"] == len(m2["files"])
     assert cow.read(spark, p).count() == 27
+
+
+def test_local_head_lookup_makes_no_py4j_call(spark, tmp_path, monkeypatch):
+    """``current_snapshot`` lists a local table's ``_manifests/`` with
+    ``os.scandir``, and skips the Hadoop ``.crc`` siblings as the
+    Hadoop listing did."""
+    p = str(tmp_path / "t")
+    _mk(spark, p, nfiles=2)
+    for i in range(3):
+        cow.append(spark, p, spark.createDataFrame([(100 + i,)], "k long"))
+    mdir = tmp_path / "t" / cow.MANIFEST_DIR
+    assert any(n.name.endswith(".crc") for n in mdir.iterdir())
+    client = spark.sparkContext._gateway._gateway_client
+    real, calls = client.send_command, []
+
+    def counted(cmd, *a, **k):
+        calls.append(cmd)
+        return real(cmd, *a, **k)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    head = cow.current_snapshot(spark, p)
+    monkeypatch.setattr(client, "send_command", real)
+    assert calls == [] and head == 4
+    monkeypatch.setattr(cow, "_local_fs_path", lambda path: None)
+    assert cow._list_snapshots(spark, p) == [1, 2, 3, 4]
+    assert cow._list_snapshots(spark, str(tmp_path / "absent")) == []

@@ -127,9 +127,16 @@ def test_merge_star_clauses_equal_merge_upsert(spark, tmp_path):
         ],
     )
     cow.merge_upsert(spark, p2, src, ["k"])
-    a = {tuple(r) for r in cow.read(spark, p1).collect()}
-    b = {tuple(r) for r in cow.read(spark, p2).collect()}
-    assert a == b
+    want = {
+        (1, "A", 100.0),  # matched: the source row replaces the target's
+        (2, "B", 5.0),
+        (3, "c", 30.0),  # untouched
+        (4, "d", 40.0),
+        (5, "E", 55.0),  # not matched: inserted
+        (6, "F", 7.0),
+    }
+    assert {tuple(r) for r in cow.read(spark, p1).collect()} == want
+    assert {tuple(r) for r in cow.read(spark, p2).collect()} == want
 
 
 def test_merge_prunes_to_matching_files(spark, tmp_path):
@@ -259,6 +266,37 @@ def test_gate_restricted_merge_still_routes_to_upsert(spark, tmp_path):
     got = {r["k"] for r in cow.read(spark, p).collect()}
     assert got == {1, 2, 3, 4, 5, 6}
     spark.catalog.dropTempView("merge_src_star")
+
+
+def _star_merge(p: str, values: str) -> str:
+    return (
+        f"MERGE INTO cow.`{p}` t USING (SELECT * FROM VALUES {values} "
+        "AS s(k, s, v)) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+
+
+def test_gate_star_merge_duplicate_matched_key_is_ambiguous(spark, tmp_path):
+    """Two source rows for target row k = 1: SET * cannot pick one, so
+    the statement refuses and the table keeps its head."""
+    p = str(tmp_path / "dup")
+    _mk(spark, p)
+    head = cow.current_snapshot(spark, p)
+    with pytest.raises(ValueError, match="ambiguous"):
+        run_sql(spark, _star_merge(p, "(1, 'x', 1.0D), (1, 'y', 2.0D)"))
+    assert cow.current_snapshot(spark, p) == head
+    assert cow.read(spark, p).count() == 4
+
+
+def test_gate_star_merge_duplicate_unmatched_keys_both_insert(spark, tmp_path):
+    p = str(tmp_path / "dupnew")
+    _mk(spark, p)
+    run_sql(spark, _star_merge(p, "(7, 'x', 1.0D), (7, 'y', 2.0D), (2, 'B', 5.0D)"))
+    got = sorted(tuple(r) for r in cow.read(spark, p).collect())
+    assert got == [
+        (1, "a", 10.0), (2, "B", 5.0), (3, "c", 30.0), (4, "d", 40.0),
+        (7, "x", 1.0), (7, "y", 2.0),
+    ]
 
 
 # --- WHEN NOT MATCHED BY SOURCE (r11): Delta's sync direction -------
