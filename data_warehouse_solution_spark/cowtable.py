@@ -177,6 +177,7 @@ def _handles(spark: SparkSession) -> dict:
             "conf": spark._jsc.hadoopConfiguration(),
             "IOUtils": spark._jvm.org.apache.commons.io.IOUtils,
             "fs": {},
+            "local": {},
         }
         _JVM_HANDLES[spark] = h
     return h
@@ -191,6 +192,17 @@ def _fs(spark: SparkSession, path: str):
         fs = jpath.getFileSystem(h["conf"])
         h["fs"][(sp.scheme, sp.netloc)] = fs
     return fs, jpath
+
+
+def _on_local_fs(spark: SparkSession, path: str) -> bool:
+    """Whether Hadoop resolves ``path`` on the local filesystem. A path
+    without a scheme resolves on ``fs.defaultFS``, which may be HDFS."""
+    sp = urlsplit(path)
+    local = _handles(spark)["local"]
+    if (sp.scheme, sp.netloc) not in local:
+        fs, _ = _fs(spark, path)
+        local[(sp.scheme, sp.netloc)] = fs.getScheme() == "file"
+    return local[(sp.scheme, sp.netloc)]
 
 
 def _jpath(spark: SparkSession, path: str):
@@ -328,14 +340,16 @@ def _purge_table_caches(table_path: str) -> None:
 
 def _list_snapshots(spark: SparkSession, table_path: str) -> list[int]:
     local = _local_fs_path(table_path)
-    if local is not None and os.path.isabs(local):
+    names = None
+    if local is not None and os.path.isabs(local) and _on_local_fs(spark, table_path):
         # no py4j: a Hadoop listing costs ~3 round trips per entry,
-        # and every snapshot adds an entry
+        # and every snapshot adds an entry. A missing directory asks
+        # Hadoop, which settles a table that is not there.
         try:
             names = [e.name for e in os.scandir(f"{local}/{MANIFEST_DIR}")]
         except (FileNotFoundError, NotADirectoryError):
-            return []
-    else:
+            pass
+    if names is None:
         fs, _ = _fs(spark, table_path)
         mdir = _jpath(spark, f"{table_path}/{MANIFEST_DIR}")
         if not fs.exists(mdir):
@@ -3982,10 +3996,19 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _paren(sql: str) -> str:
-    """A caller's SQL expression text, safe to embed in a larger one
-    (the newline ends a trailing ``--`` comment)."""
-    return f"({sql}\n)"
+def _paren(spark: SparkSession, sql: str) -> str:
+    """A caller's SQL expression text, safe to embed in a larger one.
+    Spark's parser must take it alone (one py4j round trip, raising
+    ``ParseException`` otherwise), so it closes every parenthesis,
+    quote and comment it opens and cannot reshape the text around it.
+    The space and newline end a trailing ``--`` comment, even one whose
+    last character is a backslash (which continues it onto the next
+    line)."""
+    h = _handles(spark)
+    if "parser" not in h:
+        h["parser"] = spark._jsparkSession.sessionState().sqlParser()
+    h["parser"].parseExpression(sql)
+    return f"({sql} \n)"
 
 
 def _by_action(whens: list[tuple[int, str]], otherwise: str) -> str:
@@ -4056,44 +4079,6 @@ def _refuse_source_refs(text: str, what: str) -> None:
                     f"rows): {text!r}"
                 )
         i += 1
-
-
-# key types whose Python values order as Spark orders them ('timestamp'
-# becomes local wall-clock time, which a DST fold reorders)
-_DRIVER_ORDERED = (
-    "int", "bigint", "smallint", "tinyint", "float", "double", "string",
-    "date", "timestamp_ntz",
-)
-
-
-def _key_range(source: DataFrame, keys: list[str], schema):
-    """The source keys' envelope, ``__lo_<k>`` / ``__hi_<k>`` per key
-    (None when every value is NULL), as a dict or an agg Row. A source
-    over a local relation (VALUES, ``local_frame``) is collected, which
-    launches no Spark job, and ordered on the driver as Spark orders it
-    (NaN above every double); any other source pays an aggregate job."""
-    if (
-        all(schema[k].dataType.simpleString() in _DRIVER_ORDERED for k in keys)
-        and source._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
-    ):
-
-        def order(v):
-            return (v != v, v)  # NaN != NaN: last
-
-        rows = source.select(*keys).collect()
-        out = {}
-        for i, k in enumerate(keys):
-            vals = [r[i] for r in rows if r[i] is not None]
-            out[f"__lo_{k}"] = min(vals, key=order, default=None)
-            out[f"__hi_{k}"] = max(vals, key=order, default=None)
-        return out
-    return source.agg(
-        *[
-            a
-            for k in keys
-            for a in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
-        ]
-    ).collect()[0]
 
 
 def _key_candidates(
@@ -4414,7 +4399,13 @@ def _merge_impl(
         else None
     )
     if probed is None:
-        key_range = _key_range(source, keys, schema)
+        key_range = source.agg(
+            *[
+                a
+                for k in keys
+                for a in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
+            ]
+        ).collect()[0]
     else:
         key_range = probed["key_range"]
     conjuncts, candidates, base_to_name, cur = _key_candidates(
@@ -4599,7 +4590,7 @@ def _merge_impl(
                         continue
                     whens.append((i, f"s.{_q(f.name)}"))
                 elif f.name in aset:
-                    whens.append((i, _paren(aset[f.name])))
+                    whens.append((i, _paren(spark, aset[f.name])))
             out_cols[f.name] = _by_action(whens, f"t.{_q(f.name)}")
         delete_ids = [i for i, c in actions if c["then"] == "delete"]
         if eff_mode == "mor":
@@ -4642,7 +4633,7 @@ def _merge_impl(
             # columns an INSERT clause leaves unset fill with their
             # declared DEFAULT (r11) or NULL, like engine append
             d = defaults.get(f.name)
-            fill = _paren(d) if d is not None else "NULL"
+            fill = _paren(spark, d) if d is not None else "NULL"
             whens = []
             for i, c in enumerate(clauses):
                 if c["when"] != "not_matched":
@@ -4651,7 +4642,7 @@ def _merge_impl(
                 if vals == "*":
                     expr = f"s.{_q(f.name)}" if f.name in src_cols else fill
                 elif f.name in vals:
-                    expr = _paren(vals[f.name])
+                    expr = _paren(spark, vals[f.name])
                 else:
                     expr = fill
                 whens.append((i, expr))

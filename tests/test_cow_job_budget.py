@@ -7,8 +7,8 @@ prove still runs the violation-counting scan, whose counts are the
 refusal message; ``ADD CONSTRAINT`` asks the manifest stats before
 it scans the table; and a DELETE or UPDATE whose stats leave one
 candidate file is one job, matched or not, while several candidates,
-or one large one, keep the probe; and a SET * / INSERT * MERGE from
-VALUES takes its key envelope on the driver, without a job."""
+or one large one, keep the probe; and the job count of a SET * /
+INSERT * MERGE from VALUES."""
 
 from __future__ import annotations
 
@@ -245,10 +245,9 @@ def test_one_candidate_without_a_match_publishes_nothing(spark, tmp_path, verb):
 
 
 def test_star_merge_from_values_jobs(spark, tmp_path):
-    """One matched key and one new key. The VALUES source is a local
-    relation, so the key envelope costs no job; the probe, the
-    broadcasts of the rewrite and insert joins and the staging write
-    remain."""
+    """One matched key and one new key: the key envelope, the probe,
+    the broadcasts of the rewrite and insert joins and the staging
+    write."""
     p = str(tmp_path / "t")
     _mk(spark, p, {"q_pos": "q > 0"})
     stmt = (
@@ -257,31 +256,6 @@ def test_star_merge_from_values_jobs(spark, tmp_path):
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
     )
     aqe = spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert _jobs(spark, stmt) == (7 if aqe else 5)
+    assert _jobs(spark, stmt) == (9 if aqe else 6)
     got = {r["k"]: r["q"] for r in cow.read(spark, p).collect()}
     assert len(got) == 41 and got[5] == 9.0 and got[45] == 46.0 and got[6] == 7.0
-
-
-@pytest.mark.parametrize(
-    "ddl, rows",
-    [
-        ("k bigint, j string", [(3, "b"), (None, "é"), (-2, "a"), (7, None)]),
-        ("k double, j date", [(1.5, None), (float("nan"), None), (-0.5, None)]),
-        ("k int, j string", [(None, None), (None, None)]),
-    ],
-)
-def test_driver_key_range_matches_the_aggregate(spark, ddl, rows):
-    """The driver's envelope of a local source equals Spark's min/max
-    over the same rows in a frame that is not local."""
-    import datetime
-
-    if "date" in ddl:
-        rows = [(k, datetime.date(2024, 1, i + 1)) for i, (k, _) in enumerate(rows)]
-    local = cow.local_frame(spark, rows, ddl)
-    remote = spark.createDataFrame(rows, ddl)
-    schema = local.schema
-    assert local._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
-    assert remote._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation"
-    got = cow._key_range(local, ["k", "j"], schema)
-    want = cow._key_range(remote, ["k", "j"], schema).asDict()
-    assert isinstance(got, dict) and repr(got) == repr(want)

@@ -192,3 +192,25 @@ def test_local_head_lookup_makes_no_py4j_call(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(cow, "_local_fs_path", lambda path: None)
     assert cow._list_snapshots(spark, p) == [1, 2, 3, 4]
     assert cow._list_snapshots(spark, str(tmp_path / "absent")) == []
+
+
+def test_head_lookup_asks_hadoop_off_the_local_filesystem(spark, tmp_path, monkeypatch):
+    """A path without a scheme resolves on ``fs.defaultFS``. When that
+    is not the local filesystem, or the local directory is missing,
+    the head still comes from the Hadoop listing: an existing table is
+    never taken for an absent one."""
+    p = str(tmp_path / "t")
+    _mk(spark, p, nfiles=2)
+    cow.append(spark, p, spark.createDataFrame([(100,)], "k long"))
+    monkeypatch.setattr(cow, "_local_fs_path", lambda path: "/nonexistent" + path)
+    assert cow.current_snapshot(spark, p) == 2
+    monkeypatch.undo()
+    monkeypatch.setitem(cow._handles(spark)["local"], ("", ""), False)
+
+    def no_scandir(path):
+        raise AssertionError(f"scanned {path} on a non-local default FS")
+
+    monkeypatch.setattr(cow.os, "scandir", no_scandir)
+    assert cow.current_snapshot(spark, p) == 2
+    with pytest.raises(cow.CowTableNotFound):
+        cow.current_snapshot(spark, str(tmp_path / "absent"))

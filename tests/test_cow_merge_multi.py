@@ -78,6 +78,41 @@ def test_merge_first_clause_wins(spark, tmp_path):
     assert got[1] == "first" and len(got) == 4
 
 
+@pytest.mark.parametrize(
+    "clause",
+    [
+        {"when": "matched", "then": "update", "set": {"v": "s.v) WHEN (true) THEN (0"}},
+        {"when": "not_matched", "then": "insert", "values": {"k": "s.k", "v": "1) + (2"}},
+    ],
+)
+def test_merge_refuses_an_unbalanced_expression(spark, tmp_path, clause):
+    """A SET or VALUES expression is spliced into the projection's SQL
+    text only if it parses alone: an unbalanced one could otherwise
+    close the CASE around it and change rows no clause selected."""
+    from pyspark.errors import ParseException
+
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    before = {tuple(r) for r in cow.read(spark, p).collect()}
+    with pytest.raises(ParseException):
+        cow.merge(spark, p, _src(spark, [(1, "X", 5.0), (9, "Z", 9.0)]), ["k"], [clause])
+    assert cow.current_snapshot(spark, p) == 1
+    assert {tuple(r) for r in cow.read(spark, p).collect()} == before
+
+
+def test_merge_expression_may_end_in_a_comment(spark, tmp_path):
+    """A trailing ``--`` comment, even one ending in a backslash, ends
+    with the expression."""
+    p = str(tmp_path / "t")
+    _mk(spark, p)
+    cow.merge(
+        spark, p, _src(spark, [(1, "X", 5.0)]), ["k"],
+        [{"when": "matched", "then": "update", "set": {"v": "s.v + 1 -- note \\"}}],
+    )
+    got = {r["k"]: r["v"] for r in cow.read(spark, p).collect()}
+    assert got == {1: 6.0, 2: 20.0, 3: 30.0, 4: 40.0}
+
+
 def test_merge_ambiguous_source_raises(spark, tmp_path):
     p = str(tmp_path / "t")
     _mk(spark, p)
